@@ -8,9 +8,13 @@
   on bucket, top-k within bucket. The 100 TB path: candidate set shrinks by
   ~2^planes; hyperplanes are deterministic (md5-derived) so results are
   reproducible and oracle-checkable.
+- ``ivf_ann_topk`` (and the maintained-index ``ivf_postings_roll`` /
+  ``ivf_serve_from_postings``) — IVF: top-k within the probed coarse cells.
 
-Dot products use ``zip_with`` + ``aggregate`` (native HOFs — sequential left
-fold, bit-identical to the DuckDB oracle's list fold). Similarities are
+Pair dot products use ``zip_with`` + ``aggregate`` (native HOFs — a
+sequential left fold, bit-identical to the DuckDB oracle's list fold).
+IVF assignment runs in the Arrow kernel ``_ivf_assign``, whose numpy folds
+keep that sequential order (bit-identical too). Similarities are
 rounded before ranking so cross-engine float drift cannot flip a rank.
 """
 
@@ -24,12 +28,11 @@ from pyspark.sql import functions as F
 from .dedup import _assert_disjoint_delta
 from ..functions.lits import bigint_array, double_array, sql_double_array
 
-#: shared SQL fragments for the single-parse expression builders below
-#: (optimization r14, guide §5 driver-side: the Column-API HOF builders —
-#: one zip_with/aggregate lambda per centroid/plane — cost 0.2-0.3 s of
-#: py4j round-trips PER CALL at build time; one F.expr string is one
-#: round-trip and a ~1 ms JVM parse, and parses to the IDENTICAL Catalyst
-#: tree, verified value-identical on all four builders)
+#: shared SQL fragments for the single-parse ``lsh_bucket`` expression:
+#: building it through the Column API (one zip_with/aggregate lambda per
+#: plane) costs 0.2-0.3 s of py4j round-trips PER CALL; one F.expr string
+#: is one round-trip and a ~1 ms JVM parse of the IDENTICAL Catalyst tree
+#: (verified value-identical; optimization r14)
 _D0 = "CAST(0.0 AS DOUBLE)"
 
 
@@ -37,13 +40,6 @@ def _sql_dot(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), {_D0}, "
         f"(acc, x) -> acc + x)"
-    )
-
-
-def _sql_sqdist(vec: str, arr_sql: str) -> str:
-    return (
-        f"aggregate(zip_with({vec}, {arr_sql}, (x, c) -> (x - c) * (x - c)), "
-        f"{_D0}, (acc, x) -> acc + x)"
     )
 
 
@@ -115,7 +111,7 @@ def _normed(df: DataFrame, id_alias: str, id_col: str, vec_col: str, out: str) -
     downstream cosine is then a plain dot product — at 100 TB this turns
     every pairwise score from 3 array folds into 1. (Kept on the Column
     API: an F.expr variant measured no in-context win here, unlike the
-    per-centroid builders below.)"""
+    per-plane ``lsh_bucket`` expression below.)"""
     return (
         df.select(
             F.col(id_col).alias(id_alias), _as_double(F.col(vec_col)).alias("__v")
@@ -301,76 +297,97 @@ def ivf_centroids(n_cells: int, dim: int) -> list[list[float]]:
     return cells
 
 
-def ivf_cell(vec: Column | str, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid assignment (squared L2, ties → lowest cell id) —
-    the IVF coarse quantizer as a pure expression: n_cells distance folds
-    per row, argmin as a least() + first-match CASE chain.
-
-    Pass the vector column's NAME for the single-parse F.expr build (all
-    engine call sites do); a Column falls back to the py4j-per-centroid
-    builder — identical values either way (verified)."""
-    if isinstance(vec, str):
-        # same least()+CASE tree as the Column form, parsed from ONE SQL
-        # string. Deliberately NOT the "bind the centroid matrix once and
-        # transform over it" shape: nested-lambda HOF evaluation
-        # (aggregate-inside-transform) measured ~8x SLOWER PER ROW
-        # interpreted than flat aggregates over literal arrays — a
-        # per-row regression that only compounds at corpus scale.
-        dists = [_sql_sqdist(vec, sql_double_array(row)) for row in centroids]
-        m = "least(" + ",".join(dists) + ")"
-        whens = "".join(
-            f" WHEN {d} = {m} THEN {i}" for i, d in enumerate(dists)
-        )
-        return F.expr(f"CASE{whens} ELSE -1 END")
-    dists = _ivf_dists(vec, centroids)
-    m = F.least(*dists)
-    cell = F.lit(-1)
-    chain = None
-    for i, d2 in enumerate(dists):
-        if chain is None:
-            chain = F.when(d2 == m, F.lit(i))
-        else:
-            chain = chain.when(d2 == m, F.lit(i))
-    return chain.otherwise(cell)
+class MalformedVectorError(ValueError):
+    """An IVF input vector that is null, has a null element, the wrong length
+    or zero norm. Raised in the Python worker: the driver's task-failure
+    message carries this class name, the offending id and the reason."""
 
 
-def _ivf_dists(vec: Column, centroids: list[list[float]]) -> list[Column]:
-    dists = []
-    for row in centroids:
-        cen = double_array(row)
-        dists.append(
-            F.aggregate(
-                F.zip_with(vec, cen, lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    return dists
+def _unit_rows(batch, id_col: str, vec_col: str, dim: int):
+    """(n, dim) float64 unit vectors of one Arrow batch: the HOF fold
+    ``acc + x * x`` left to right over dimensions (vectorized across rows),
+    sqrt, one divide per element — the IEEE operations of ``_normed``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    def bad(row, reason: str):
+        rid = batch.column(id_col)[int(row)].as_py()
+        raise MalformedVectorError(f"vector of {id_col}={rid}: {reason}")
+
+    vecs = batch.column(vec_col)
+    if vecs.null_count:
+        bad(pc.index(vecs.is_null(), True).as_py(), "null vector")
+    lens = pc.list_value_length(vecs).to_numpy()
+    if (lens != dim).any():
+        i = np.argmax(lens != dim)
+        bad(i, f"length {lens[i]} != dim {dim}")
+    flat = vecs.flatten()
+    if flat.null_count:
+        bad(pc.index(flat.is_null(), True).as_py() // dim, "null element")
+    x = flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, dim)
+    acc = np.zeros(len(x))
+    for j in range(dim):
+        acc = acc + x[:, j] * x[:, j]
+    nrm = np.sqrt(acc)
+    if (nrm == 0.0).any():
+        bad(np.argmax(nrm == 0.0), "zero norm")
+    return x / nrm[:, None]
 
 
-def ivf_probe_cells(
-    vec: Column | str, centroids: list[list[float]], probes: int
-) -> Column:
-    """The ``probes`` nearest coarse cells, nearest first (ties → lower cell
-    id, matching ``ivf_cell``): sort (distance, cell) structs, slice, project.
-    Multi-probe recovers the recall a single-probe query loses to vectors
-    near cell boundaries, at probes× candidate cost. String name → the
-    single-parse F.expr build, same contract as ``ivf_cell``."""
-    if isinstance(vec, str):
-        dists = [_sql_sqdist(vec, sql_double_array(row)) for row in centroids]
-        pairs = (
-            "array("
-            + ",".join(f"struct({d} AS d, {i} AS c)" for i, d in enumerate(dists))
-            + ")"
-        )
-        return F.expr(
-            f"transform(slice(array_sort({pairs}), 1, {probes}), s -> s.c)"
-        )
-    dists = _ivf_dists(vec, centroids)
-    pairs = F.array(
-        *[F.struct(d2.alias("d"), F.lit(i).alias("c")) for i, d2 in enumerate(dists)]
-    )
-    return F.transform(F.slice(F.array_sort(pairs), 1, probes), lambda s: s["c"])
+def _ivf_assign(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    out_id: str,
+    out_vec: str | None,
+    centroids: list[list[float]],
+    probes: int,
+) -> DataFrame:
+    """The IVF quantizer as ONE ``mapInArrow``: per Arrow batch, the unit
+    vectors (``_unit_rows``) and one row per (vector, cell) for its
+    ``probes`` nearest cells, nearest first, ties to the lower cell.
+    Distances are the HOF fold ``acc + (u - c) * (u - c)`` left to right
+    over dimensions, vectorized across rows and cells (no dot/sum/BLAS,
+    whose summation order differs), ordered by a stable argsort, so unit
+    vectors, cells and 6-dp sims stay bit-identical to the oracle.
+
+    ``probes=0`` only normalizes (no ``cell`` column); ``out_vec=None``
+    drops the unit vector; other columns of ``df`` are carried through.
+    A malformed vector raises ``MalformedVectorError`` whatever
+    ``spark.sql.ansi.enabled`` says: it can neither vanish nor score NULL."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    cents = np.asarray(centroids, dtype=np.float64)
+    dim = cents.shape[1]
+    carried = [f.name for f in df.schema.fields if f.name not in (id_col, vec_col)]
+    fields = [T.StructField(out_id, df.schema[id_col].dataType)]
+    fields += [df.schema[c] for c in carried]
+    if out_vec:
+        fields.append(T.StructField(out_vec, T.ArrayType(T.DoubleType())))
+    if probes:
+        fields.append(T.StructField("cell", T.IntegerType()))
+
+    def assign(batches):
+        for b in batches:
+            u = _unit_rows(b, id_col, vec_col, dim)
+            rows, cell = np.arange(len(u)), []
+            if probes:
+                d2 = np.zeros((len(u), len(cents)))
+                for j in range(dim):
+                    diff = u[:, j, None] - cents[None, :, j]
+                    d2 = d2 + diff * diff
+                near = np.argsort(d2, axis=1, kind="stable")[:, :probes]
+                rows = np.repeat(rows, near.shape[1])
+                cell = [pa.array(near.ravel().astype(np.int32))]
+            cols = [b.column(c).take(rows) for c in (id_col, *carried)]
+            if out_vec:
+                offsets = pa.array(np.arange(len(rows) + 1, dtype=np.int32) * dim)
+                cols.append(pa.ListArray.from_arrays(offsets, pa.array(u[rows].ravel())))
+            yield pa.RecordBatch.from_arrays(cols + cell, names=[f.name for f in fields])
+
+    return df.mapInArrow(assign, T.StructType(fields))
 
 
 def ivf_ann_topk(
@@ -389,16 +406,10 @@ def ivf_ann_topk(
     candidate sets are disjoint — the multi-probe union needs no dedup.
     Cells assigned on unit vectors; scoring is one dot."""
     cents = ivf_centroids(n_cells, dim)
-    q = _normed(queries, "query_id", id_col, vec_col, "qv")
-    if probes <= 1:
-        q = q.withColumn("cell", ivf_cell("qv", cents))
-    else:
-        q = q.withColumn(
-            "cell", F.explode(ivf_probe_cells("qv", cents, probes))
-        )
-    c = _normed(spread(corpus), "match_id", id_col, vec_col, "cv").withColumn(
-        "cell", ivf_cell("cv", cents)
-    )
+    q = _ivf_assign(queries.select(id_col, vec_col), id_col, vec_col,
+                    "query_id", "qv", cents, max(probes, 1))
+    c = _ivf_assign(spread(corpus).select(id_col, vec_col), id_col, vec_col,
+                    "match_id", "cv", cents, 1)
     scored = (
         F.broadcast(q)
         .join(c, "cell")
@@ -1095,8 +1106,8 @@ def ivf_postings_roll(
             postings.select(id_col), inserts.select(id_col), dels, id_col
         )
 
-    ins = _normed(inserts, id_col, id_col, vec_col, "__qv").select(
-        id_col, ivf_cell("__qv", cents).alias("cell")
+    ins = _ivf_assign(
+        inserts.select(id_col, vec_col), id_col, vec_col, id_col, None, cents, 1
     )
     surv = postings.join(dels, id_col, "left_anti")
     new_postings = surv.unionByName(ins)
@@ -1158,13 +1169,8 @@ def ivf_serve_from_postings(
     sim, rank) with rank ≤ k per query.
     """
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim)
-    q = _normed(queries, "query_id", id_col, vec_col, "qv")
-    if probes <= 1:
-        q = q.withColumn("cell", ivf_cell("qv", cents))
-    else:
-        q = q.withColumn(
-            "cell", F.explode(ivf_probe_cells("qv", cents, probes))
-        )
+    q = _ivf_assign(queries.select(id_col, vec_col), id_col, vec_col,
+                    "query_id", "qv", cents, max(probes, 1))
     cand = postings.join(
         F.broadcast(q.select("cell").distinct()), "cell"
     )  # partition-pruned read when postings is cell-partitioned parquet
@@ -1173,21 +1179,12 @@ def ivf_serve_from_postings(
     # before the candidate join paid the 64-dim cast+norm for every corpus
     # row, including the ones the probed cells were about to drop — under
     # partition pruning the candidate set is the small side by design.
-    # Same cast→norm→divide order as _normed, so sims are bit-identical.
-    c = (
+    # The kernel's normalize-only mode (probes=0) carries the cell through.
+    c = _ivf_assign(
         spread(corpus)
         .join(cand.select(F.col(id_col), "cell"), id_col)
-        .select(
-            F.col(id_col).alias("match_id"),
-            "cell",
-            _as_double(F.col(vec_col)).alias("__v"),
-        )
-        .withColumn("__n", norm(F.col("__v")))
-        .select(
-            "match_id",
-            "cell",
-            F.transform(F.col("__v"), lambda x: x / F.col("__n")).alias("cv"),
-        )
+        .select(id_col, vec_col, "cell"),
+        id_col, vec_col, "match_id", "cv", cents, 0,
     )
     scored = (
         F.broadcast(q)

@@ -269,15 +269,6 @@ def sql_dot(a: str, b: str, dim_expr: str) -> str:
     return f"list_sum(list_transform(range(1, {dim_expr} + 1), i -> {a}[i] * {b}[i]))"
 
 
-def sql_cosine(a: str, b: str) -> str:
-    """Cosine with the same sequential-fold shape as operators.similarity."""
-    dim = f"len({a})"
-    dot = sql_dot(a, b, dim)
-    na = f"sqrt(list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i] * {a}[i])))"
-    nb = f"sqrt(list_sum(list_transform(range(1, len({b}) + 1), i -> {b}[i] * {b}[i])))"
-    return f"({dot}) / (({na}) * ({nb}))"
-
-
 def sql_lsh_bucket(v: str, planes: list[list[float]]) -> str:
     """= operators.similarity.lsh_bucket with the SAME deterministic
     hyperplanes embedded as list literals."""
@@ -348,8 +339,9 @@ def _sql_ivf_d2(v: str, row: list[float]) -> str:
 
 
 def sql_ivf_probe_cells(v: str, centroids: list[list[float]], probes: int) -> str:
-    """= operators.similarity.ivf_probe_cells: sort {d, c} structs (struct
-    comparison is field-order lexicographic in both engines), slice, project."""
+    """= the ``probes`` cells of operators.similarity._ivf_assign: sort
+    {d, c} structs (field-order lexicographic, i.e. the kernel's stable
+    argsort over distances), slice, project."""
     pairs = "[" + ", ".join(
         f"{{'d': {_sql_ivf_d2(v, row)}, 'c': {i}}}"
         for i, row in enumerate(centroids)
@@ -358,8 +350,9 @@ def sql_ivf_probe_cells(v: str, centroids: list[list[float]], probes: int) -> st
 
 
 def sql_ivf_cell(v: str, centroids: list[list[float]]) -> str:
-    """= operators.similarity.ivf_cell with the SAME centroid literals:
-    argmin squared L2, ties -> lowest cell id (first-match CASE chain)."""
+    """= the nearest cell of operators.similarity._ivf_assign with the SAME
+    centroid literals: argmin squared L2, ties -> lowest cell id
+    (first-match CASE chain)."""
     dists = []
     for row in centroids:
         lit = "[" + ", ".join(repr(x) for x in row) + "]"

@@ -39,9 +39,11 @@ def build_session(
         # let the planner pick shuffled-hash over sort-merge when its size
         # conditions hold, and let AQE rewrite SMJ→SHJ at runtime when every
         # post-shuffle partition is under 64 MiB (guide §3.1/§9; optimization
-        # r15). Scale-safe by construction: both paths only fire when the
-        # build side is provably small per partition, so the SHJ OOM risk
-        # sort-merge exists to avoid stays bounded at any corpus size.
+        # r15). Bounded, not guaranteed: the static path fires only under
+        # the planner's build-side size conditions and the AQE rewrite only
+        # when every post-shuffle partition is under the 64 MiB threshold,
+        # so the SHJ OOM risk sort-merge avoids is limited by those
+        # estimates, which skewed or mis-estimated inputs can defeat.
         # Adopted from a full-bench interleaved A/B (292 queries, per-query
         # warmup, reps=2): geomean 0.978, 103 wins / 58 losses, the largest
         # being the iterative join-heavy er_canonical_entities 10.2→8.2 s;
@@ -66,6 +68,3 @@ def build_session(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def testdata_dir(sf: str = "0.001") -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", f"/root/testdata/sf{sf}")

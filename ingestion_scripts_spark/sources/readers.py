@@ -174,15 +174,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def read_json_records(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Batch analog of a typed Kafka topic: JSON-lines with a declared
-    schema. Bad records become nulls (PERMISSIVE) and flow to the
-    dead-letter split (K4) rather than killing the job."""
-    return spark.read.schema(schema).json(path)
-
-
 def decode_json_value(df: DataFrame, schema: T.StructType, value_col: str = "value") -> DataFrame:
     """Kafka-style decode: a binary/string ``value`` column → typed columns
     (``from_json(value, schema)``), the S1 mapping."""

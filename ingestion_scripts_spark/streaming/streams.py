@@ -346,7 +346,10 @@ def stream_state_partitions(
     ``paths`` are the stream's source files/directories (the registry
     harnesses write their replay sources to scratch dirs, so the bytes are
     on local disk and the walk is metadata-only — no Spark job). Hidden/
-    metadata files (``_SUCCESS``, ``.crc``) are excluded.
+    metadata files (``_SUCCESS``, ``.crc``) are excluded. A path with a
+    non-``file`` scheme (``s3a://``, ``hdfs://``, ...) is not walkable
+    here, so it sizes to the cap: counting it as 0 bytes would pin ONE
+    partition, and the checkpoint makes a state partition count sticky.
 
     Scale shape: at bench SFs inputs are KB-MB → 1 partition (per-trigger
     work is milliseconds; parallelism buys nothing and 32x state-store
@@ -357,9 +360,15 @@ def stream_state_partitions(
     """
     import math
     import os
+    from urllib.parse import urlparse
 
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_bytes = 0
     for p in paths:
+        url = urlparse(p)
+        if url.scheme not in ("", "file"):
+            return cap
+        p = url.path if url.scheme else p
         if os.path.isfile(p):
             n_bytes += os.path.getsize(p)
             continue
@@ -369,7 +378,6 @@ def stream_state_partitions(
                 for f in files
                 if not f.startswith((".", "_"))
             )
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(cap, math.ceil(n_bytes / target_bytes)))
 
 

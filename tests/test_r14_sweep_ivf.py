@@ -257,9 +257,9 @@ def test_sweep_degenerate_bucket_bounded(spark):
 _DIM, _CELLS = 4, 4
 
 
-def _vec(i: int) -> list[float]:
+def _vec(i: int, dim: int = _DIM) -> list[float]:
     return [
-        (_h(f"v:{i},{d}") % 2001 - 1000) / 1000.0 for d in range(_DIM)
+        (_h(f"v:{i},{d}") % 2001 - 1000) / 1000.0 for d in range(dim)
     ]
 
 
@@ -365,9 +365,11 @@ def test_ivf_roll_delta_guard_fails_loudly(spark):
 # --------------------------------------------------------------------------
 
 def _ivf_batches(spark):
+    # 64-dim: _ivf_trigger rolls under the registry's default 64-dim
+    # centroids, and a vector of another length is a loud error
     return [
         spark.createDataFrame(
-            [(i, _vec(i)) for i in range(60) if i % 3 == b],
+            [(i, _vec(i, 64)) for i in range(60) if i % 3 == b],
             "vec_id long, embedding array<double>",
         )
         for b in (0, 1, 2)

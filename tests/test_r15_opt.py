@@ -8,7 +8,8 @@ star-CC == union-find truth on adversarial graphs) are pinned elsewhere
 the new INTERNAL laws the optimizations introduced:
 
 * stream_state_partitions derives the count from bytes and only ever
-  adapts DOWN from the session's configured shuffle partitions;
+  adapts DOWN from the session's configured shuffle partitions (a
+  non-local source, which it cannot size, gets the cap);
 * scoped_shuffle_partitions restores the session conf even on error;
 * connected_components_star still converges exactly at the documented
   diameter-halving budget (the windowed check needs its +2 detection
@@ -56,6 +57,23 @@ def test_stream_state_partitions_floor_and_cap(spark, tmp_path):
     with open(huge / "c.parquet", "wb") as fh:
         fh.truncate((cap + 5) * STREAM_PARTITION_TARGET_BYTES)
     assert stream_state_partitions(spark, str(huge)) == cap
+
+
+def test_stream_state_partitions_non_local_sizes_to_cap(spark, tmp_path):
+    """A non-local source cannot be walked with os.path; it must size to
+    the session cap, not count as 0 bytes and pin one sticky partition.
+    ``file:`` URIs are local and still size to their bytes."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert cap > 1
+    assert stream_state_partitions(spark, "s3a://bucket/x") == cap
+    assert stream_state_partitions(spark, "hdfs://nn:8020/in/") == cap
+    p = tmp_path / "tiny"
+    p.mkdir()
+    (p / "a.parquet").write_bytes(b"x" * 1024)
+    assert stream_state_partitions(spark, str(p), "s3a://bucket/x") == cap
+    with open(p / "b.parquet", "wb") as fh:
+        fh.truncate(int(1.5 * STREAM_PARTITION_TARGET_BYTES))
+    assert stream_state_partitions(spark, p.as_uri()) == min(2, cap)
 
 
 def test_scoped_shuffle_partitions_restores_on_error(spark):

@@ -1,7 +1,7 @@
 """Cross-engine parity for the vector bucketing primitives: random float
-vectors through Spark lsh_bucket / ivf_cell / dot must equal the DuckDB
-twins bit-for-bit (both sides are sequential folds over identical
-literals)."""
+vectors through Spark lsh_bucket / the IVF assignment kernel must equal
+the DuckDB twins bit-for-bit (both sides are sequential folds over
+identical literals)."""
 
 import duckdb
 import pandas as pd
@@ -21,27 +21,43 @@ PLANES = SIM.hyperplanes(4, DIM)
 CENTS = SIM.ivf_centroids(4, DIM)
 
 
+def _sq_norm(v):
+    acc = 0.0
+    for x in v:  # the kernel's left fold; zero norm is a loud error there
+        acc = acc + x * x
+    return acc
+
+
 @settings(max_examples=8, deadline=None)
-@given(vecs=st.lists(VEC, min_size=1, max_size=20))
+@given(vecs=st.lists(VEC.filter(lambda v: _sq_norm(v) > 0), min_size=1, max_size=20))
 def test_bucket_and_cell_parity(spark, vecs):
+    """LSH bucket on the raw vector, and the IVF kernel's unit vector,
+    nearest cell and full probe order, against DuckDB's normalization +
+    ``sql_ivf_cell`` / ``sql_ivf_probe_cells``."""
     sdf = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "i int, v array<double>"
+        [(i, v) for i, v in enumerate(vecs)], "vid int, v array<double>"
     )
-    got = {
-        r.i: (r.b, r.c)
-        for r in sdf.select(
-            "i",
-            SIM.lsh_bucket(F.col("v"), PLANES).alias("b"),
-            SIM.ivf_cell(F.col("v"), CENTS).alias("c"),
-        ).collect()
+    buckets = {
+        r.vid: r.b
+        for r in sdf.select("vid", SIM.lsh_bucket(F.col("v"), PLANES).alias("b")).collect()
     }
+    got = {}
+    for r in SIM._ivf_assign(sdf, "vid", "v", "vid", "u", CENTS, len(CENTS)).collect():
+        u, probe = got.setdefault(r.vid, (r.u, []))
+        assert r.u == u
+        probe.append(r.cell)  # rows arrive nearest cell first
+    got = {vid: (buckets[vid], u, probe[0], probe) for vid, (u, probe) in got.items()}
+
     con = duckdb.connect()
-    con.register("t", pd.DataFrame({"i": range(len(vecs)), "v": vecs}))
+    con.register("t", pd.DataFrame({"vid": range(len(vecs)), "v": vecs}))
+    nrm = "sqrt(list_sum(list_transform(range(1, len(v) + 1), i -> v[i] * v[i])))"
     expect = {
-        i: (b, c)
-        for i, b, c in con.execute(
-            f"SELECT i, {O.sql_lsh_bucket('v', PLANES)}, "
-            f"{O.sql_ivf_cell('v', CENTS)} FROM t"
+        vid: (b, u, c, p)
+        for vid, b, u, c, p in con.execute(
+            f"SELECT vid, b, u, {O.sql_ivf_cell('u', CENTS)}, "
+            f"{O.sql_ivf_probe_cells('u', CENTS, len(CENTS))} FROM ("
+            f"SELECT vid, {O.sql_lsh_bucket('v', PLANES)} AS b, "
+            f"list_transform(v, x -> x / {nrm}) AS u FROM t)"
         ).fetchall()
     }
     assert got == expect

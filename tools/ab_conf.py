@@ -12,7 +12,8 @@ Usage:
     python tools/ab_conf.py --conf k=v [--conf k2=v2] [--reps 3] \
         [--queries q1,q2,... | --headline] [--streaming]
 
-Arm A = session defaults; arm B = the given confs. Per rep the order is
+Arm A = session defaults; arm B = the given confs. Each query first runs
+once untimed under each arm (warmup), then per rep the order is
 A,B (rep even) / B,A (rep odd) to cancel drift. Caches are released after
 EVERY run (cold-path comparison, identical for both arms). Output: one
 line per query with per-arm medians + ratio, then a geomean summary.
@@ -97,16 +98,20 @@ def main() -> None:
     ratios = []
     tot_a = tot_b = 0.0
     for name in names:
-        # per-query warmup under arm-A confs (r15 fix): the FIRST-ever run
-        # of a query pays plan codegen + JIT that no later run pays, and
+        # per-query warmup under BOTH arms' confs (r15 fix): the FIRST-ever
+        # run of a query pays plan codegen + JIT that no later run pays, and
         # the alternation order (A,B / B,A) put that cold run in arm A for
         # every query — the first full-bench A/B read geomean 0.85 from
-        # cold-start bias alone (warm-only re-analysis: 1.00). One untimed
-        # run before the timed alternation removes the bias for both arms.
-        set_arm(False)
-        spark.sparkContext.setJobDescription(f"ab:{name}:warmup")
-        qs[name](spark, sf_dir).collect()
-        release_caches()
+        # cold-start bias alone (warm-only re-analysis: 1.00). A conf that
+        # changes the plan has its own first-run cost, so each arm gets one
+        # untimed run before the timed alternation.
+        for arm_b in (False, True):
+            set_arm(arm_b)
+            spark.sparkContext.setJobDescription(
+                f"ab:{name}:warmup:{'B' if arm_b else 'A'}"
+            )
+            qs[name](spark, sf_dir).collect()
+            release_caches()
         ta, tb = [], []
         for r in range(reps):
             order = (False, True) if r % 2 == 0 else (True, False)

@@ -163,8 +163,8 @@ COMMENT = {
     ),
     "ivf_postings_roll": (
         "Maintained ANN index roll (r14): snapshot1's postings enter "
-        "as a PARQUET SCAN of (id, cell) — the 8-cell x 64-dim "
-        "quantizer fold appears only above the insert-side filter; "
+        "as a PARQUET SCAN of (id, cell) — the quantizer (one "
+        "MapInArrow) appears only above the insert-side filter; "
         "index maintenance is one left-anti join + union; the audit is "
         "three cell-keyed partial-agg counts full-outer-joined on "
         "cell. Measured: flat ~1-2 s vs corpus-linear re-assignment "
@@ -173,9 +173,10 @@ COMMENT = {
     "ivf_roll_serve": (
         "Serving from the maintained index (r14): the query side is "
         "BROADCAST (queries are few) and assigned to cells by the "
-        "quantizer expression; the corpus side joins the postings "
-        "table's cells by id — no corpus-side quantizer fold in the "
-        "tree; with cell-partitioned postings parquet the probed-cell "
+        "quantizer MapInArrow; the corpus side joins the postings "
+        "table's cells by id and only normalizes the survivors — no "
+        "corpus-side cell assignment; with cell-partitioned postings "
+        "parquet the probed-cell "
         "join prunes partitions. Top-k is a row_number window "
         "partitioned by query_id."
     ),
