@@ -361,6 +361,7 @@ def stream_state_partitions(
     import math
     import os
     from urllib.parse import urlparse
+    from urllib.request import url2pathname
 
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_bytes = 0
@@ -368,7 +369,7 @@ def stream_state_partitions(
         url = urlparse(p)
         if url.scheme not in ("", "file"):
             return cap
-        p = url.path if url.scheme else p
+        p = url2pathname(url.path) if url.scheme else p
         if os.path.isfile(p):
             n_bytes += os.path.getsize(p)
             continue

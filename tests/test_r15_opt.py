@@ -74,6 +74,11 @@ def test_stream_state_partitions_non_local_sizes_to_cap(spark, tmp_path):
     with open(p / "b.parquet", "wb") as fh:
         fh.truncate(int(1.5 * STREAM_PARTITION_TARGET_BYTES))
     assert stream_state_partitions(spark, p.as_uri()) == min(2, cap)
+    q = tmp_path / "my dir%"  # as_uri() percent-encodes both characters
+    q.mkdir()
+    (p / "b.parquet").rename(q / "b.parquet")
+    assert "%20" in q.as_uri()
+    assert stream_state_partitions(spark, q.as_uri()) == min(2, cap)
 
 
 def test_scoped_shuffle_partitions_restores_on_error(spark):
