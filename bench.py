@@ -576,44 +576,24 @@ def main() -> None:
     detail_path = os.path.join(root, "BENCH_DETAIL.json")
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
-    # ADVICE r8: the rolling BENCH_DETAIL.json gets overwritten by the
-    # next run, stranding BENCH_r{N}.json's queries_detail pointer — so
-    # also snapshot per-round detail under the round number the driver
-    # will assign (1 + highest committed BENCH_r{N}); snapshots are
-    # committed alongside the round and never overwritten.
-    import glob as _glob
-    import re as _re
-
-    # ADVICE r9: the inferred round number is fragile — a second bench run
-    # before the driver commits BENCH_r{N}.json silently overwrote the
-    # previous snapshot, and a driver-assigned round mismatch dangles the
-    # queries_detail pointer. An explicit round (--round N argv or
-    # SPARK_GRAFT_BENCH_ROUND env) overrides the inference; an INFERRED
-    # round never overwrites an existing snapshot (falls through to a
-    # .rerunK suffix instead).
-    explicit = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
+    # The rolling BENCH_DETAIL.json is overwritten by the next run. A
+    # snapshot that a committed BENCH_r{N}.json can point at is written only
+    # for an explicit round (--round N argv or SPARK_GRAFT_BENCH_ROUND env),
+    # keyed on round AND core count so the c8 and c32 runs of one round
+    # never collide; without a round, queries_detail names the rolling file.
+    bench_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
     for i, a in enumerate(sys.argv):
         if a == "--round" and i + 1 < len(sys.argv):
-            explicit = sys.argv[i + 1]
+            bench_round = sys.argv[i + 1]
         elif a.startswith("--round="):
-            explicit = a.split("=", 1)[1]
-    if explicit is not None:
-        snap = os.path.join(root, f"BENCH_DETAIL_r{int(explicit):02d}.json")
-    else:
-        rounds = [
-            int(m.group(1))
-            for p in _glob.glob(os.path.join(root, "BENCH_r*.json"))
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
+            bench_round = a.split("=", 1)[1]
+    snap = detail_path
+    if bench_round is not None:
         snap = os.path.join(
-            root, f"BENCH_DETAIL_r{max(rounds, default=0) + 1:02d}.json"
+            root, f"BENCH_DETAIL_r{int(bench_round):02d}_c{cpus}.json"
         )
-        k = 0
-        while os.path.exists(snap):
-            k += 1
-            snap = f"{snap.removesuffix('.json').split('.rerun')[0]}.rerun{k}.json"
-    with open(snap, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
+        with open(snap, "w") as fh:
+            json.dump(detail, fh, indent=1, sort_keys=True)
 
     # full per-query map first (any whole-stdout parser gets everything),
     # compact headline LAST: the driver's tail capture truncated the r2

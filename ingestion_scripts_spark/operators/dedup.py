@@ -1103,9 +1103,11 @@ def connected_components_star(
 
     if not converged:
         raise RuntimeError(
-            "connected_components_star did not reach a fixed point in "
-            f"{max_iter} rounds; raise max_iter (diameter halves per round, "
-            "so this needs a graph of diameter > 2^max_iter)"
+            "connected_components_star did not reach a fixed point after "
+            f"{rounds_done} star rounds (budget: max_iter={max_iter} + 2 "
+            "detection-slack rounds; confirmation rounds not counted); raise "
+            "max_iter (diameter halves per round, so this needs a graph of "
+            "diameter > 2^max_iter)"
         )
 
     comp = edges.groupBy("a").agg(F.min("b").alias("m")).select(

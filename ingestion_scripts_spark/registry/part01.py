@@ -1639,10 +1639,8 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the batch gaps-and-islands SQL: Spark's session_window merges
     events within the gap, so (user, session_start=min ts, session_end=
     max ts, n_events) must equal the island decomposition exactly."""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     agg = (
@@ -1653,29 +1651,12 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             _fmt_ts(F.max("ts"), with_micros=True).alias("session_end"),
         )
     )
-    name = "stream_sess_" + uuid.uuid4().hex[:8]
-    # state partitions sized to the stream's input bytes, not the core
-    # count (optimization r15, guide §2.2 — see stream_state_partitions)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        agg, "memory", _scratch(prefix="ckpt_"), mode="complete",
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .select("user_id", "session_start", "session_end", "n_events")
+        out.select("user_id", "session_start", "session_end", "n_events")
         .orderBy("user_id", "session_start")
     )
 
@@ -1705,10 +1686,8 @@ def q_stream_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     job: parquet file source → readStream → window agg (complete mode) →
     memory sink, availableNow trigger. The oracle is the identical batch
     SQL — streaming and batch must agree exactly (§2.8)."""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     agg = (
@@ -1718,27 +1697,12 @@ def q_stream_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    name = "stream_hourly_" + uuid.uuid4().hex[:8]
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        agg, "memory", _scratch(prefix="ckpt_"), mode="complete",
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .select(
+        out.select(
             _fmt_ts(F.col("w.start")).alias("window_start"),
             "event_type",
             "n",
@@ -1759,10 +1723,8 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     delivery-semantics guarantee made oracle-checkable. (Unbounded keyed
     state is fine under availableNow; the long-running variant is
     ``dropDuplicatesWithinWatermark``.)"""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     doubled = stream.select(
@@ -1770,27 +1732,12 @@ def q_stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.array(F.lit(0), F.lit(1))).alias("__replay"),
     )
     dedup = doubled.dropDuplicates(["event_id"]).select("event_id", "event_type")
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        dedup, "memory", _scratch(prefix="ckpt_"),
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("event_type")
     )

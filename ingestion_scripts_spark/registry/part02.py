@@ -948,39 +948,20 @@ def q_stream_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming contract), which IS the reference's periodic
     lookup-table refresh. The join itself is stateless (append mode);
     per-segment totals aggregate the sink table batch-side."""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import load_table, read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     cust = load_table(spark, sf_dir, "customer")
     stream = read_events_stream(spark, sf_dir)
     enriched = stream.join(
         F.broadcast(cust), stream.user_id == cust.c_custkey
     ).select("event_id", "c_mktsegment", "value")
-    name = "stream_enriched_" + uuid.uuid4().hex[:8]
-    # state partitions sized to the stream's input bytes, not the core
-    # count (optimization r15, guide §2.2 — see stream_state_partitions)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        enriched, "memory", _scratch(prefix="ckpt_"),
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy("c_mktsegment")
+        out.groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
@@ -1011,62 +992,32 @@ def q_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final watermark. The DuckDB oracle replays that watermark algebra
     in SQL — the one streaming behavior (dropping, not just windowing)
     that batch twins can't cover."""
-    import glob
-    import os
-    import tempfile
-    import time
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import load_table
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     src = _scratch(prefix="late_src_")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    ev.filter(F.lit(False)).coalesce(1).write.mode("overwrite").parquet(
-        f"{src}/b1"
-    )
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b2")
-    # the file source orders batches by modification time: pin it
-    now = time.time()
-    for i, d in enumerate(("b0", "b1", "b2")):
-        for p in glob.glob(f"{src}/{d}/*.parquet"):
-            os.utime(p, (now - 200 + 50 * i, now - 200 + 50 * i))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    stream = ordered_batches(
+        [
+            ev.filter(F.col("event_id") % 2 == 0),
+            ev.filter(F.lit(False)),
+            ev.filter(F.col("event_id") % 2 == 1),
+        ],
+        src,
     )
     agg = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = "stream_late_" + uuid.uuid4().hex[:8]
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        agg, "memory", _scratch(prefix="ckpt_"), size_from=(src,)
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .select(_fmt_ts(F.col("w.start")).alias("window_start"), "n")
+        out.select(_fmt_ts(F.col("w.start")).alias("window_start"), "n")
         .orderBy("window_start")
     )
 
@@ -1166,10 +1117,8 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state to (range + delay) — without it, stream-stream state grows
     unboundedly. Run under availableNow, the result must equal the batch
     range join exactly, which is the DuckDB oracle."""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import load_table
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
@@ -1199,30 +1148,10 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_event_id").alias("purchase_id"),
         F.col("c_event_id").alias("click_id"),
     )
-    name = "ssj_" + uuid.uuid4().hex[:8]
-    # state partitions sized to the stream's input bytes, not the core
-    # count: a stream-stream join commits 4 state stores per partition per
-    # trigger, so over-sharding KB-sized state cost seconds of pure
-    # delta-file fsync (optimization r15, guide §2.2 — measured 10.4 s →
-    # 2.3 s; see stream_state_partitions)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        joined, "memory", _scratch(prefix="ckpt_"), size_from=(src,)
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("purchase_id", "click_id")
+    return out.orderBy("purchase_id", "click_id")
 
 
 SQL_STREAM_STREAM_JOIN = """
@@ -1255,13 +1184,11 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the number scales with trigger count, not rows, and stays flat as the
     corpus grows (a 100 TB run amortizes the same fixed trigger cost over
     arbitrarily large batches)."""
-    import glob
-    import os
-    import tempfile
-    import time
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import load_table
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
@@ -1274,34 +1201,23 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("bigint").alias("user_id"),
         F.col("event_type"),
     )
-    for side, flt in (("purchases", "purchase"), ("clicks", "click")):
+
+    def _stream(side: str, flt: str, prefix: str) -> DataFrame:
         base = ev.filter(F.col("event_type") == flt)
-        base.coalesce(1).write.mode("overwrite").parquet(f"{src}/{side}/b0")
-        sentinel.withColumn("event_type", F.lit(flt)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/{side}/b1")
-        base.filter(F.lit(False)).coalesce(1).write.mode("overwrite").parquet(
-            f"{src}/{side}/b2"
-        )
-        now = time.time()
-        for i, d in enumerate(("b0", "b1", "b2")):
-            for p in glob.glob(f"{src}/{side}/{d}/*.parquet"):
-                os.utime(p, (now - 200 + 50 * i, now - 200 + 50 * i))
-
-    schema = ev.schema
-
-    def _stream(sub: str, prefix: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{src}/{sub}")
+        s = ordered_batches(
+            [
+                base,
+                sentinel.withColumn("event_type", F.lit(flt)),
+                base.filter(F.lit(False)),
+            ],
+            f"{src}/{side}",
         )
         return s.select(
             *[F.col(c).alias(f"{prefix}_{c}") for c in s.columns]
         ).withWatermark(f"{prefix}_ts", "2 hours")
 
-    p, c = _stream("purchases", "p"), _stream("clicks", "c")
+    p = _stream("purchases", "purchase", "p")
+    c = _stream("clicks", "click", "c")
     joined = p.join(
         c,
         (F.col("p_user_id") == F.col("c_user_id"))
@@ -1313,31 +1229,11 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("c_event_id"), F.lit(-1)).alias("click_id"),
         "p_user_id",
     )
-    name = "soj_" + uuid.uuid4().hex[:8]
-    # state partitions sized to the stream's input bytes (optimization
-    # r15, guide §2.2): 4 join state stores x 32 partitions meant ~350 s
-    # of summed per-trigger commitTimeMs on near-empty triggers; measured
-    # 16.1 s → 4.7 s with byte-identical results
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        joined, "memory", _scratch(prefix="ckpt_"), size_from=(src,)
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .filter(F.col("p_user_id") >= 0)  # drop the sentinel's own row
+        out.filter(F.col("p_user_id") >= 0)  # drop the sentinel's own row
         .select("purchase_id", "click_id")
         .orderBy("purchase_id", "click_id")
     )
@@ -1480,8 +1376,6 @@ def q_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never inference — at 100 TB schema inference is a full extra scan),
     then aggregated per (source, lang). The oracle aggregates the parquet
     directly, so the JSON encode/decode path must be lossless."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     tmp = _scratch(prefix="jsonl_src_")
     docs.select("doc_id", "text", "lang", "source", "n_chars").coalesce(
@@ -1807,8 +1701,6 @@ def q_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks) and re-read with an explicit schema + multiLine, then
     aggregated. The oracle reads the parquet directly — the encode/decode
     must be lossless through quoting."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     tmp = _scratch(prefix="csv_src_")
     docs.select("doc_id", "text", "lang", "source", "n_chars").coalesce(
@@ -1852,8 +1744,6 @@ def q_corrupt_record_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: per-source good/corrupt counts. The oracle mirrors the
     corruption rule arithmetically (we constructed the corruption; what is
     under test is Spark's routing of it)."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     tmp = _scratch(prefix="corrupt_src_")
     line = F.to_json(F.struct("doc_id", "text", "source"))

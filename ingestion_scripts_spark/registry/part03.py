@@ -336,52 +336,28 @@ def q_stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     many triggers emitted the key (proves keys seen in both batches carried
     state, not recomputed). State is one bigint per key, partitioned by the
     key shuffle, checkpointed — the arbitrary-state template at scale."""
-    import glob
-    import os
-    import tempfile
-    import time
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import load_table
-    from ingestion_scripts_spark.streaming.streams import stateful_user_counts
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+        stateful_user_counts,
+    )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    src = _scratch(prefix="state_src_")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
-    now = time.time()
-    for i, d in enumerate(("b0", "b1")):
-        for p in glob.glob(f"{src}/{d}/*.parquet"):
-            os.utime(p, (now - 200 + 50 * i, now - 200 + 50 * i))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    stream = ordered_batches(
+        [
+            ev.filter(F.col("event_id") % 2 == 0),
+            ev.filter(F.col("event_id") % 2 == 1),
+        ],
+        _scratch(prefix="state_src_"),
     )
     counted = stateful_user_counts(stream, "user_id")
-    name = "stream_state_" + uuid.uuid4().hex[:8]
-    # deliberately NOT byte-scoped (optimization r15): this stream is
-    # applyInPandasWithState over ~|users| groups — per-group Python
-    # overhead is the cost, so parallelism must track CORES, not input
-    # bytes (measured: partitions 32→1 took 2.9 s → 5.5 s while the
-    # JVM-stateful streams all improved; guide §4 boundary cost)
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", _scratch(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    # core-sized: Python-stateful over ~|users| groups (run_available_now)
+    out = run_available_now(
+        counted, "memory", _scratch(prefix="ckpt_"), mode="update"
     )
-    q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        out.groupBy("user_id")
         .agg(
             F.max("running_total").alias("total_events"),
             F.count(F.lit(1)).alias("n_batches"),
@@ -404,10 +380,8 @@ def q_stream_wm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes them, so state is O(delay window), the only form that
     survives an unbounded stream). Every event replayed twice in the same
     batch window → per-type counts must equal plain batch counts."""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     doubled = stream.select(
@@ -417,27 +391,12 @@ def q_stream_wm_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = doubled.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    name = "wm_dedup_" + uuid.uuid4().hex[:8]
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        dedup, "memory", _scratch(prefix="ckpt_"),
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            dedup.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("event_type")
     )
@@ -654,48 +613,23 @@ def q_stream_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACTLY once — per-type counts equal the plain batch counts. This is
     the reference's Mongo-unique-index upgrade (at-least-once →
     effectively-once) as files + anti-join."""
-    import glob
-    import os
-    import tempfile
-    import time
-
     from ingestion_scripts_spark.operators.sink import make_foreach_batch_writer
     from ingestion_scripts_spark.sources.readers import load_table
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     src = _scratch(prefix="idem_src_")
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    ev.coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
-    now = time.time()
-    for i, d in enumerate(("b0", "b1")):
-        for p in glob.glob(f"{src}/{d}/*.parquet"):
-            os.utime(p, (now - 200 + 50 * i, now - 200 + 50 * i))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
+    stream = ordered_batches([ev.filter(F.col("event_id") % 2 == 0), ev], src)
     sink = _scratch(prefix="idem_sink_") + "/out"
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    run_available_now(
+        stream,
+        make_foreach_batch_writer(sink, ["event_id"], audit=False),
+        _scratch(prefix="ckpt_"),
+        size_from=(src,),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            stream.writeStream.foreachBatch(
-                make_foreach_batch_writer(sink, ["event_id"], audit=False)
-            )
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
         spark.read.parquet(sink)
         .groupBy("event_type")
@@ -718,10 +652,9 @@ def q_stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     one computation of the routing predicate instead of re-reading the
     source per sink. Result = per-sink/type counts read back from the
     parquet, checked against the equivalent conditional aggregation."""
-    import tempfile
-
     from ingestion_scripts_spark.operators.sink import dead_letter_split
     from ingestion_scripts_spark.sources.readers import read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     base = _scratch(prefix="fanout_")
@@ -737,21 +670,10 @@ def q_stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(dead_path)
         batch_df.unpersist()
 
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    run_available_now(
+        stream, route, _scratch(prefix="ckpt_"),
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            stream.writeStream.foreachBatch(route)
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     g = (
         spark.read.parquet(good_path)
         .groupBy("event_type")
@@ -1257,8 +1179,6 @@ def q_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     placement exchange immediately before a keyed exchange is a pure
     double-shuffle (r3's 1.7× regression on this query; keyed-only
     measured 0.41 s vs 0.93 s at sf0.1)."""
-    import tempfile
-
     from ingestion_scripts_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents", spread=False)
@@ -1435,8 +1355,6 @@ def q_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in columnar alternative to parquet) with an explicit schema on
     re-read, then aggregated per (lang, source). The oracle reads the
     parquet directly — the round-trip must be lossless."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     tmp = _scratch(prefix="orc_src_")
     docs.select("doc_id", "text", "lang", "source", "n_chars").coalesce(
@@ -1631,8 +1549,6 @@ def q_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Here the write happens inline to keep the query self-contained; in
     production the bucketed layout is written once and amortized over
     every subsequent join."""
-    import tempfile
-
     from ingestion_scripts_spark.operators.bucketing import write_bucketed
 
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
@@ -1905,7 +1821,6 @@ def q_stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the drained table must equal the batch row law — the
     oracle can't see offsets, so equality proves the offset ranges tiled
     the stream exactly once (no drop, no double-serve at batch seams)."""
-    import tempfile
     import uuid
 
     from ingestion_scripts_spark.sources.feed_datasource import register

@@ -728,8 +728,6 @@ def q_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     quotes is exactly where naive XML breaks — re-read with an explicit
     schema and aggregated. The oracle reads the parquet directly: the
     encode/decode must be lossless through entity escaping."""
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     tmp = _scratch(prefix="xml_src_")
     docs.select("doc_id", "text", "lang", "source", "n_chars").coalesce(
@@ -914,8 +912,6 @@ def q_custom_feed_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit (temp file + driver rename — no half-visible files), then are
     re-read with an explicit schema and aggregated. The oracle reads the
     parquet directly: the custom sink must be a lossless pass-through."""
-    import tempfile
-
     from ingestion_scripts_spark.sources.feed_datasource import register_sink
 
     register_sink(spark)
@@ -1113,7 +1109,6 @@ def q_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the same checks straight from the source table —
     staging must be a lossless pass-through."""
     import os
-    import tempfile
 
     from ingestion_scripts_spark.operators import dq
 
@@ -1255,8 +1250,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     missing column must surface as NULLs for old rows and exact values
     for new ones; the oracle reconstructs the same union from the source
     table directly."""
-    import tempfile
-
     ev = _t(spark, sf_dir, "events").select(
         "event_id", "event_type", F.get_json_object("props", "$.k")
         .cast("bigint")
@@ -1918,20 +1911,17 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales with trigger count, not rows, so at production batch sizes the
     fixed per-trigger cost amortizes away."""
     import glob
-    import os
-    import tempfile
-    import time
+
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     src = _scratch(prefix="incdd_src_")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b{i}")
-    now = time.time()
-    for i in range(3):
-        for p in glob.glob(f"{src}/b{i}/*.parquet"):
-            os.utime(p, (now - 300 + 50 * i, now - 300 + 50 * i))
+    stream = ordered_batches(
+        [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
+    )
     sink = _scratch(prefix="incdd_sink_") + "/out"
 
     def handle(batch_df: DataFrame, _bid: int) -> None:
@@ -2023,30 +2013,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched.unpersist()
         bn.unpersist()
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    # per-trigger joins run over KB-sized batches: shuffle partitions
-    # sized to input bytes, not cores (optimization r15, guide §2.2 —
-    # measured 13.5 s → 9.9 s; see stream_state_partitions)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
-    )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(stream, handle, _scratch(prefix="ckpt_"), size_from=(src,))
     return spark.read.parquet(sink).select("doc_id").orderBy("doc_id")
 
 

@@ -745,36 +745,18 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     events stream must equal the plain batch GROUP BY — state IS the
     aggregate. Scale: the state source reads the checkpoint's HDFS-backed
     store partition-parallel; no driver materialization."""
-    import tempfile
-    import uuid
-
     from ingestion_scripts_spark.sources.readers import read_events_stream
+    from ingestion_scripts_spark.streaming.streams import run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     ckpt = _scratch(prefix="ckpt_statereader_")
-    name = "state_probe_" + uuid.uuid4().hex[:8]
-    # state partitions sized to the stream's input bytes, not the core
-    # count (optimization r15, guide §2.2 — see stream_state_partitions);
     # the statestore read below lists whatever partition layout the query
     # wrote, so the law is layout-invariant
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    run_available_now(
+        counts, "memory", ckpt, mode="complete",
+        size_from=(f"{sf_dir}/events.parquet",),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, f"{sf_dir}/events.parquet")
-    ):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     st = spark.read.format("statestore").load(ckpt)
     return st.select(
         F.col("key.event_type").alias("event_type"),
@@ -1788,13 +1770,12 @@ def q_stream_scd_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two merges unrolled, which the oracle states in closed form:
     keys in both update sets reach version 3, each version's validity
     interval closed by the batch that superseded it."""
-    import glob
-    import os
-    import tempfile
-    import time
-
     from ingestion_scripts_spark.operators.sink import scd2_apply
     from ingestion_scripts_spark.sources.readers import load_table
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
@@ -1817,13 +1798,7 @@ def q_stream_scd_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal", F.col("c_acctbal") + bump7 + bump5
     ).withColumn("effective_date", F.lit("2024-09-01"))
     src = f"{root}/updates"
-    upd1.coalesce(1).write.mode("overwrite").parquet(f"{src}/b0")
-    upd2.coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
-    now = time.time()
-    for i, d in enumerate(("b0", "b1")):
-        for p in glob.glob(f"{src}/{d}/*.parquet"):
-            os.utime(p, (now - 200 + 50 * i, now - 200 + 50 * i))
-
+    stream = ordered_batches([upd1, upd2], src)
     state = {"dir": dim0}
 
     def merge_batch(bdf, bid):
@@ -1840,27 +1815,9 @@ def q_stream_scd_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.write.mode("overwrite").parquet(nxt)
         state["dir"] = nxt
 
-    stream = (
-        spark.readStream.schema(upd1.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    run_available_now(
+        stream, merge_batch, _scratch(prefix="ckpt_scd_"), size_from=(src,)
     )
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
-    )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", _scratch(prefix="ckpt_scd_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
         spark.read.parquet(state["dir"])
         .select(

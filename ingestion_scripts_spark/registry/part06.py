@@ -303,59 +303,27 @@ def q_stream_quota_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     source's budget spent in batch 0 must stay spent in batch 1, which
     is exactly what the closed-form oracle (admit_rank over batch
     parity then doc_id) checks."""
-    import glob
-    import os
-    import tempfile
-    import time
-    import uuid
-
-    from ingestion_scripts_spark.streaming.streams import quota_admit
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        quota_admit,
+        run_available_now,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     src = _scratch(prefix="quota_src_")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b0")
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(f"{src}/b1")
-    now = time.time()
-    for i, d in enumerate(("b0", "b1")):
-        for p in glob.glob(f"{src}/{d}/*.parquet"):
-            os.utime(p, (now - 200 + 50 * i, now - 200 + 50 * i))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    stream = ordered_batches(
+        [
+            docs.filter(F.col("doc_id") % 2 == 0),
+            docs.filter(F.col("doc_id") % 2 == 1),
+        ],
+        src,
     )
     admitted = quota_admit(stream, "source", "doc_id", quota=15)
-    name = "stream_quota_" + uuid.uuid4().hex[:8]
-    # state partitions sized to the stream's input bytes, not the core
-    # count (optimization r15, guide §2.2 — see stream_state_partitions).
-    # This IS Python-stateful (applyInPandasWithState), but keyed by
-    # SOURCE — a schema-bounded handful of groups at any corpus scale —
-    # so per-trigger store commits dominate per-group Python work
-    # (measured 4.2 s → 1.7 s; contrast the user-keyed token_bucket/
-    # stateful_counts streams, which stay core-parallel)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
+    out = run_available_now(
+        admitted, "memory", _scratch(prefix="ckpt_"), mode="update",
+        size_from=(src,),
     )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            admitted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).orderBy("source", "admit_rank")
+    return out.orderBy("source", "admit_rank")
 
 
 SQL_STREAM_QUOTA = """
@@ -1642,14 +1610,13 @@ def q_stream_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 1 arrives. Final per-key emission must equal the batch
     replay, which is exactly what the shared recursive-CTE oracle
     checks."""
-    import glob
-    import os
     import shutil
-    import tempfile
-    import time
-    import uuid
 
-    from ingestion_scripts_spark.streaming.streams import token_bucket_admit
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+        token_bucket_admit,
+    )
 
     ev = _t(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("long").alias("es"), "event_id"
@@ -1658,43 +1625,15 @@ def q_stream_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = _scratch(prefix="ckpt_")
     try:
         cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp").cast("long")
-        ev.filter(F.col("es") < cutoff).coalesce(1).write.mode("overwrite").parquet(
-            f"{src}/b0"
-        )
-        ev.filter(F.col("es") >= cutoff).coalesce(1).write.mode("overwrite").parquet(
-            f"{src}/b1"
-        )
-        # the file source orders same-trigger candidates by mtime; pinning
-        # b0 older than b1 makes the two-batch replay deterministic
-        now = time.time()
-        for i, d in enumerate(("b0", "b1")):
-            for pth in glob.glob(f"{src}/{d}/*.parquet"):
-                os.utime(pth, (now - 200 + 50 * i, now - 200 + 50 * i))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
+        stream = ordered_batches(
+            [ev.filter(F.col("es") < cutoff), ev.filter(F.col("es") >= cutoff)],
+            src,
         )
         out = token_bucket_admit(stream, "user_id", "es", "event_id", per_s=36000)
-        name = "stream_tb_" + uuid.uuid4().hex[:8]
-        # deliberately NOT byte-scoped (optimization r15): this stream is
-        # applyInPandasWithState over ~|users| groups — per-group Python
-        # overhead dominates, so parallelism must track CORES, not input
-        # bytes (measured: partitions 32→1 took 5.2 s → 8.3 s while the
-        # JVM-stateful streams all improved; guide §4 boundary cost)
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        # core-sized: Python-stateful over ~|users| groups (run_available_now)
+        tbl = run_available_now(out, "memory", ckpt, mode="update")
         # final state per key = the emission with the highest n_events;
         # materialize BEFORE the finally-block deletes the source dirs
-        tbl = spark.table(name)
         rows = (
             tbl.groupBy("user_id")
             .agg(

@@ -1243,23 +1243,17 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the batch result — the strongest possible
     streaming/batch consistency law, and the 18th executed Structured
     Streaming query."""
-    import glob
-    import os
-    import time
-    import uuid
-
     from ingestion_scripts_spark.operators import sketches as SK
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
     src = _scratch(prefix="kmvstream_src_")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b{i}")
-    now = time.time()
-    for i in range(3):
-        for p in glob.glob(f"{src}/b{i}/*.parquet"):
-            os.utime(p, (now - 300 + 50 * i, now - 300 + 50 * i))
+    stream = ordered_batches(
+        [ev.filter(F.col("event_id") % 3 == i) for i in range(3)], src
+    )
     state_dir = _scratch(prefix="kmvstream_state_") + "/state"
 
     def handle(batch_df: DataFrame, _bid: int) -> None:
@@ -1283,29 +1277,9 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt = sp.read.parquet(state_dir + "_next")
         nxt.coalesce(1).write.mode("overwrite").parquet(state_dir)
 
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    run_available_now(
+        stream, handle, _scratch(prefix="ckpt_kmv_"), size_from=(src,)
     )
-    # per-trigger state merge runs over <=64-row-per-group frames: shuffle
-    # partitions sized to input bytes, not cores (optimization r15, §2.2)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
-    )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", _scratch(prefix="ckpt_kmv_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     final = spark.read.parquet(state_dir)
     return SK.kmv_estimate(final, k=64).orderBy("g")
 

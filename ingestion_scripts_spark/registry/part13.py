@@ -235,20 +235,16 @@ def q_stream_snapshot_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-reads, three writes, checkpoint fsync). Delta-plane MinHash work
     at this SF is milliseconds; total scales with trigger count, not
     rows, and amortizes away at production batch sizes."""
-    import glob
-    import os
-    import time
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")  # noqa: F405
     src = _scratch(prefix="roll_src_")  # noqa: F405
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b{i}")
-    now = time.time()
-    for i in range(3):
-        for p in glob.glob(f"{src}/b{i}/*.parquet"):
-            os.utime(p, (now - 300 + 50 * i, now - 300 + 50 * i))
+    stream = ordered_batches(
+        [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
+    )
     state = _scratch(prefix="roll_state_")  # noqa: F405
     sink = _scratch(prefix="roll_sink_") + "/out"  # noqa: F405
     ver = {"n": 0}
@@ -256,30 +252,9 @@ def q_stream_snapshot_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     def handle(batch_df: DataFrame, _bid: int) -> None:
         _roll_trigger(spark, batch_df, state, sink, ver)
 
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    run_available_now(
+        stream, handle, _scratch(prefix="ckpt_"), size_from=(src,)  # noqa: F405
     )
-    # per-trigger band-roll joins run over KB-sized deltas: shuffle
-    # partitions sized to input bytes, not cores (optimization r15,
-    # guide §2.2 — measured 18.8 s → 14.5 s; see stream_state_partitions)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
-    )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))  # noqa: F405
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
         # the delta sink is versioned subdirs (delta_v{step}, replay-safe
         # overwrites — ADVICE r13); union on read

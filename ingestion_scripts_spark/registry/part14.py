@@ -788,20 +788,16 @@ def q_stream_ivf_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id) on one cells table. Latency model as for
     ``stream_snapshot_roll``: wall ≈ trigger count × fixed per-trigger
     overhead; the data-plane assignment at this SF is milliseconds."""
-    import glob
-    import os
-    import time
+    from ingestion_scripts_spark.streaming.streams import (
+        ordered_batches,
+        run_available_now,
+    )
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")  # noqa: F405
     src = _scratch(prefix="ivfstream_src_")  # noqa: F405
-    for i in range(3):
-        emb.filter(F.col("vec_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b{i}")
-    now = time.time()
-    for i in range(3):
-        for pth in glob.glob(f"{src}/b{i}/*.parquet"):
-            os.utime(pth, (now - 300 + 50 * i, now - 300 + 50 * i))
+    stream = ordered_batches(
+        [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)], src
+    )
     state = _scratch(prefix="ivfstream_state_")  # noqa: F405
     sink = _scratch(prefix="ivfstream_sink_") + "/out"  # noqa: F405
     ver = {"n": 0}
@@ -809,29 +805,9 @@ def q_stream_ivf_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     def handle(batch_df: DataFrame, _bid: int) -> None:
         _ivf_trigger(spark, batch_df, state, sink, ver)
 
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    run_available_now(
+        stream, handle, _scratch(prefix="ckpt_"), size_from=(src,)  # noqa: F405
     )
-    # per-trigger postings-roll joins run over KB-sized deltas: shuffle
-    # partitions sized to input bytes, not cores (optimization r15, §2.2)
-    from ingestion_scripts_spark.streaming.streams import (
-        scoped_shuffle_partitions,
-        stream_state_partitions,
-    )
-
-    with scoped_shuffle_partitions(
-        spark, stream_state_partitions(spark, src)
-    ):
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", _scratch(prefix="ckpt_"))  # noqa: F405
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
         spark.read.option("recursiveFileLookup", "true")
         .parquet(sink)

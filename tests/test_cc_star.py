@@ -94,3 +94,17 @@ def test_default_components_is_star():
     from ingestion_scripts_spark.operators import dedup as D
 
     assert D.components is D.connected_components_star
+
+
+def test_star_cc_unconverged_error_reports_rounds_run(spark):
+    """A path of length 64 has diameter 64 > 2^2: with max_iter=2 the star
+    loop exhausts its max_iter + 2 round budget and must say how many star
+    rounds it actually ran (4), not just max_iter."""
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "id_a bigint, id_b bigint"
+    )
+    with pytest.raises(
+        RuntimeError,
+        match=r"after 4 star rounds \(budget: max_iter=2 \+ 2 detection-slack",
+    ):
+        connected_components_star(chain, max_iter=2)

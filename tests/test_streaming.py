@@ -3,6 +3,7 @@ checkpointed idempotent sink; streaming dedup."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,11 +42,12 @@ def test_windowed_counts_stream(spark, tmp_path):
     src = _write_events(tmp_path, "src", ROWS)
     stream = read_json_stream(spark, src, EVENT)
     agg = ST.windowed_counts(stream, window="1 hour", watermark="4 hours")
-    q = ST.memory_sink(agg, "win_counts", spark, output_mode="complete")
-    q.awaitTermination(120)
+    out = ST.run_available_now(
+        agg, "memory", str(tmp_path / "ckpt"), mode="complete"
+    )
     got = {
         (r["window"].start.hour, r.event_type): r.n
-        for r in spark.sql("select * from win_counts").collect()
+        for r in out.collect()
     }
     assert got[(0, "view")] == 3  # duplicate event included pre-dedup
     assert got[(2, "click")] == 1
@@ -69,9 +71,10 @@ def test_session_window_stream(spark, tmp_path):
     src = _write_events(tmp_path, "src3", ROWS[:3])
     stream = read_json_stream(spark, src, EVENT)
     agg = ST.session_counts(stream, gap="30 minutes", watermark="4 hours")
-    q = ST.memory_sink(agg, "sessions", spark, output_mode="complete")
-    q.awaitTermination(120)
-    rows = spark.sql("select * from sessions").collect()
+    out = ST.run_available_now(
+        agg, "memory", str(tmp_path / "ckpt"), mode="complete"
+    )
+    rows = out.collect()
     # events 1,2 chain (15-min gap) into one session; event 3 alone
     assert sorted(r.n_events for r in rows) == [1, 2]
 
@@ -307,3 +310,105 @@ def test_quota_admit_spent_budget_stays_spent(spark, tmp_path):
         ("a", 10, 1), ("a", 12, 2), ("a", 20, 3),
         ("b", 11, 1), ("b", 21, 2), ("b", 31, 3),
     ]
+
+
+def _shuffle_partitions(spark):
+    return spark.conf.get("spark.sql.shuffle.partitions")
+
+
+def test_replay_harness_laws(spark, tmp_path):
+    """ordered_batches + run_available_now, the harness every availableNow
+    registry stream runs through:
+
+    * one trigger per frame, in LIST order — 11 frames, so the b{i} dirs'
+      lexical order (b0, b1, b10, b2, ...) is not the list order, with an
+      empty middle frame that must still take its own trigger;
+    * a raising foreachBatch propagates out of the helper and the scoped
+      ``spark.sql.shuffle.partitions`` is restored;
+    * ``size_from=None`` never touches the session conf."""
+    from pyspark.errors import StreamingQueryException
+
+    frames = [spark.range(1).select(F.lit(i).alias("tag")) for i in range(11)]
+    frames[5] = frames[5].filter(F.lit(False))
+    src = str(tmp_path / "src")
+    stream = ST.ordered_batches(frames, src)
+    # pinned mtimes ascend in list order, whole seconds apart: write-time
+    # order alone is milliseconds apart and collides on coarse-mtime stores
+    mtimes = [
+        {f.stat().st_mtime for f in (tmp_path / "src" / f"b{i}").glob("*.parquet")}
+        for i in range(11)
+    ]
+    assert all(len(m) == 1 for m in mtimes)
+    flat = [m.pop() for m in mtimes]
+    assert all(b - a >= 1 for a, b in zip(flat, flat[1:]))
+
+    seen, confs = [], []
+
+    def record(batch_df, batch_id):
+        confs.append(_shuffle_partitions(spark))
+        seen.append((batch_id, [r.tag for r in batch_df.collect()]))
+
+    before = _shuffle_partitions(spark)
+    assert before != "1"
+    assert ST.run_available_now(
+        stream, record, str(tmp_path / "ckpt"), size_from=(src,)
+    ) is None
+    want = [[i] for i in range(11)]
+    want[5] = []
+    assert seen == list(enumerate(want))
+    # KB-sized source → one partition inside the query, restored after
+    assert set(confs) == {"1"}
+    assert _shuffle_partitions(spark) == before
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("boom in foreachBatch")
+
+    with pytest.raises(StreamingQueryException, match="boom in foreachBatch"):
+        ST.run_available_now(
+            ST.ordered_batches(frames[:2], str(tmp_path / "src2")), boom,
+            str(tmp_path / "ckpt2"), size_from=(src,),
+        )
+    assert _shuffle_partitions(spark) == before
+
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        confs.clear()
+        ST.run_available_now(
+            ST.ordered_batches(frames[:2], str(tmp_path / "src3")), record,
+            str(tmp_path / "ckpt3"),
+        )
+        assert set(confs) == {"3"}
+        assert _shuffle_partitions(spark) == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_registry_streams_use_the_replay_harness():
+    """Ratchet: the registry's availableNow streams go through
+    ``streams.ordered_batches`` / ``streams.run_available_now`` — no
+    hand-pinned mtimes, hand-scoped partitions or hand-started availableNow
+    queries. ``q_stream_custom_source`` is the one hand-rolled stream (it
+    drains with processAllAvailable, which availableNow cannot do)."""
+    import ast
+    import pathlib
+
+    import ingestion_scripts_spark.registry as R
+
+    allowed = "q_stream_custom_source"
+    n_files = 0
+    for path in sorted(pathlib.Path(R.__file__).parent.glob("*.py")):
+        n_files += 1
+        text = path.read_text()
+        for banned in ("os.utime", "scoped_shuffle_partitions", "trigger(availableNow"):
+            assert banned not in text, f"{path.name}: {banned}"
+        spans = [
+            (node.lineno, node.end_lineno)
+            for node in ast.parse(text).body
+            if isinstance(node, ast.FunctionDef) and node.name == allowed
+        ]
+        for ln, line in enumerate(text.splitlines(), 1):
+            if "writeStream" in line:
+                assert any(a <= ln <= b for a, b in spans), (
+                    f"{path.name}:{ln}: writeStream outside {allowed}"
+                )
+    assert n_files > 10
