@@ -13,9 +13,13 @@
 
 Pair dot products use ``zip_with`` + ``aggregate`` (native HOFs — a
 sequential left fold, bit-identical to the DuckDB oracle's list fold).
-IVF assignment runs in the Arrow kernel ``_ivf_assign``, whose numpy folds
-keep that sequential order (bit-identical too). Similarities are
-rounded before ranking so cross-engine float drift cannot flip a rank.
+IVF search runs as one corpus-side Arrow kernel, ``_ivf_topk``: per batch
+it normalizes, assigns cells, scores each cell's rows against the queries
+probing it and keeps only each query's top-k superset, so no (query,
+candidate) pair row is materialized; the roll's assignment is the Arrow
+kernel ``_ivf_assign``. Their numpy folds keep the sequential order
+(bit-identical too). Similarities are rounded before ranking so
+cross-engine float drift cannot flip a rank.
 """
 
 from __future__ import annotations
@@ -46,8 +50,9 @@ def _sql_dot(a: str, b: str) -> str:
 def spread(df: DataFrame) -> DataFrame:
     """CPU-parallelism guard for the corpus side of vector kernels.
 
-    Similarity joins are COMPUTE-bound (per-pair HOF dot products), so the
-    corpus task count must track cores, not input bytes: a small parquet
+    Similarity kernels are COMPUTE-bound (per-pair HOF dot products, or
+    the IVF kernel's per-cell Arrow folds), so the corpus task count must
+    track cores, not input bytes: a small parquet
     corpus arrives as ONE split and would serialize the whole kernel behind
     a single task (observed: 10 s+ single-task stages at sf0.1). Repartition
     round-robin only when the scan yields fewer splits than cores — at real
@@ -334,6 +339,21 @@ def _unit_rows(batch, id_col: str, vec_col: str, dim: int):
     return x / nrm[:, None]
 
 
+def _nearest_cells(u, cents, probes: int):
+    """(n, probes) indices of each unit row's ``probes`` nearest centroids,
+    nearest first, ties to the lower cell. Distances are the HOF fold
+    ``acc + (u - c) * (u - c)`` left to right over dimensions, vectorized
+    across rows and cells (no dot/sum/BLAS, whose summation order
+    differs), ordered by a stable argsort: bit-identical to the oracle."""
+    import numpy as np
+
+    d2 = np.zeros((len(u), len(cents)))
+    for j in range(cents.shape[1]):
+        diff = u[:, j, None] - cents[None, :, j]
+        d2 = d2 + diff * diff
+    return np.argsort(d2, axis=1, kind="stable")[:, :probes]
+
+
 def _ivf_assign(
     df: DataFrame,
     id_col: str,
@@ -345,49 +365,151 @@ def _ivf_assign(
 ) -> DataFrame:
     """The IVF quantizer as ONE ``mapInArrow``: per Arrow batch, the unit
     vectors (``_unit_rows``) and one row per (vector, cell) for its
-    ``probes`` nearest cells, nearest first, ties to the lower cell.
-    Distances are the HOF fold ``acc + (u - c) * (u - c)`` left to right
-    over dimensions, vectorized across rows and cells (no dot/sum/BLAS,
-    whose summation order differs), ordered by a stable argsort, so unit
-    vectors, cells and 6-dp sims stay bit-identical to the oracle.
-
-    ``probes=0`` only normalizes (no ``cell`` column); ``out_vec=None``
-    drops the unit vector; other columns of ``df`` are carried through.
-    A malformed vector raises ``MalformedVectorError`` whatever
-    ``spark.sql.ansi.enabled`` says: it can neither vanish nor score NULL."""
+    ``probes`` nearest cells (``_nearest_cells``), so unit vectors and
+    cells stay bit-identical to the oracle. ``out_vec=None`` drops the
+    unit vector. A malformed vector raises ``MalformedVectorError``
+    whatever ``spark.sql.ansi.enabled`` says: it can neither vanish nor
+    score NULL."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
 
     cents = np.asarray(centroids, dtype=np.float64)
     dim = cents.shape[1]
-    carried = [f.name for f in df.schema.fields if f.name not in (id_col, vec_col)]
     fields = [T.StructField(out_id, df.schema[id_col].dataType)]
-    fields += [df.schema[c] for c in carried]
     if out_vec:
         fields.append(T.StructField(out_vec, T.ArrayType(T.DoubleType())))
-    if probes:
-        fields.append(T.StructField("cell", T.IntegerType()))
+    fields.append(T.StructField("cell", T.IntegerType()))
 
     def assign(batches):
         for b in batches:
             u = _unit_rows(b, id_col, vec_col, dim)
-            rows, cell = np.arange(len(u)), []
-            if probes:
-                d2 = np.zeros((len(u), len(cents)))
-                for j in range(dim):
-                    diff = u[:, j, None] - cents[None, :, j]
-                    d2 = d2 + diff * diff
-                near = np.argsort(d2, axis=1, kind="stable")[:, :probes]
-                rows = np.repeat(rows, near.shape[1])
-                cell = [pa.array(near.ravel().astype(np.int32))]
-            cols = [b.column(c).take(rows) for c in (id_col, *carried)]
+            near = _nearest_cells(u, cents, probes)
+            rows = np.repeat(np.arange(len(u)), probes)
+            cols = [b.column(id_col).take(rows)]
             if out_vec:
                 offsets = pa.array(np.arange(len(rows) + 1, dtype=np.int32) * dim)
                 cols.append(pa.ListArray.from_arrays(offsets, pa.array(u[rows].ravel())))
-            yield pa.RecordBatch.from_arrays(cols + cell, names=[f.name for f in fields])
+            cols.append(pa.array(near.ravel().astype(np.int32)))
+            yield pa.RecordBatch.from_arrays(cols, names=[f.name for f in fields])
 
-    return df.mapInArrow(assign, T.StructType(fields))
+    return df.select(id_col, vec_col).mapInArrow(assign, T.StructType(fields))
+
+
+#: probing queries scored per block: one block's fold holds (this many
+#: queries × one cell's rows of one Arrow batch) doubles
+_QUERY_BLOCK = 128
+#: the kernel emits every candidate within this much of its query's k-th
+#: best raw sim in the block: wider than twice the 6-dp rounding
+#: half-width, so every candidate that can tie the k-th after rounding
+#: reaches Spark's ``match_id`` tie-break
+_TIE_MARGIN = 2e-6
+
+
+def _ivf_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    k: int,
+    probes: int,
+    cell_col: str | None = None,
+) -> DataFrame:
+    """IVF top-k as ONE corpus-side ``mapInArrow`` plus the rank window.
+
+    Per corpus Arrow batch the kernel normalizes every row
+    (``_unit_rows``), assigns its cell (``_nearest_cells``; or reads
+    ``cell_col`` when serving from postings), scores each cell's rows
+    against the queries probing that cell, and emits only each query's
+    top-k superset of the block: every non-self candidate whose raw sim
+    is at least the query's k-th best raw sim in the block minus
+    ``_TIE_MARGIN``. The score is the HOF dot's sequential left fold from
+    0.0 over dimensions, vectorized over the (queries × rows) block, so
+    raw sims are bit-identical to ``dot`` on the same unit vectors; Spark
+    then rounds to 6 dp and ranks (sim desc, match_id asc) as before. No
+    (query, candidate) pair row with vectors is ever materialized.
+
+    The query side reaches every task without a build-time job: a scalar
+    subquery packs the raw (id, vector) rows into one array (evaluated
+    once per execution) and only the first row of each corpus partition
+    carries it. Each task normalizes and assigns the queries itself, so
+    a malformed query raises ``MalformedVectorError`` in the worker."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    cents = np.asarray(centroids, dtype=np.float64)
+    dim = cents.shape[1]
+    packed = queries.select(
+        F.collect_list(F.struct(F.col(id_col), F.col(vec_col)))
+    ).scalar()
+    # monotonically_increasing_id restarts at partition_index << 33 in
+    # every task: low 33 bits zero marks the partition's first row
+    first = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1) == 0
+    cells = [cell_col] if cell_col else []
+    feed = corpus.select(
+        id_col, vec_col, *cells, F.when(first, packed).alias("__queries")
+    )
+    out = T.StructType([
+        T.StructField("query_id", queries.schema[id_col].dataType),
+        T.StructField("match_id", corpus.schema[id_col].dataType),
+        T.StructField("sim", T.DoubleType()),
+    ])
+
+    def score(batches):
+        probing = None
+        for b in batches:
+            if probing is None:
+                head = b.column("__queries")[0]
+                if not head.is_valid:
+                    raise RuntimeError("IVF kernel: partition's first row lacks the query block")
+                qb = pa.RecordBatch.from_struct_array(head.values)
+                qids = qb.column(id_col).to_numpy(zero_copy_only=False)
+                qu = _unit_rows(qb, id_col, vec_col, dim)
+                near = _nearest_cells(qu, cents, probes)
+                probing = [np.flatnonzero((near == c).any(axis=1)) for c in range(len(cents))]
+            u = _unit_rows(b, id_col, vec_col, dim)
+            if cell_col:
+                cell = b.column(cell_col).to_numpy(zero_copy_only=False)
+            else:
+                cell = _nearest_cells(u, cents, 1)[:, 0]
+            mids = b.column(id_col).to_numpy(zero_copy_only=False)
+            qo, mo, so = [], [], []
+            for c in np.unique(cell):
+                rows = np.flatnonzero(cell == c)
+                cu, cm = u[rows], mids[rows]
+                for lo in range(0, len(probing[c]), _QUERY_BLOCK):
+                    qs = probing[c][lo:lo + _QUERY_BLOCK]
+                    qv = qu[qs]
+                    acc = np.zeros((len(qs), len(rows)))
+                    for j in range(dim):
+                        acc = acc + qv[:, j, None] * cu[None, :, j]
+                    own = qids[qs, None] == cm[None, :]
+                    live = np.where(own, -np.inf, acc)
+                    kth = np.full(len(qs), -np.inf)
+                    if len(rows) > k:
+                        kth = np.partition(live, len(rows) - k, axis=1)[:, len(rows) - k]
+                    # a NaN sim (a vector with an infinite element) always
+                    # passes: Spark ranks NaN above every number
+                    keep = ((live >= kth[:, None] - _TIE_MARGIN) | np.isnan(acc)) & ~own
+                    qi, ri = np.nonzero(keep)
+                    qo.append(qs[qi])
+                    mo.append(rows[ri])
+                    so.append(acc[qi, ri])
+            if qo:
+                yield pa.RecordBatch.from_arrays(
+                    [qb.column(id_col).take(np.concatenate(qo)),
+                     b.column(id_col).take(np.concatenate(mo)),
+                     pa.array(np.concatenate(so))],
+                    names=out.names,
+                )
+
+    scored = feed.mapInArrow(score, out).select(
+        "query_id", "match_id", F.round(F.col("sim"), 6).alias("sim")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def ivf_ann_topk(
@@ -404,24 +526,11 @@ def ivf_ann_topk(
     query's ``probes`` nearest coarse cells. The non-hashing scale path next
     to ``lsh_ann_topk``. Corpus vectors live in exactly ONE cell, so probe
     candidate sets are disjoint — the multi-probe union needs no dedup.
-    Cells assigned on unit vectors; scoring is one dot."""
-    cents = ivf_centroids(n_cells, dim)
-    q = _ivf_assign(queries.select(id_col, vec_col), id_col, vec_col,
-                    "query_id", "qv", cents, max(probes, 1))
-    c = _ivf_assign(spread(corpus).select(id_col, vec_col), id_col, vec_col,
-                    "match_id", "cv", cents, 1)
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            F.round(dot(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    Cells assigned on unit vectors; scoring is one dot, all in the fused
+    corpus kernel ``_ivf_topk``. The builder runs no Spark job: the query
+    block is a scalar subquery, collected once per execution."""
+    return _ivf_topk(queries, spread(corpus), id_col, vec_col,
+                     ivf_centroids(n_cells, dim), k, max(probes, 1))
 
 
 def lsh_ann_topk(
@@ -1106,9 +1215,7 @@ def ivf_postings_roll(
             postings.select(id_col), inserts.select(id_col), dels, id_col
         )
 
-    ins = _ivf_assign(
-        inserts.select(id_col, vec_col), id_col, vec_col, id_col, None, cents, 1
-    )
+    ins = _ivf_assign(inserts, id_col, vec_col, id_col, None, cents, 1)
     surv = postings.join(dels, id_col, "left_anti")
     new_postings = surv.unionByName(ins)
 
@@ -1161,7 +1268,8 @@ def ivf_serve_from_postings(
     comes from the persisted index (a cell-keyed join / partition-pruned
     read), so per-query work is: assign the QUERY to its ``probes``
     nearest cells, pull only those cells' postings, point-join their
-    vectors from the corpus store by id, score one dot each.
+    vectors from the corpus store by id, and score them in the fused
+    kernel ``_ivf_topk``, which reads each row's cell from the postings.
 
     Law-tested identity: on a postings table consistent with the corpus
     (e.g. the output of a roll), this equals ``ivf_ann_topk`` recomputed
@@ -1169,34 +1277,14 @@ def ivf_serve_from_postings(
     sim, rank) with rank ≤ k per query.
     """
     cents = centroids if centroids is not None else ivf_centroids(n_cells, dim)
-    q = _ivf_assign(queries.select(id_col, vec_col), id_col, vec_col,
-                    "query_id", "qv", cents, max(probes, 1))
+    probes = max(probes, 1)
+    probed = _ivf_assign(queries, id_col, vec_col, id_col, None, cents, probes)
     cand = postings.join(
-        F.broadcast(q.select("cell").distinct()), "cell"
+        F.broadcast(probed.select("cell").distinct()), "cell"
     )  # partition-pruned read when postings is cell-partitioned parquet
-    # attach the postings' cell to the RAW corpus row first and normalize
-    # only the survivors (optimization r14, guide §2.3/§8): normalizing
-    # before the candidate join paid the 64-dim cast+norm for every corpus
-    # row, including the ones the probed cells were about to drop — under
-    # partition pruning the candidate set is the small side by design.
-    # The kernel's normalize-only mode (probes=0) carries the cell through.
-    c = _ivf_assign(
-        spread(corpus)
-        .join(cand.select(F.col(id_col), "cell"), id_col)
-        .select(id_col, vec_col, "cell"),
-        id_col, vec_col, "match_id", "cv", cents, 0,
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .filter(F.col("query_id") != F.col("match_id"))
-        .select(
-            "query_id",
-            "match_id",
-            F.round(dot(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("match_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    # attach the postings' cell to the RAW corpus row first, so the kernel
+    # normalizes only the probed cells' rows (optimization r14, guide
+    # §2.3/§8): under partition pruning the candidate set is the small side
+    # by design
+    c = spread(corpus).join(cand.select(F.col(id_col), "cell"), id_col)
+    return _ivf_topk(queries, c, id_col, vec_col, cents, k, probes, cell_col="cell")

@@ -15,12 +15,11 @@ on a key prefix so the join prunes partitions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.timefns import audit_timestamp
+from ..sources.readers import path_exists
 
 
 def with_audit(df: DataFrame, col_name: str = "insert_date") -> DataFrame:
@@ -48,11 +47,16 @@ def idempotent_append(
     key scan is under ``autoBroadcastJoinThreshold``, and AQE can upgrade
     the shuffled plan at runtime. ``True`` forces broadcast (known-tiny
     sink), ``False`` forces a shuffled hash anti-join (known-huge sink).
+
+    ``path`` may be any Hadoop URI (``file:``, ``hdfs:``, ``s3a:``) or a
+    bare path on the default filesystem. The existing keys are not
+    deduplicated: a left-anti join's output does not depend on how often
+    a key repeats on the right.
     """
     spark = df.sparkSession
     batch = df.dropDuplicates(keys)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path).select(*keys).dropDuplicates(keys)
+    if path_exists(spark, path):
+        existing = spark.read.parquet(path).select(*keys)
         if broadcast_existing is True:
             existing = F.broadcast(existing)
         elif broadcast_existing is False:

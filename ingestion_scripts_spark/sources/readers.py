@@ -80,6 +80,16 @@ def estimated_file_splits(spark: SparkSession, paths: list[str], stop_at: int) -
     return splits
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked through the Hadoop FileSystem client
+    (any scheme; a bare path resolves against the default filesystem, as
+    ``spark.read`` resolves it). ``os.path.exists`` is False for every
+    URI, ``file:`` ones included."""
+    jvm = spark.sparkContext._jvm
+    jp = jvm.org.apache.hadoop.fs.Path(path)
+    return jp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(jp)
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,

@@ -364,3 +364,18 @@ def test_acf_scans_facts_once(spark):
     p = plan(E.queries()["acf_daily"](spark, SF))
     assert "CartesianProduct" not in p
     assert p.count("lineitem.parquet") <= 1, p
+
+
+def test_ivf_search_is_one_fused_arrow_pass(spark):
+    """Ratchet: IVF search is one corpus-side Arrow kernel that scores
+    and prunes where candidates are produced. The pair-materializing
+    shape (a broadcast query join on cell, one row per (query,
+    candidate) carrying both vectors, an interpreted ``zip_with`` dot
+    per row) must not come back."""
+    import re
+
+    for name in ("ivf_ann_topk", "ivf_ann_topk_mp"):
+        p = plan(E.queries()[name](spark, SF))
+        assert len(re.findall(r"^\(\d+\) MapInArrow", p, re.M)) == 1, (name, p)
+        assert "BroadcastHashJoin" not in p, name
+        assert "zip_with" not in p, name

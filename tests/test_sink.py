@@ -33,6 +33,20 @@ def test_idempotent_append_broadcast_gate(spark, tmp_path):
         assert {r.k for r in got.select("k").collect()} == {"a", "b", "c"}
 
 
+def test_idempotent_append_uri_path(spark, tmp_path):
+    """A sink named by a ``file:`` URI still sees its existing keys. The
+    check was ``os.path.exists``, False for every URI, so the second
+    append skipped the anti-join and key 2 landed twice."""
+    path = (tmp_path / "sink").as_uri()
+    assert path.startswith("file:")
+    SK.idempotent_append(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+                         path, ["k"])
+    SK.idempotent_append(spark.createDataFrame([(2, "x"), (3, "c")], "k int, v string"),
+                         path, ["k"])
+    got = sorted(tuple(r) for r in spark.read.parquet(path).select("k", "v").collect())
+    assert got == [(1, "a"), (2, "b"), (3, "c")]
+
+
 def test_dead_letter_split(spark):
     df = spark.createDataFrame([(1, "ok"), (2, None), (3, "ok")], "id int, s string")
     good, dead = SK.dead_letter_split(df, F.col("s").isNotNull(), observe_name="obs")
