@@ -18,13 +18,24 @@ The discipline:
 ``MEMORY_AND_DISK`` means an unreleased cache degrades (evicts/spills)
 rather than OOMs, so forgetting to release is safe-but-wasteful — the
 registry turns "wasteful forever" into "released per query".
+
+Iterative kernels (connected components, BFS, k-core peeling, HITS, the
+greedy coreset and coverage selectors) run through one loop,
+:func:`fixpoint`. It checkpoints every round's state once
+(:func:`iterative_checkpoint`, so lineage never grows past one round),
+releases the previous generation as soon as the next is materialized and
+checked (:func:`release_local_checkpoint`, so at most two generations
+are live), applies one budget rule and raises one error,
+:class:`NotConvergedError`, when a convergence loop runs out of rounds.
+Kernels supply only the round step and, for a fixpoint, the test that a
+round changed nothing.
 """
 
 from __future__ import annotations
 
 import logging
-import os
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -75,19 +86,12 @@ def live_count() -> int:
 ITER_SER_THRESHOLD_BYTES = 256 << 20
 
 
-def _iter_level_mode() -> str:
-    """'auto' (size-conditional, default), 'always', or 'never' —
-    probe override via ``SPARK_GRAFT_ITER_SER`` (tools/quiet_probe A/B
-    and tools/deep_cc_probe use it; production paths leave it unset)."""
-    return os.environ.get("SPARK_GRAFT_ITER_SER", "auto").lower()
-
-
-#: bounded ring of auto-mode decisions (plan-stat estimate bytes,
+#: bounded ring of storage-level decisions (plan-stat estimate bytes,
 #: serialized?) — ADVICE r12: Catalyst's ``sizeInBytes`` after the joins
 #: that build round state can be off by orders of magnitude, and a
 #: wrong-but-successful estimate is otherwise invisible (an overestimate
 #: silently re-taxes small round state; an underestimate on a genuinely
-#: large frame re-exposes the OOM). Every auto decision is recorded here
+#: large frame re-exposes the OOM). Every decision is recorded here
 #: AND debug-logged, so probes/tests can assert the regime a loop actually
 #: ran in instead of inferring it from wall time. ``None`` estimate =
 #: plan-stat unavailable (exception fallback, safe/serialized direction).
@@ -109,7 +113,7 @@ def _record_iter_decision(est: int | None, ser: bool) -> None:
         if len(ITER_DECISIONS) > _ITER_DECISIONS_MAX:
             del ITER_DECISIONS[: -_ITER_DECISIONS_MAX]
     _log.debug(
-        "iterative_checkpoint auto: plan-stat est=%s bytes (threshold %d) "
+        "iterative_checkpoint: plan-stat est=%s bytes (threshold %d) "
         "-> %s",
         est,
         ITER_SER_THRESHOLD_BYTES,
@@ -137,22 +141,12 @@ def iterative_checkpoint(df: DataFrame) -> DataFrame:
     deep-regime OOM fix while returning registry-scale loops to the
     deserialized fast path. Hot multi-consumer checkpoints
     (global_rank's sorted layout) stay deserialized unconditionally."""
-    from pyspark.storagelevel import StorageLevel
-
-    mode = _iter_level_mode()
-    if mode == "always":
-        ser = True
-    elif mode == "never":
-        ser = False
-    else:
-        try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = None  # unknown → safe direction (serialized)
-        ser = est is None or est > ITER_SER_THRESHOLD_BYTES
-        _record_iter_decision(est, ser)
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        est = None  # unknown → safe direction (serialized)
+    ser = est is None or est > ITER_SER_THRESHOLD_BYTES
+    _record_iter_decision(est, ser)
     # PySpark naming: MEMORY_AND_DISK is the SERIALIZED level (the
     # Scala deserialized default is MEMORY_AND_DISK_DESER)
     level = (
@@ -165,8 +159,8 @@ def iterative_checkpoint(df: DataFrame) -> DataFrame:
 def release_local_checkpoint(df: DataFrame) -> bool:
     """Free the storage blocks behind a ``localCheckpoint()``-ed frame.
 
-    Iterative operators (alternating-star CC, BFS frontiers, HITS,
-    k-core peeling, k-means/coreset rounds) re-checkpoint per round;
+    Iterative kernels re-checkpoint per round (through :func:`fixpoint`,
+    the only caller);
     ``localCheckpoint`` pins each round's blocks in the BlockManager and
     driver-side GC releases them far too lazily through py4j finalizers
     — measured: a 16M-edge alternating-star run OOMed an 8 GiB heap on
@@ -190,3 +184,67 @@ def release_local_checkpoint(df: DataFrame) -> bool:
         return True
     except Exception:
         return False
+
+
+class NotConvergedError(RuntimeError):
+    """A :func:`fixpoint` loop was still changing its state when its
+    round budget ran out. Returning that state would be a silently wrong
+    answer (a mislabeled component, a half-peeled core), so the loop
+    raises instead."""
+
+
+def fixpoint(
+    step: Callable[[DataFrame, int], DataFrame],
+    init: DataFrame,
+    *,
+    rounds: int,
+    converged: Callable[[DataFrame, DataFrame], bool] | None = None,
+    name: str,
+) -> tuple[DataFrame, int]:
+    """Run an iterative kernel: ``state_r = step(state_{r-1}, r)`` for
+    ``r = 1, 2, ...``, starting from ``state_0 = init``.
+
+    Per round the loop checkpoints the step's (lazy) result with
+    :func:`iterative_checkpoint`, so every round plans against a
+    materialized frame and lineage stays one round deep. ``init`` is
+    generation 0: each generation's blocks are released once the next
+    is materialized and, for a convergence loop, checked — so a step
+    may read only the state it is given (plus frames the kernel built
+    before the loop), never an older generation, and must not be handed
+    an ``init`` that anything reads after the loop.
+
+    Budget:
+
+    * ``converged is None`` — a fixed unroll of ``rounds`` rounds.
+    * ``converged(prev, new)`` given (True when the round changed
+      nothing) — up to ``rounds`` rounds may change the state and one
+      more may observe that nothing changed. The loop stops at the first
+      unchanged round; a state still changing after ``rounds + 1``
+      rounds raises :class:`NotConvergedError` naming the kernel, the
+      rounds run and the budget.
+
+    A step ends the loop early by returning its input unchanged (an
+    empty BFS frontier, a peel round that removed nobody): nothing more
+    is checkpointed and that state is the result.
+
+    Returns ``(final state, rounds run)``.
+    """
+    state = init
+    budget = rounds if converged is None else rounds + 1
+    for r in range(1, budget + 1):
+        new = step(state, r)
+        if new is state:
+            return state, r - 1
+        new = iterative_checkpoint(new)
+        done = converged is not None and converged(state, new)
+        release_local_checkpoint(state)
+        state = new
+        if done:
+            return state, r
+    if converged is not None:
+        raise NotConvergedError(
+            f"{name} did not converge: still changing after {budget} rounds "
+            f"(budget: {rounds} rounds that may change the state + 1 that "
+            "observes no change); raise its round budget"
+        )
+    return state, max(rounds, 0)

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..caching import fixpoint
 from ..functions.lits import bigint_array
 
 
@@ -268,9 +270,9 @@ def kcenter_greedy(
 
     Spark shape: the working set carries a RUNNING ``dmin`` column —
     each round folds only the distance to the NEWEST center with
-    ``least(dmin, d_new)`` and localCheckpoints (the engine's lineage
-    rule: the round frame is read twice — top-1 probe + next update —
-    so without truncation the plan would double per round, the
+    ``least(dmin, d_new)`` and checkpoints (``caching.fixpoint``; the
+    engine's lineage rule: the round frame is read twice — top-1 probe +
+    next update — so without truncation the plan would double per round, the
     hits_scores 225 s class). Total work is O(k·n) single-center
     distance evaluations (vs O(k²·n) when every round re-embeds ALL
     picked centers as a k-deep ``least`` chain), expression depth and
@@ -311,30 +313,29 @@ def kcenter_greedy(
     seed = pts.orderBy("pid").limit(1).collect()[0]
     picked: list[tuple[int, int, int]] = [(1, seed["pid"], 0)]
 
-    # running min-distance-to-picked-set; identical to re-minimizing over
-    # every picked center each round (min folds associatively), so picks
-    # and radii are bit-identical to the unrolled form the oracle states
-    work = pts.select(
-        "pid", "v", dist_to(list(seed["v"])).alias("dmin")
-    ).localCheckpoint()
+    def pick_farthest(work: DataFrame) -> list[int]:
+        far = work.orderBy(F.desc("dmin"), F.asc("pid")).limit(1).collect()[0]
+        picked.append((len(picked) + 1, far["pid"], int(far["dmin"])))
+        return list(far["v"])
 
-    for rank in range(2, k + 1):
-        far = (
-            work.orderBy(F.desc("dmin"), F.asc("pid")).limit(1).collect()[0]
+    def fold_newest(work: DataFrame, _r: int) -> DataFrame:
+        return work.select(
+            "pid",
+            "v",
+            F.least(F.col("dmin"), dist_to(pick_farthest(work))).alias("dmin"),
         )
-        picked.append((rank, far["pid"], int(far["dmin"])))
-        if rank < k:
-            new_work = work.select(
-                "pid",
-                "v",
-                F.least(F.col("dmin"), dist_to(list(far["v"]))).alias("dmin"),
-            ).localCheckpoint()
-            # prior round's dmin checkpoint is dead once the new one
-            # materialized (r10 scale-probe OOM class; caching.py)
-            from ingestion_scripts_spark.caching import release_local_checkpoint
 
-            release_local_checkpoint(work)
-            work = new_work
+    if k > 1:
+        # running min-distance-to-picked-set; identical to re-minimizing
+        # over every picked center each round (min folds associatively),
+        # so picks and radii are bit-identical to the unrolled form the
+        # oracle states. Ranks 2..k-1 each fold their center into dmin;
+        # rank k is only picked.
+        work = pts.select(
+            "pid", "v", dist_to(list(seed["v"])).alias("dmin")
+        ).localCheckpoint()
+        work, _ = fixpoint(fold_newest, work, rounds=k - 2, name="kcenter_greedy")
+        pick_farthest(work)
 
     spark = df.sparkSession
     return spark.createDataFrame(

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from ..functions.lits import bigint_array
 
-from ..caching import iterative_checkpoint, release_local_checkpoint
+from ..caching import fixpoint, iterative_checkpoint
 from ..functions.text import hash64, let_, ngrams, tokenize_ws
 from .text_analysis import r4
 
@@ -772,11 +772,8 @@ def connected_components(
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
     )
-    labels = edges.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("comp")
-    )
-    prev_staged = None
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame, _r: int) -> DataFrame:
         nbr = (
             edges.join(
                 labels.select(F.col("node").alias("b"), "comp"), "b"
@@ -787,38 +784,30 @@ def connected_components(
         # carry the previous label through the checkpoint so the changed-
         # check is a scan of the materialized frame, not a node-keyed
         # self-join + shuffle per round (optimization r14, guide §2.4)
-        staged = iterative_checkpoint(
-            labels.join(nbr, labels.node == nbr.a, "left").select(
-                "node",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("__new"),
-                F.col("comp").alias("__prev"),
-            )
+        return labels.join(nbr, labels.node == nbr.a, "left").select(
+            "node",
+            F.least(
+                F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
+            ).alias("comp"),
+            F.col("comp").alias("__prev"),
         )
-        changed = (
-            staged.filter(F.col("__new") != F.col("__prev")).limit(1).count()
-        )
-        # the prior round's STAGED checkpoint (labels is a lazy projection
-        # of it) is dead once the new round materialized — release its
-        # blocks directly (the projection frame would no-op the helper)
-        if prev_staged is not None:
-            release_local_checkpoint(prev_staged)
-        prev_staged = staged
-        labels = staged.select("node", F.col("__new").alias("comp"))
-        if changed == 0:
-            break
-    else:
-        # exhausted max_iter while labels were still moving: the graph has
-        # a diameter longer than the round budget (long chains — the SNM /
-        # sorted-key topology). Returning here would yield silently WRONG
-        # components; fail loudly and point at the O(log diameter) engine.
-        raise ValueError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds the budget); use "
-            "connected_components_star for long-chain graphs"
-        )
-    return labels
+
+    # a budget too small for the component diameter (long chains — the
+    # SNM / sorted-key topology) raises instead of returning silently
+    # WRONG components; connected_components_star is the O(log diameter)
+    # engine for such graphs
+    labels, _ = fixpoint(
+        propagate,
+        edges.select(F.col("a").alias("node")).distinct().select(
+            "node", F.col("node").alias("comp")
+        ),
+        rounds=max_iter,
+        converged=lambda _prev, new: new.filter(
+            F.col("comp") != F.col("__prev")
+        ).limit(1).count() == 0,
+        name="connected_components",
+    )
+    return labels.select("node", "comp")
 
 
 def segment_dedup(
@@ -998,9 +987,13 @@ def connected_components_star(
     itself to m(u).
 
     Both steps are a groupBy(u) + min + re-emit — two keyed shuffles per
-    round, no driver state beyond the convergence check. Returns
-    (node, comp) for every node appearing in ``pairs``, identical to
-    ``connected_components`` output (differentially pinned in tests).
+    round and one checkpoint per round (``caching.fixpoint``). The loop
+    stops at the first round that leaves the edge set unchanged;
+    ``max_iter`` rounds may change it (a diameter up to ~2^max_iter) and
+    one more observes the fixed point — past that it raises
+    ``NotConvergedError``. Returns (node, comp) for every node appearing
+    in ``pairs``, identical to ``connected_components`` output
+    (differentially pinned in tests).
     """
     from .graph import symmetrize_distinct
 
@@ -1014,7 +1007,7 @@ def connected_components_star(
         edges.select(F.col("a").alias("node")).distinct()
     )
 
-    def _star_round(e: DataFrame) -> DataFrame:
+    def star_round(e: DataFrame, _r: int) -> DataFrame:
         # large-star: for each u, m = min(N(u) ∪ {u}); emit (v, m) for v in N(u), v > u
         nbr_min = e.groupBy("a").agg(
             F.least(F.min("b"), F.first("a")).alias("m")
@@ -1039,76 +1032,25 @@ def connected_components_star(
         )
         return symmetrize_distinct(small)
 
-    prev_cnt = edges.count()
-    converged = prev_cnt == 0
-    rounds_done = 0
-    # +2 detection slack: the windowed equality test sees a fixpoint
-    # reached at round R only at the next window boundary (≤ R+2), where
-    # the old per-round test saw it at R+1 — without the slack a graph
-    # converging at exactly round max_iter-1 would spuriously hit the
-    # unconverged error. Progress rounds are still bounded by max_iter's
-    # diameter-halving law; the confirmation round is verification, not
-    # progress, and is not budget-counted.
-    while rounds_done < max_iter + 2 and not converged:
-        # TWO rounds per localCheckpoint (optimization r15, §5 job count):
-        # the per-checkpoint fixed job cost dominated small-graph rounds
-        # (same measurement that rejected 5 checkpoints/round at ~2.5x),
-        # and two rounds keep lineage at 4 keyed shuffles off the previous
-        # checkpoint — still bounded. Convergence stays UNCONDITIONAL:
-        # E_{k+2} == E_k only *suggests* a fixpoint (it cannot distinguish
-        # one from a period-2 cycle of the round map by itself), so the
-        # suggestion is CONFIRMED by applying one more literal round and
-        # checking R(E) == E — the definition of the fixpoint, no appeal
-        # to the Kiveris potential argument. A genuine 2-cycle (none is
-        # believed to exist) would fail confirmation, keep looping, and
-        # hit the loud max_iter error — never silent wrong labels.
-        steps = min(2, max_iter + 2 - rounds_done)
-        cur = edges
-        for _ in range(steps):
-            cur = _star_round(cur)
-        new_und = iterative_checkpoint(cur)
-        rounds_done += steps
-
-        # Fixed-point convergence: stop when the window changed nothing.
-        # Both sides are DISTINCT undirected edge sets, so set equality is
-        # |A|==|B| plus one empty difference — exact, no shape heuristics.
-        # (An earlier star-shape predicate mis-flagged every hub→leaf edge
-        # of a finished star, so the loop silently ran all max_iter rounds.)
-        new_cnt = new_und.count()
-        same = new_cnt == prev_cnt and (
-            new_und.exceptAll(edges).limit(1).count() == 0
+    def unchanged(prev: DataFrame, new: DataFrame) -> bool:
+        # both sides are DISTINCT undirected edge sets, so they are equal
+        # iff their keyed full-outer diff is empty: exact set equality in
+        # one aggregate (a star-shape predicate is not exact — it flags
+        # every hub→leaf edge of a finished star as unfinished)
+        diff = prev.withColumn("__p", F.lit(1)).join(
+            new.withColumn("__n", F.lit(1)), ["a", "b"], "full_outer"
         )
-        # the previous window's checkpoint has no consumers past the
-        # convergence check above — release its blocks NOW, or ~log(D)
-        # dead edge sets accumulate in the BlockManager (measured: OOM at
-        # 16M edges / 8 GiB heap, r10 scale probe; caching.py docstring)
-        release_local_checkpoint(edges)
-        edges = new_und
-        prev_cnt = new_cnt
-        if same and steps == 2:
-            # confirmation round: E_{k+2} == E_k with two rounds inside the
-            # window — verify the fixpoint directly (R(E) == E)
-            conf = iterative_checkpoint(_star_round(edges))
-            conf_cnt = conf.count()
-            confirmed = conf_cnt == prev_cnt and (
-                conf.exceptAll(edges).limit(1).count() == 0
-            )
-            release_local_checkpoint(edges)
-            edges = conf
-            prev_cnt = conf_cnt
-            converged = confirmed
-        elif same:
-            # single-round window: E_{k+1} == E_k IS the fixpoint test
-            converged = True
+        return diff.agg(
+            F.count(F.when(F.col("__p").isNull() | F.col("__n").isNull(), 1))
+        ).first()[0] == 0
 
-    if not converged:
-        raise RuntimeError(
-            "connected_components_star did not reach a fixed point after "
-            f"{rounds_done} star rounds (budget: max_iter={max_iter} + 2 "
-            "detection-slack rounds; confirmation rounds not counted); raise "
-            "max_iter (diameter halves per round, so this needs a graph of "
-            "diameter > 2^max_iter)"
-        )
+    edges, _ = fixpoint(
+        star_round,
+        edges,
+        rounds=max_iter,
+        converged=unchanged,
+        name="connected_components_star",
+    )
 
     comp = edges.groupBy("a").agg(F.min("b").alias("m")).select(
         F.col("a").alias("node"),

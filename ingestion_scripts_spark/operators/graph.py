@@ -23,11 +23,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import (
-    iterative_checkpoint,
-    persist_tracked,
-    release_local_checkpoint,
-)
+from ..caching import fixpoint, iterative_checkpoint, persist_tracked
 
 #: Row cap under which a KNOWN-COUNT round-state frame (survivor set,
 #: BFS frontier, settled-label set) is broadcast into its per-round join
@@ -230,61 +226,52 @@ def bfs_hops(
     density) and connected components (reachability): hop distance says
     HOW FAR, not just whether, a node is from the seeds.
 
-    Frontier iteration: each round joins only the NEWLY-discovered
-    frontier against the edge list (anti-join against settled labels),
-    so a node is expanded exactly once and per-round cost is
-    O(frontier boundary), not O(visited). ``localCheckpoint`` truncates
-    lineage per round. ``max_hops`` bounds rounds (and state) — the
-    production form for "within k hops" questions; unreached nodes are
-    simply absent.
+    Frontier iteration: the state is the settled labels (node, hops);
+    round h joins only the frontier (hops == h-1) against the edge list
+    and keeps the nodes not yet labeled, so a node is expanded exactly
+    once and per-round cost is O(frontier boundary), not O(visited).
+    One checkpoint per round (``caching.fixpoint``). ``max_hops`` bounds
+    rounds (and state) — the production form for "within k hops"
+    questions; unreached nodes are simply absent. An empty frontier ends
+    the loop early.
 
     Returns (node, hops) with hops = exact minimal hop count <= max_hops.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     esym = iterative_checkpoint(symmetrize_distinct(e))
-    labels = iterative_checkpoint(
-        sources.select(F.col(node_col).alias("node"))
-        .distinct()
-        .withColumn("hops", F.lit(0).cast("bigint"))
-    )
-    # exact frontier/settled counts (the frontier count doubles as the
-    # emptiness convergence check, the settled count is a running sum —
-    # both free) let the per-hop joins broadcast their small side (r14,
-    # guide §3): checkpointed round state has no Catalyst stats, so the
-    # planner otherwise sort-merge-joins the FULL edge list against a
-    # frontier of a few thousand nodes every hop. Past the row cap the
-    # shuffled join returns — scale-adaptive, not a local[32] tune.
-    n_frontier = n_labels = labels.count()
-    frontier = labels.select("node")
-    for h in range(1, max_hops + 1):
+
+    def hop(labels: DataFrame, h: int) -> DataFrame:
+        # exact settled/frontier counts from one aggregate over the
+        # materialized labels: an empty frontier ends the loop, and the
+        # counts let the per-hop joins broadcast their small side (r14,
+        # guide §3): checkpointed round state has no runtime stats, so
+        # the planner otherwise sort-merge-joins the FULL edge list
+        # against a frontier of a few thousand nodes every hop. Past the
+        # row cap the shuffled join returns — scale-adaptive, not a
+        # local[32] tune.
+        n_labels, n_frontier = labels.agg(
+            F.count(F.lit(1)), F.count(F.when(F.col("hops") == h - 1, 1))
+        ).first()
+        if n_frontier == 0:
+            return labels
+        frontier = labels.filter(F.col("hops") == h - 1).select("node")
         reached = (
             _bc_if_small(frontier, n_frontier)
             .join(esym, frontier["node"] == esym["a"])
             .select(F.col("b").alias("node"))
             .distinct()
         )
-        fresh = iterative_checkpoint(
-            reached.join(
-                _bc_if_small(labels.select("node"), n_labels),
-                "node",
-                "left_anti",
-            )
+        fresh = reached.join(
+            _bc_if_small(labels.select("node"), n_labels), "node", "left_anti"
         )
-        n_frontier = fresh.count()
-        if n_frontier == 0:
-            break
-        n_labels += n_frontier
-        new_labels = iterative_checkpoint(
-            labels.union(fresh.withColumn("hops", F.lit(h).cast("bigint")))
-        )
-        # old labels and the consumed frontier checkpoint are dead once
-        # the new round materialized (r10 scale-probe OOM class; round-1
-        # frontier is a lazy Project, the helper no-ops on it)
-        release_local_checkpoint(labels)
-        if frontier is not fresh:
-            release_local_checkpoint(frontier)
-        labels = new_labels
-        frontier = fresh
+        return labels.union(fresh.withColumn("hops", F.lit(h).cast("bigint")))
+
+    seeds = iterative_checkpoint(
+        sources.select(F.col(node_col).alias("node"))
+        .distinct()
+        .withColumn("hops", F.lit(0).cast("bigint"))
+    )
+    labels, _ = fixpoint(hop, seeds, rounds=max_hops, name="bfs_hops")
     return labels
 
 
@@ -313,13 +300,20 @@ def hits_int(
     driver state beyond the loop counter — same scale shape as
     ``pagerank_int``.
 
-    ``localCheckpoint`` per half-round is load-bearing, not a tuning
-    knob: each rescale references its raw-sum frame TWICE (the 1-row max
-    and the division), so without truncation the logical plan doubles
-    every half-round — 2^(2·iters) re-derivations of the upstream edge
-    build (measured: 225 s for a sub-second graph at sf0.01). The edge
-    set and node list are checkpointed once for the same reason (each is
-    read twice per iteration)."""
+    The state is one (node, h, a) frame of RAW sums, checkpointed per
+    half-round (``caching.fixpoint``, ``2·iters`` rounds): odd rounds
+    replace ``a`` from the rescaled ``h``, even rounds ``h`` from the
+    rescaled ``a``. The per-half-round checkpoint is load-bearing, not a
+    tuning knob: each rescale references its raw-sum frame TWICE (the
+    1-row max and the division), so without truncation the logical plan
+    doubles every half-round — 2^(2·iters) re-derivations of the
+    upstream edge build (measured: 225 s for a sub-second graph at
+    sf0.01). Rescaling from the materialized frame keeps each round's
+    plan to one join + one aggregate; one checkpoint per iteration
+    instead re-plans the first half's aggregate under the second half
+    and measured ~1.3× slower at sf0.1. The edge set and node list are
+    checkpointed once for the same reason (each is read twice per
+    iteration)."""
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -331,52 +325,43 @@ def hits_int(
         .distinct()
         .localCheckpoint()
     )
-    hub = nodes.select("node", F.lit(1_000_000).cast("bigint").alias("h"))
-    auth = None
-    # one-generation checkpoint lag: iteration i's a_all/h_all stay live
-    # while anything lazy still reads them (auth_i feeds h_raw_i; hub_i
-    # feeds a_raw_{i+1}); the generation BEFORE that is dead and released
-    # (r10 scale-probe OOM class). The final a_all/h_all back the returned
-    # auth/hub and are never released.
-    prev_a_all = prev_h_all = None
-    for _ in range(iters):
-        a_raw = (
-            e.join(hub, e.src == hub.node)
-            .select(F.col("dst").alias("node"), (F.col("w") * F.col("h")).alias("x"))
+
+    def rescaled(state: DataFrame, col: str, out: str) -> DataFrame:
+        # (node, out): the raw sums scaled so the max is exactly 1e6
+        mx = state.agg(F.max(col).alias("__max"))
+        return state.crossJoin(F.broadcast(mx)).select(
+            "node",
+            F.expr(f"({col} * 1000000) div greatest(__max, 1L)")
+            .cast("bigint")
+            .alias(out),
+        )
+
+    def half_round(state: DataFrame, r: int) -> DataFrame:
+        # authority a(v) = Σ w·h(u) over edges u→v; hub h(u) = Σ w·a(v)
+        if r % 2:
+            score, out, frm, to = "h", "a", "src", "dst"
+        else:
+            score, out, frm, to = "a", "h", "dst", "src"
+        scaled = rescaled(state, score, "s")
+        raw = (
+            e.join(scaled, e[frm] == scaled.node)
+            .select(F.col(to).alias("node"), (F.col("w") * F.col("s")).alias("x"))
             .groupBy("node")
-            .agg(F.sum("x").cast("bigint").alias("ar"))
+            .agg(F.sum("x").alias("x"))
         )
-        a_all = nodes.join(a_raw, "node", "left").select(
-            "node", F.coalesce(F.col("ar"), F.lit(0)).cast("bigint").alias("ar")
+        # every node stays in the state: 0 when it has no in/out edge
+        return state.select("node", score).join(raw, "node", "left").select(
+            "node", score, F.coalesce(F.col("x"), F.lit(0)).cast("bigint").alias(out)
         )
-        a_all = iterative_checkpoint(a_all)
-        if prev_h_all is not None:
-            release_local_checkpoint(prev_h_all)  # hub_{i-1} fully consumed
-        if prev_a_all is not None:
-            release_local_checkpoint(prev_a_all)  # auth_{i-1} fully consumed
-        amax = a_all.agg(F.max("ar").alias("__amax"))
-        auth = a_all.crossJoin(F.broadcast(amax)).select(
-            "node", F.expr("(ar * 1000000) div greatest(__amax, 1L)").cast("bigint").alias("a")
-        )
-        h_raw = (
-            e.join(auth, e.dst == auth.node)
-            .select(F.col("src").alias("node"), (F.col("w") * F.col("a")).alias("x"))
-            .groupBy("node")
-            .agg(F.sum("x").cast("bigint").alias("hr"))
-        )
-        h_all = nodes.join(h_raw, "node", "left").select(
-            "node", F.coalesce(F.col("hr"), F.lit(0)).cast("bigint").alias("hr")
-        )
-        h_all = iterative_checkpoint(h_all)
-        hmax = h_all.agg(F.max("hr").alias("__hmax"))
-        hub = h_all.crossJoin(F.broadcast(hmax)).select(
-            "node", F.expr("(hr * 1000000) div greatest(__hmax, 1L)").cast("bigint").alias("h")
-        )
-        prev_a_all, prev_h_all = a_all, h_all
-    return hub.join(auth, "node").select(
+
+    init = nodes.select(
         "node",
-        F.col("h").alias("hub_u"),
-        F.col("a").alias("auth_u"),
+        F.lit(1).cast("bigint").alias("h"),
+        F.lit(None).cast("bigint").alias("a"),
+    )
+    state, _ = fixpoint(half_round, init, rounds=2 * iters, name="hits_int")
+    return rescaled(state, "h", "hub_u").join(
+        rescaled(state, "a", "auth_u"), "node"
     )
 
 
@@ -397,18 +382,18 @@ def kcore_peel(
 
     Spark shape: the UNDIRECTED edge set is symmetrized once; each round
     is two semi-joins (edge endpoints against the survivor set) + one
-    keyed count — all shuffles keyed by node, no driver state. A round's
-    survivor set is ``localCheckpoint``-ed: peeling rounds chain plans
-    (round r reads round r-1's survivors twice), so truncating lineage
-    keeps the plan linear in ``rounds`` instead of exponential — the
-    same idiom as ``dedup.connected_components_star``.
+    keyed count — all shuffles keyed by node, no driver state. The
+    round state is the survivor set WITH its core_deg, checkpointed once
+    per round (``caching.fixpoint``): peeling rounds chain plans (round r
+    reads round r-1's survivors twice), so truncating lineage keeps the
+    plan linear in ``rounds`` instead of exponential.
 
     ``rounds`` is a FIXED unroll, not run-to-convergence — the DuckDB
     oracle unrolls the identical chain, so both engines compute the same
     (possibly pre-fixpoint) set and the differential is exact. Peeling
     removes at least one node per non-converged round within any finite
     graph's peel depth; callers pick ``rounds`` >= the expected peel
-    depth and the law test (tests/test_r6_graph_laws.py) pins fixpoint
+    depth and the law test (tests/test_r6_new_ops.py) pins fixpoint
     on the query's actual graph.
 
     Returns survivors as (node, core_deg) — core_deg is the node's
@@ -418,53 +403,45 @@ def kcore_peel(
     # the symmetrized edge set is read TWICE PER ROUND (once per endpoint
     # semi-join); checkpointing it once stops every round from re-running
     # the caller's upstream edge build (often itself a self-join)
-    ed = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ed = iterative_checkpoint(
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     )
-    ed = iterative_checkpoint(ed)
-    alive = iterative_checkpoint(
-        ed.select(F.col("a").alias("node")).distinct()
-    )
-    # exact survivor count per round (a cheap scan of the just-
-    # materialized checkpoint) drives two optimizations (r14, guide
-    # §2/§3): (1) the survivor side broadcasts into both endpoint
-    # semi-joins once it fits — checkpointed state has no stats, so
-    # without this every round is 2 SortMergeJoins with full exchanges;
-    # (2) an unchanged count means fixpoint (survivors only ever
-    # shrink), so later rounds are provably identity and the loop exits
-    # — the fixed unroll stays result-identical because deg at fixpoint
-    # equals deg after any number of further rounds.
-    n_alive = alive.count()
-    deg = None
-    # two-generation checkpoint lag: the returned deg is LAZY over the
-    # previous round's alive, so only the generation before THAT is dead
-    # when a new round materializes (r10 scale-probe OOM class)
-    dead = None
-    for _ in range(rounds):
+    # exact survivor count per round (a cheap scan of the materialized
+    # checkpoint) drives two optimizations (r14, guide §2/§3): (1) the
+    # survivor side broadcasts into both endpoint semi-joins once it fits
+    # — checkpointed state has no runtime stats, so without this every
+    # round is 2 SortMergeJoins with full exchanges; (2) an unchanged
+    # count means fixpoint (survivors only ever shrink), so later rounds
+    # are provably identity and the loop ends — the fixed unroll stays
+    # result-identical because core_deg at fixpoint equals core_deg
+    # after any number of further rounds.
+    counts: list[int] = []
+
+    def peel(alive: DataFrame, _r: int) -> DataFrame:
+        counts.append(alive.count())
+        if len(counts) > 1 and counts[-1] == counts[-2]:
+            return alive
         live = ed.join(
-            _bc_if_small(alive.select(F.col("node").alias("a")), n_alive),
+            _bc_if_small(alive.select(F.col("node").alias("a")), counts[-1]),
             "a",
         ).join(
-            _bc_if_small(alive.select(F.col("node").alias("b")), n_alive),
+            _bc_if_small(alive.select(F.col("node").alias("b")), counts[-1]),
             "b",
         )
-        deg = (
+        return (
             live.groupBy("a")
             .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
             .select(F.col("a").alias("node"), "core_deg")
+            .filter(F.col("core_deg") >= k)
         )
-        new_alive = iterative_checkpoint(
-            deg.filter(F.col("core_deg") >= k).select("node")
-        )
-        n_new = new_alive.count()
-        if dead is not None:
-            release_local_checkpoint(dead)
-        dead = alive
-        alive = new_alive
-        if n_new == n_alive:
-            break
-        n_alive = n_new
-    return deg.filter(F.col("core_deg") >= k)
+
+    nodes = iterative_checkpoint(
+        ed.select(F.col("a").alias("node"))
+        .distinct()
+        .withColumn("core_deg", F.lit(None).cast("bigint"))
+    )
+    alive, _ = fixpoint(peel, nodes, rounds=rounds, name="kcore_peel")
+    return alive
 
 
 def personalized_pagerank_int(

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..caching import fixpoint
 from ..functions.lits import string_array
 
 from ..functions.text import PUNCT_CLASS, hash64, tokenize_ws
@@ -499,14 +501,15 @@ def max_coverage_select(df, id_col: str, tokens_col: str, k: int = 5):
     carries RESIDUAL (not-yet-covered) tokens; each round picks the doc
     with the largest residual (one narrow map + top-1 TakeOrdered, no
     shuffle), then subtracts only the NEWEST pick's residual tokens from
-    every row via a broadcast 1-row frame + ``array_except`` and
-    localCheckpoints (the round frame is read twice — probe + update —
-    the engine's lineage rule). Plan size is therefore CONSTANT in k and
-    in the covered-vocabulary size: no ``~isin(picked_ids)`` literal
-    list, no O(k·|covered|) embedded array (the retired form was a
-    plan-size bomb at k=500); the newest pick's tokens travel as DATA,
-    not literals. Driver state is one pick's residual per round, bounded
-    by max-doc-tokens, never corpus-sized.
+    every row (``array_except`` against one array literal — a narrow map)
+    and checkpoints (``caching.fixpoint``; the round frame is read twice
+    — probe + update — the engine's lineage rule). Plan size is therefore
+    CONSTANT in k and in the covered-vocabulary size: the checkpoint
+    truncates each round's plan, so it only ever holds the newest pick's
+    residual (bounded by max-doc-tokens) — no ``~isin(picked_ids)``
+    literal list, no O(k·|covered|) embedded array (the retired form was
+    a plan-size bomb at k=500). Driver state is one pick's residual per
+    round, never corpus-sized.
 
     Determinism: gains are exact integers; ties break to the smallest
     id; picked docs are excluded by an id filter folded into each
@@ -540,36 +543,36 @@ def max_coverage_select(df, id_col: str, tokens_col: str, k: int = 5):
     work = spread(work).localCheckpoint()
 
     picked: list[tuple[int, int, int]] = []
-    for rank in range(1, k + 1):
+
+    def pick(work):
         top = (
             work.select("pid", "t", F.size("t").alias("gain"))
             .orderBy(F.desc("gain"), F.asc("pid"))
             .limit(1)
             .collect()
         )
-        if not top:
-            break
-        row = top[0]
-        picked.append((rank, row["pid"], int(row["gain"])))
-        if rank < k:
-            # the pick's RESIDUAL tokens are exactly the newly covered
-            # vocabulary (earlier picks' tokens are already subtracted),
-            # so one array_except per round keeps every row's t equal to
-            # tokens-minus-all-covered — same sets as re-subtracting the
-            # full covered vocabulary each round
-            cov = spark.createDataFrame([(list(row["t"]),)], "cov array<string>")
-            new_work = (
-                work.filter(F.col("pid") != F.lit(row["pid"]))
-                .crossJoin(F.broadcast(cov))
-                .select("pid", F.array_except("t", "cov").alias("t"))
-                .localCheckpoint()
-            )
-            # prior round's residual checkpoint is dead once the new one
-            # materialized (r10 scale-probe OOM class; caching.py)
-            from ingestion_scripts_spark.caching import release_local_checkpoint
+        if top:
+            picked.append((len(picked) + 1, top[0]["pid"], int(top[0]["gain"])))
+        return top
 
-            release_local_checkpoint(work)
-            work = new_work
+    def cover(work, _r):
+        top = pick(work)
+        if not top:
+            return work  # every doc picked: nothing left to cover
+        # the pick's RESIDUAL tokens are exactly the newly covered
+        # vocabulary (earlier picks' tokens are already subtracted), so
+        # one array_except per round keeps every row's t equal to
+        # tokens-minus-all-covered — same sets as re-subtracting the full
+        # covered vocabulary each round
+        cov = string_array(top[0]["t"]).cast("array<string>")
+        return work.filter(F.col("pid") != F.lit(top[0]["pid"])).select(
+            "pid", F.array_except("t", cov).alias("t")
+        )
+
+    # ranks 1..k-1 each subtract their pick's tokens; rank k is only picked
+    work, _ = fixpoint(cover, work, rounds=k - 1, name="max_coverage_select")
+    if len(picked) == k - 1:
+        pick(work)
     return spark.createDataFrame(picked, "rank bigint, doc_id bigint, gain bigint")
 
 

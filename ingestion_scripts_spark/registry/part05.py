@@ -857,6 +857,22 @@ ORDER BY item_a, item_b
 """
 
 
+def _coorder_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-order graph shared by the graph queries: one (a, b, w)
+    row per part pair a < b that is co-ordered in w >= 2 orders."""
+    li = _t(spark, sf_dir, "lineitem")
+    b = li.select(
+        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
+    ).distinct()
+    x, y = b.alias("x"), b.alias("y")
+    return (
+        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
+        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= 2)
+    )
+
+
 def q_triangle_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle counting + local clustering coefficient over the part
     co-order graph (edge = two parts co-ordered in >= 2 orders). The
@@ -867,18 +883,7 @@ def q_triangle_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts the same exact BIGINTs."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    edges = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("a", "b")
-    )
+    edges = _coorder_edges(spark, sf_dir).select("a", "b")
     return G.triangle_stats(edges, "a", "b").orderBy("node")
 
 

@@ -26,6 +26,7 @@ from ingestion_scripts_spark.operators import similarity as SIM
 from ingestion_scripts_spark.operators import text_analysis as TA
 
 from ingestion_scripts_spark.registry.part05 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 
@@ -443,18 +444,7 @@ def q_bfs_hops_coorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure is O(nodes * hops)."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    edges = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("a", "b")
-    )
+    edges = _coorder_edges(spark, sf_dir).select("a", "b")
     nodes = edges.select(F.col("a").alias("node")).union(
         edges.select(F.col("b").alias("node"))
     ).distinct()
@@ -794,36 +784,25 @@ FROM fp ORDER BY doc_id
 # r4 batch 17: seeded label propagation, join-size estimation harness
 # ---------------------------------------------------------------------------
 
-def q_label_spread_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seeded label propagation (semi-supervised community assignment)
-    over the part co-order graph: seeds (partkey % 97 == 0) carry their
-    own id as label; two UNROLLED rounds assign every node the weighted
-    majority label of its labeled neighbors (edge weight = co-order
-    count; ties → smallest label); seeds stay clamped. Unlike BFS/CC the
-    rounds are unrolled INTO the plan — zero driver actions at build,
-    each round is one keyed join + one keyed argmax. The community
-    complement to connected components: labels compete, they don't just
-    flood."""
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    e = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-    )
+def _coorder_label_spread(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The 2-round seeded label spread over the part co-order graph that
+    label_spread_communities returns and community_modularity scores.
+    Returns ``(e, labels)``: the co-order edges (a, b, w) and the round-2
+    (node, label) assignment.
+
+    Persist policy: the edges, the seed set and each round's labels are
+    persisted once. Each is read several times downstream (every round
+    reads the seeds 3x — vote join, clamp anti-join, clamp union —
+    modularity reads the edges and final labels 3x); left lazy, the
+    vote-join + window-argmax lineage re-expands at every reference
+    (~104 cache scans with the whole aggregation tree above each
+    re-executed; sf0.1 plan, r14, guide §1.2/§2.4)."""
+    e = persist_tracked(_coorder_edges(spark, sf_dir))
     esym = e.union(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
     )
-    esym = persist_tracked(esym)
-    # seeds are consumed 3x per spread round (vote join, clamp anti-join,
-    # clamp union) — persisted so the distinct-over-edges shuffle runs
-    # once, and each spread round's vote-join + window-argmax lineage is
-    # similarly pinned below instead of re-expanding at every reference
-    # (r14, guide §1.2/§2.4)
     seeds = persist_tracked(
         esym.select(F.col("a").alias("node"))
         .distinct()
@@ -849,14 +828,30 @@ def q_label_spread_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         return winner.join(seeds.select("node"), "node", "left_anti").unionByName(
             seeds
         )
-    labels = spread(persist_tracked(spread(seeds)))
+
+    return e, persist_tracked(spread(persist_tracked(spread(seeds))))
+
+
+def q_label_spread_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seeded label propagation (semi-supervised community assignment)
+    over the part co-order graph: seeds (partkey % 97 == 0) carry their
+    own id as label; two UNROLLED rounds assign every node the weighted
+    majority label of its labeled neighbors (edge weight = co-order
+    count; ties → smallest label); seeds stay clamped. Unlike BFS/CC the
+    rounds are unrolled INTO the plan — zero driver actions at build,
+    each round is one keyed join + one keyed argmax. The community
+    complement to connected components: labels compete, they don't just
+    flood."""
+    _, labels = _coorder_label_spread(spark, sf_dir)
     return labels.select(
         F.col("node").cast("bigint").alias("node"),
         F.col("label").cast("bigint").alias("label"),
     ).orderBy("node")
 
 
-SQL_LABEL_SPREAD = """
+#: co-order graph + 2-round seeded spread CTEs (ending in r2), shared by
+#: the label_spread_communities and community_modularity twins
+_SQL_LABEL_SPREAD_CTES = """
 WITH bsk AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
 e AS (
   SELECT x.it AS a, y.it AS b, count(*) AS w
@@ -889,7 +884,9 @@ r2w AS (
     FROM r2v) WHERE rn = 1),
 r2 AS (
   SELECT node, label FROM r2w WHERE node NOT IN (SELECT node FROM seeds)
-  UNION ALL SELECT node, label FROM seeds)
+  UNION ALL SELECT node, label FROM seeds)"""
+
+SQL_LABEL_SPREAD = _SQL_LABEL_SPREAD_CTES + """
 SELECT CAST(node AS BIGINT) AS node, CAST(label AS BIGINT) AS label
 FROM r2 ORDER BY node
 """
@@ -1673,18 +1670,7 @@ def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     count comparison caught; both engines unroll the same 12)."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    edges = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("a", "b")
-    )
+    edges = _coorder_edges(spark, sf_dir).select("a", "b")
     return G.kcore_peel(edges, "a", "b", k=3, rounds=12).orderBy("node")
 
 

@@ -15,6 +15,7 @@ from ingestion_scripts_spark.functions import text as X
 from ingestion_scripts_spark.operators import text_analysis as TA
 from ingestion_scripts_spark.registry import part06 as _prev
 from ingestion_scripts_spark.registry.part06 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 def q_ndcg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,17 +225,7 @@ def q_ppr_coorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the actual scheduling signal."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    e0 = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-        .filter(F.col("w") >= 2)
-    )
+    e0 = _coorder_edges(spark, sf_dir)
     edges = e0.select("a", "b", "w").union(
         e0.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
     )

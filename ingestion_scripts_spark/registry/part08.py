@@ -15,6 +15,11 @@ from ingestion_scripts_spark.functions import text as X
 from ingestion_scripts_spark.operators import similarity as SIM
 from ingestion_scripts_spark.registry import part07 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part07 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part05 import _coorder_edges
+from ingestion_scripts_spark.registry.part06 import (
+    _SQL_LABEL_SPREAD_CTES,
+    _coorder_label_spread,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -277,18 +282,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     are excluded by construction (both engines), bounding wedge volume."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    edges = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("a", "b")
-    )
+    edges = _coorder_edges(spark, sf_dir).select("a", "b")
     out = G.link_prediction_scores(edges, "a", "b", max_degree=500)
     return out.orderBy(F.desc("aa_micro"), "u", "w").limit(100)
 
@@ -598,91 +592,11 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition is total; one divide at the end."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    e = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-    )
-    e = persist_tracked(e)
-    esym = e.select("a", "b", "w").union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-    )
-    # the seed set and each spread round are consumed MANY times
-    # downstream (each spread reads seeds 3x; modularity reads the final
-    # labels 3x) — left lazy, the vote-join + window-argmax lineage
-    # re-expands at every reference (~104 cache scans with the whole
-    # aggregation tree above each re-executed; sf0.1 plan, r14). Persist
-    # each round once: the plan collapses to one vote-join + one argmax
-    # per round (guide §1.2/§2.4, same fix as sparse_cosine_pairs).
-    seeds = persist_tracked(
-        esym.select(F.col("a").alias("node"))
-        .distinct()
-        .where(F.col("node") % 97 == 0)
-        .select("node", F.col("node").alias("label"))
-    )
-
-    def spread(labels: DataFrame) -> DataFrame:
-        votes = (
-            esym.join(labels, esym["b"] == labels["node"])
-            .groupBy(F.col("a").alias("node"), "label")
-            .agg(F.sum("w").alias("votes"))
-        )
-        w_rank = Window.partitionBy("node").orderBy(
-            F.desc("votes"), F.asc("label")
-        )
-        winner = (
-            votes.withColumn("rn", F.row_number().over(w_rank))
-            .where(F.col("rn") == 1)
-            .select("node", "label")
-        )
-        return winner.join(
-            seeds.select("node"), "node", "left_anti"
-        ).unionByName(seeds)
-
-    labels = persist_tracked(spread(persist_tracked(spread(seeds))))
+    e, labels = _coorder_label_spread(spark, sf_dir)
     return G.modularity(e.select("a", "b"), labels)
 
 
-SQL_COMMUNITY_MODULARITY = """
-WITH bsk AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS it FROM lineitem),
-e AS (
-  SELECT x.it AS a, y.it AS b, count(*) AS w
-  FROM bsk x JOIN bsk y ON x.bk = y.bk AND x.it < y.it
-  GROUP BY 1, 2 HAVING count(*) >= 2),
-esym AS (SELECT a, b, w FROM e UNION ALL SELECT b, a, w FROM e),
-seeds AS (
-  SELECT node, node AS label
-  FROM (SELECT DISTINCT a AS node FROM esym) WHERE node % 97 = 0),
-r1v AS (
-  SELECT es.a AS node, s.label, CAST(sum(es.w) AS BIGINT) AS votes
-  FROM esym es JOIN seeds s ON es.b = s.node GROUP BY 1, 2),
-r1w AS (
-  SELECT node, label FROM (
-    SELECT node, label,
-           row_number() OVER (PARTITION BY node
-                              ORDER BY votes DESC, label ASC) AS rn
-    FROM r1v) WHERE rn = 1),
-r1 AS (
-  SELECT node, label FROM r1w WHERE node NOT IN (SELECT node FROM seeds)
-  UNION ALL SELECT node, label FROM seeds),
-r2v AS (
-  SELECT es.a AS node, l.label, CAST(sum(es.w) AS BIGINT) AS votes
-  FROM esym es JOIN r1 l ON es.b = l.node GROUP BY 1, 2),
-r2w AS (
-  SELECT node, label FROM (
-    SELECT node, label,
-           row_number() OVER (PARTITION BY node
-                              ORDER BY votes DESC, label ASC) AS rn
-    FROM r2v) WHERE rn = 1),
-r2 AS (
-  SELECT node, label FROM r2w WHERE node NOT IN (SELECT node FROM seeds)
-  UNION ALL SELECT node, label FROM seeds),
+SQL_COMMUNITY_MODULARITY = _SQL_LABEL_SPREAD_CTES + """,
 nodes AS (SELECT DISTINCT a AS node FROM esym),
 full_l AS (
   SELECT n.node, coalesce(r2.label, n.node) AS lab

@@ -16,6 +16,7 @@ from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.functions import text as X
 from ingestion_scripts_spark.registry import part09 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part09 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 # ---------------------------------------------------------------------------
@@ -256,18 +257,7 @@ def q_coorder_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     div."""
     from ingestion_scripts_spark.operators import graph as G
 
-    li = _t(spark, sf_dir, "lineitem")  # noqa: F405
-    b = li.select(
-        F.col("l_orderkey").alias("bk"), F.col("l_partkey").alias("it")
-    ).distinct()
-    x, y = b.alias("x"), b.alias("y")
-    edges = (
-        x.join(y, (F.col("x.bk") == F.col("y.bk")) & (F.col("x.it") < F.col("y.it")))
-        .groupBy(F.col("x.it").alias("a"), F.col("y.it").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("a", "b")
-    )
+    edges = _coorder_edges(spark, sf_dir).select("a", "b")
     return G.transitivity(edges, "a", "b")
 
 

@@ -74,12 +74,13 @@ def test_plain_cc_raises_instead_of_truncating(spark):
     round budget — a silently mislabeled long chain is how ER-style graphs
     corrupt downstream dedup (caught live on snm chains at sf0.1)."""
     import pytest as _pytest
+    from ingestion_scripts_spark.caching import NotConvergedError
     from ingestion_scripts_spark.operators import dedup as D
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["id_a", "id_b"]
     )
-    with _pytest.raises(ValueError, match="did not converge"):
+    with _pytest.raises(NotConvergedError, match="did not converge"):
         D.connected_components(chain, max_iter=3).collect()
     # with budget >= diameter it converges to one component
     ok = D.connected_components(chain, max_iter=31).collect()
@@ -98,13 +99,17 @@ def test_default_components_is_star():
 
 def test_star_cc_unconverged_error_reports_rounds_run(spark):
     """A path of length 64 has diameter 64 > 2^2: with max_iter=2 the star
-    loop exhausts its max_iter + 2 round budget and must say how many star
-    rounds it actually ran (4), not just max_iter."""
+    loop exhausts its budget of max_iter changing rounds + 1 observing
+    round and must say how many rounds it actually ran (3), not just
+    max_iter."""
+    from ingestion_scripts_spark.caching import NotConvergedError
+
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "id_a bigint, id_b bigint"
     )
     with pytest.raises(
-        RuntimeError,
-        match=r"after 4 star rounds \(budget: max_iter=2 \+ 2 detection-slack",
+        NotConvergedError,
+        match=r"connected_components_star did not converge: still changing "
+        r"after 3 rounds \(budget: 2 rounds that may change the state \+ 1",
     ):
         connected_components_star(chain, max_iter=2)

@@ -312,6 +312,12 @@ GLOBAL_SORT_ALLOWLIST = {
     # ivf_roll_serve's is the per-query rank presentation, same contract
     # as the allowlisted ivf_ann_topk/lsh_ann_topk family
     'hot_bucket_sweep', 'ivf_roll_serve',
+    # kcore_peel now returns its last round checkpoint (survivors with
+    # core_deg) instead of a lazy re-aggregation over the previous round,
+    # so the same terminal orderBy("node") of the k-core sits on a
+    # checkpoint scan the audit counts as unbounded — the same shape as
+    # the allowlisted bfs_hops_coorder
+    'kcore_parts',
     'parse_struct_time', 'parse_zoned', 'pii_scrub',
     'pinball_loss_sources', 'ppr_coorder', 'quality_gate',
     'quality_score', 'rate_limit_replay', 'repetition_signals',

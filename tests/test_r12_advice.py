@@ -13,14 +13,12 @@
 4. (tools/deep_cc_probe.py docstring fix — no runtime surface.)
 
 Plus the r12 `iterative_checkpoint` size-conditional level (VERDICT r11
-item 1): deserialized below ITER_SER_THRESHOLD_BYTES, serialized above,
-env-overridable for probes.
+item 1): deserialized below ITER_SER_THRESHOLD_BYTES, serialized above.
 """
 
 from __future__ import annotations
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from ingestion_scripts_spark import caching
@@ -142,15 +140,6 @@ def test_iterative_checkpoint_big_estimate_serializes(spark, monkeypatch):
     df = spark.range(100).select(F.col("id").alias("a"))
     lvl = _ckpt_level(iterative_checkpoint(df))
     assert not lvl.deserialized()  # above threshold → serialized bytes
-
-
-@pytest.mark.parametrize(
-    "mode,want_deser", [("always", False), ("never", True)]
-)
-def test_iterative_checkpoint_env_override(spark, monkeypatch, mode, want_deser):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_SER", mode)
-    df = spark.range(10)
-    assert _ckpt_level(iterative_checkpoint(df)).deserialized() is want_deser
 
 
 def test_threshold_is_sane():

@@ -1,6 +1,6 @@
 """Regression pins for the four r12 ADVICE items (all shipped r13):
 
-1. caching.py — auto-mode ``iterative_checkpoint`` decisions (plan-stat
+1. caching.py — ``iterative_checkpoint`` level decisions (plan-stat
    estimate, chosen level) are recorded in ``caching.ITER_DECISIONS`` and
    debug-logged, so regime misclassification is observable instead of
    silent.
@@ -29,11 +29,10 @@ from ingestion_scripts_spark.operators.spans import span_removal_apply
 
 
 # --------------------------------------------------------------------------
-# 1. auto-mode checkpoint decisions are observable
+# 1. checkpoint level decisions are observable
 # --------------------------------------------------------------------------
 
-def test_iter_decisions_recorded(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_SER", "auto")
+def test_iter_decisions_recorded(spark):
     caching.ITER_DECISIONS.clear()
     df = spark.range(50).select(F.col("id").alias("a"))
     iterative_checkpoint(df)
@@ -43,17 +42,7 @@ def test_iter_decisions_recorded(spark, monkeypatch):
     assert ser is (est > caching.ITER_SER_THRESHOLD_BYTES)
 
 
-def test_iter_decisions_not_recorded_on_override(spark, monkeypatch):
-    # 'always'/'never' are conscious probe overrides — no estimate is
-    # consulted, so no decision row (the ring is auto-mode telemetry)
-    monkeypatch.setenv("SPARK_GRAFT_ITER_SER", "never")
-    caching.ITER_DECISIONS.clear()
-    iterative_checkpoint(spark.range(10))
-    assert caching.ITER_DECISIONS == []
-
-
-def test_iter_decisions_ring_is_bounded(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ITER_SER", "auto")
+def test_iter_decisions_ring_is_bounded(spark):
     caching.ITER_DECISIONS.clear()
     caching.ITER_DECISIONS.extend([(1, False)] * caching._ITER_DECISIONS_MAX)
     iterative_checkpoint(spark.range(10))

@@ -1,20 +1,21 @@
 """Round-15 optimization internals: scale-adaptive streaming state
-partitions (streaming/streams.py) and the two-rounds-per-checkpoint
-star-CC convergence window (operators/dedup.py).
+partitions (streaming/streams.py), plus the star-CC round budget
+(operators/dedup.py) that the r15 two-rounds-per-checkpoint window used to
+stretch; the window is gone and star-CC is back to one round per
+checkpoint through ``caching.fixpoint``.
 
 The behavioral guarantees (oracle equality of every streaming query,
 star-CC == union-find truth on adversarial graphs) are pinned elsewhere
 (tools/oracle_check.py sweeps, tests/test_cc_star.py); these tests pin
-the new INTERNAL laws the optimizations introduced:
+the internal laws:
 
 * stream_state_partitions derives the count from bytes and only ever
   adapts DOWN from the session's configured shuffle partitions (a
   non-local source, which it cannot size, gets the cap);
 * scoped_shuffle_partitions restores the session conf even on error;
 * connected_components_star still converges exactly at the documented
-  diameter-halving budget (the windowed check needs its +2 detection
-  slack — a fixpoint reached at round R is only *seen* at the next
-  window boundary, and the confirmation round must not consume budget).
+  diameter-halving budget: ``max_iter`` rounds that change the edge set
+  plus the one round that observes the fixed point.
 """
 
 from __future__ import annotations
@@ -95,10 +96,12 @@ def test_scoped_shuffle_partitions_restores_on_error(spark):
 
 def test_star_cc_converges_within_documented_budget(spark):
     """A path of length 64 has diameter 64 <= 2^6: with max_iter=6 the
-    loop's diameter-halving budget covers it, and the windowed
-    convergence check (+2 detection slack, uncounted confirmation round)
-    must still converge instead of tripping the loud unconverged error.
-    Labels must equal the min-node truth."""
+    loop's diameter-halving budget covers it. A pure-Python simulation of
+    the large-star/small-star round map on this path changes the edge set
+    in 6 rounds and observes the fixed point in the 7th — exactly
+    max_iter changing rounds plus the one observing round the budget
+    allows, so this must converge instead of tripping the loud
+    unconverged error. Labels must equal the min-node truth."""
     from ingestion_scripts_spark.operators.dedup import (
         connected_components_star,
     )
@@ -121,10 +124,10 @@ def test_star_cc_empty_graph(spark):
     assert connected_components_star(df).collect() == []
 
 
-def test_star_cc_single_round_window_tail(spark):
-    """max_iter=1 exercises the odd-tail path (steps == 1), where
-    E_{k+1} == E_k IS the fixpoint test and no confirmation round runs:
-    a star graph is already one small-star round from its fixpoint."""
+def test_star_cc_star_graph_is_its_own_fixed_point(spark):
+    """A star graph is already a fixed point of the star round map: at
+    max_iter=1 its first round changes nothing, is the observing round,
+    and the loop converges with the hub as every node's label."""
     from ingestion_scripts_spark.operators.dedup import (
         connected_components_star,
     )
