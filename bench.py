@@ -1,5 +1,7 @@
 #!/usr/bin/env python
-"""Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness over the registry queries of ``__spark_entry__``.
+
+Default run: time the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
 "sf": ...}.
@@ -15,21 +17,41 @@ stolen run where best-of-N still rewards a lucky one. Structured-Streaming
 queries (dominated by query startup + checkpoint I/O, not engine work) are
 reported in a separate "streaming_queries" section so the headline `value`
 reflects engine execution only.
+
+Profile mode, ``--profile NAME[,NAME...] [--conf k=v ...] [--plans DIR]``
+(``headline``/``streaming`` expand to those lists), runs each query once
+cold per arm (A = session defaults, B = the --conf set), then
+$SPARK_GRAFT_BENCH_RUNS warm runs per arm in A,B / B,A order so both arms
+sample the same host drift, releasing caches after every run. It prints
+one JSON line per query (cold and warm-median wall per arm, B/A, build
+seconds and Spark jobs per run, stream triggers, round checkpoints by
+storage level), a geomean B/A line with --conf, and ``DIR/<name>.txt``
+plans with --plans. It writes no BENCH_DETAIL file.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import itertools
 import json
+import math
 import os
 import statistics
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
+
 import __spark_entry__ as E
-from ingestion_scripts_spark.caching import release_caches
+from ingestion_scripts_spark.caching import ITER_DECISIONS, release_caches
 from ingestion_scripts_spark.session import build_session
+
+_QUERIES = E.queries()
 
 #: headline subset — the queries whose plans exercise every engine surface:
 #: shuffle+window agg, broadcast star join, anti-join, HOF text ops, LSH
@@ -361,35 +383,21 @@ DRIFT_WATCH = {
     "nation_profit", "linear_interpolation",
 }
 
-#: fixed integer workload per probe worker; calibration on the reference
-#: host (idle, 2026-08-15): serial 0.115 s, 32-way pool worker-median
-#: 0.115 s (no turbo/frequency skew between 1-way and 32-way on this
-#: hardware, so worker_med/serial_ref ≈ 1.0 when the host is quiet).
+#: fixed integer workload per probe worker; _PROBE_IDLE_CALIB_SEC is the
+#: serial (1-way) spin on the reference host, idle, 2026-08-15.
 _PROBE_ITERS = 2_000_000
 _PROBE_IDLE_CALIB_SEC = 0.115
-#: a probe is "contended" when the median worker runs this much slower than
-#: the run's own POOL reference (the pre-probe's best N-way worker median).
-#: Was 1.6× vs the SERIAL reference through r14; r15 first tightened it to
-#: 1.25 vs serial (VERDICT r14 item 6), but the first r15 baseline showed
-#: that comparison is hardware-profile-dependent: on a host with
-#: single-core turbo the 1-way serial spin runs ~1.6-1.9× faster per core
-#: than the 32-way pool even when COMPLETELY idle (loadavg 0.2), so every
-#: probe of an idle run tripped the gate. The denominator is now the run's
-#: own first pool probe — a like-for-like N-way vs N-way comparison that
-#: still catches the r14 rerun4 drift (pool medians 0.164-0.184 vs a
-#: ~0.13 pre-probe ⇒ ratios 1.26-1.4 ⇒ tainted) without mis-flagging
-#: turbo skew. 1.35, not the 1.25 VERDICT r14 floated: pool-vs-pool still
-#: jitters ±20% on an idle host at low worker counts (measured: an 8-way
-#: smoke's probes ranged 0.98-1.32x its own pre-probe with loadavg ~0 —
-#: the bench JVM's own background threads are relatively noisier the
-#: fewer probe workers race them), while the r14 rerun4 steal spike sat
-#: at ~1.3-1.5x pool-relative. The gate only sets the `tainted` flag;
-#: timing methodology is unchanged.
+#: the host is contended at start when the run's serial reference is this
+#: much over the serial calibration. Only serial is read against serial:
+#: with single-core turbo an idle N-way pool worker runs 1.6-1.9x slower
+#: than the serial spin, so pool-vs-serial flags idle runs.
+_SERIAL_START_RATIO = 1.5
+#: a mid-run probe is contended when its median worker runs this much
+#: slower than the run's own pool reference (pool vs pool, so turbo skew
+#: cancels). An idle 8-way smoke's probes ranged 0.98-1.32x its own
+#: pre-probe; the r14 rerun4 steal spike sat at 1.3-1.5x. The gate only
+#: sets the `tainted` flag; timing methodology is unchanged.
 _PROBE_TAINT_RATIO = 1.35
-#: absolute sanity for the pool reference itself: if even the best pre-probe
-#: attempt is this much above the committed idle pool calibration, the host
-#: was already contended at start and the run-relative gate would be lenient.
-_POOL_REF_START_RATIO = 1.5
 
 
 def _spin(n: int) -> float:
@@ -402,16 +410,11 @@ def _spin(n: int) -> float:
 
 
 def _host_probe(pool_size: int) -> dict:
-    """N-way-parallel contention probe (r6 VERDICT item 1: the old
-    single-thread probe stayed flat at ~0.27 s while loadavg tripled and
-    the 32-way queries slowed 21% — one thread always finds a free core,
-    so it provably cannot see multi-core contention). N simultaneous fixed
-    integer workloads compete for the same cores local[N] uses; external
-    load that slows Spark stages slows the probe's median worker by the
-    same oversubscription mechanism. loadavg is recorded for attribution
-    but is NOT the gate signal: the bench's own just-finished Spark burst
-    dominates the 1-min EMA, while the probe measures instantaneous spare
-    capacity during a pause in Spark work."""
+    """N-way-parallel contention probe: N fixed integer workloads compete
+    for the cores local[N] uses, so load that slows Spark stages slows the
+    median worker too (one thread always finds a free core and cannot see
+    it). loadavg is recorded for attribution only: the bench's own Spark
+    bursts dominate its 1-min EMA."""
     try:
         load = [round(v, 2) for v in os.getloadavg()]
     except OSError:
@@ -434,15 +437,10 @@ def _host_probe(pool_size: int) -> dict:
 
 def _gated_probe(pool_size: int, pool_ref: float, where: str,
                  retries: int = 3, sleep_sec: float = 15.0) -> dict:
-    """Probe; on contention sleep and re-probe up to `retries` times (the
-    r6 VERDICT abort-and-retry gate). ``pool_ref`` is the run's own
-    pre-probe N-way worker median (NOT the 1-way serial spin — see the
-    _PROBE_TAINT_RATIO note: 1-way vs N-way mixes turbo skew into the
-    ratio). The returned record carries ``contended`` — True only if
-    EVERY attempt exceeded the taint ratio — so one transient spike
-    pauses the bench instead of poisoning the artifact, and sustained
-    contention is marked instead of silently blended into per-query
-    medians."""
+    """Probe against the run's pool reference ``pool_ref``; on contention
+    sleep and re-probe, up to ``retries`` attempts. ``contended`` is True
+    only if EVERY attempt exceeded the taint ratio, so one transient spike
+    pauses the bench and sustained contention marks the artifact."""
     attempts = []
     for i in range(retries):
         rec = _host_probe(pool_size)
@@ -455,65 +453,90 @@ def _gated_probe(pool_size: int, pool_ref: float, where: str,
     return {"where": where, "contended": True, "attempts": attempts}
 
 
-def _pool_ref_probe(pool_size: int, attempts: int = 3) -> dict:
-    """Establish the run's own N-way pool reference: best (minimum)
-    worker median over ``attempts`` probes — the denominator every
-    mid-run gate compares against. The pre-probe itself cannot be gated
-    run-relatively (it IS the reference), so its sanity check is
-    absolute: ``contended`` when even the best attempt exceeds
-    ``_POOL_REF_START_RATIO`` × the committed idle pool calibration."""
+def _start_probe(pool_size: int, attempts: int = 3) -> tuple[float, dict]:
+    """The run's references, taken before the warmup: the serial spin (min
+    of 3) and the ``pre`` probe, whose best worker median is the
+    ``pool_ref`` of every mid-run gate. ``pre`` is ``contended`` when the
+    serial reference says the host was already slow at start."""
+    serial_ref = min(_spin(_PROBE_ITERS) for _ in range(3))
     recs = [_host_probe(pool_size) for _ in range(attempts)]
     ref = min(r["worker_med"] for r in recs)
     for r in recs:
         r["ratio"] = round(r["worker_med"] / ref, 2)
-    return {
+    return serial_ref, {
         "where": "pre",
-        "contended": ref > _POOL_REF_START_RATIO * _PROBE_IDLE_CALIB_SEC,
+        "contended": serial_ref > _SERIAL_START_RATIO * _PROBE_IDLE_CALIB_SEC,
         "attempts": recs,
         "pool_ref": ref,
     }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+def _session(cpus: int) -> SparkSession:
     spark = build_session(
         app_name="ingestion-scripts-spark-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    qs = E.queries()
-    names = [n for n in HEADLINE if n in qs]
-    stream_names = [n for n in STREAMING if n in qs]
 
-    # serial reference for this run: min-of-3 single-thread spins. If even
-    # the serial floor is far off the committed idle calibration, the host
-    # was already contended at start — record it (the ratio gate below
-    # would otherwise be lenient, since its denominator is inflated too).
-    serial_ref = min(_spin(_PROBE_ITERS) for _ in range(3))
-    start_contended = serial_ref > 1.5 * _PROBE_IDLE_CALIB_SEC
-    pre = _pool_ref_probe(cpus)
+def _warmup(spark: SparkSession, sf_dir: str) -> None:
+    """Run the cheapest query once to absorb JVM + codegen startup."""
+    _QUERIES["pricing_summary"](spark, sf_dir).collect()
+
+
+def _bench_runs() -> int:
+    return int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+
+
+def _job_ids(spark: SparkSession):
+    """Job ids in the app status store, newest first, read lazily so a
+    caller can stop at the first id it has already seen. The store holds
+    the jobs of streaming execution threads too, which
+    ``statusTracker().getJobIdsForGroup(None)`` leaves out."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    for i in range(jobs.size()):
+        yield jobs.apply(i).jobId()
+
+
+def _run(spark: SparkSession, name: str,
+         sf_dir: str) -> tuple[float, float, list[int]]:
+    """One run of a registry query: (build seconds — the query-function
+    call, which also runs any eager jobs the kernel fires; wall seconds —
+    build plus ``collect``; ids of the jobs started during the run)."""
+    last = next(_job_ids(spark), -1)
+    t0 = time.perf_counter()
+    df = _QUERIES[name](spark, sf_dir)
+    build = time.perf_counter() - t0
+    rows = df.collect()
+    wall = time.perf_counter() - t0
+    del rows
+    return build, wall, list(itertools.takewhile(lambda j: j > last, _job_ids(spark)))
+
+
+def _bench(spark: SparkSession, sf_dir: str, cpus: int,
+           bench_round: str | None) -> None:
+    names = [n for n in HEADLINE if n in _QUERIES]
+    stream_names = [n for n in STREAMING if n in _QUERIES]
+
+    serial_ref, pre = _start_probe(cpus)
+    start_contended = pre["contended"]
     pool_ref = pre["pool_ref"]
     probes = [pre]
 
-    # warmup: run the cheapest query once to absorb JVM + codegen startup
-    qs["pricing_summary"](spark, sf_dir).collect()
+    _warmup(spark, sf_dir)
 
     # median-of-N: first run pays per-plan codegen; the median is robust to
     # a single CPU-steal outlier (this host shows ±30% steal) where
     # best-of-N still rewards one lucky run
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    runs = _bench_runs()
 
     def timed(name: str) -> float:
         samples = []
         n_runs = max(runs, 5) if name in DRIFT_WATCH else runs
         for i in range(n_runs):
-            t0 = time.perf_counter()
-            rows = qs[name](spark, sf_dir).collect()
-            samples.append(time.perf_counter() - t0)
-            del rows
+            samples.append(_run(spark, name, sf_dir)[1])
             # adaptive repeats: sub-0.7 s queries are codegen-dominated and
             # steal-insensitive — two samples suffice; the full median-of-N
             # is reserved for queries long enough for steal to distort.
@@ -542,13 +565,11 @@ def main() -> None:
     per_stream = {name: timed(name) for name in stream_names}
 
     def timed_once(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).collect()
-        dt = round(time.perf_counter() - t0, 3)
+        dt = round(_run(spark, name, sf_dir)[1], 3)
         release_caches()
         return dt
 
-    per_shadow = {n: timed_once(n) for n in SHADOW if n in qs}
+    per_shadow = {n: timed_once(n) for n in SHADOW if n in _QUERIES}
 
     probes.append(_gated_probe(cpus, pool_ref, "post"))
     tainted = start_contended or any(p["contended"] for p in probes)
@@ -578,15 +599,9 @@ def main() -> None:
         json.dump(detail, fh, indent=1, sort_keys=True)
     # The rolling BENCH_DETAIL.json is overwritten by the next run. A
     # snapshot that a committed BENCH_r{N}.json can point at is written only
-    # for an explicit round (--round N argv or SPARK_GRAFT_BENCH_ROUND env),
+    # for an explicit round (--round N or SPARK_GRAFT_BENCH_ROUND env),
     # keyed on round AND core count so the c8 and c32 runs of one round
     # never collide; without a round, queries_detail names the rolling file.
-    bench_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    for i, a in enumerate(sys.argv):
-        if a == "--round" and i + 1 < len(sys.argv):
-            bench_round = sys.argv[i + 1]
-        elif a.startswith("--round="):
-            bench_round = a.split("=", 1)[1]
     snap = detail_path
     if bench_round is not None:
         snap = os.path.join(
@@ -627,7 +642,180 @@ def main() -> None:
             }
         )
     )
-    spark.stop()
+
+
+class _Triggers(StreamingQueryListener):
+    """Per-trigger progress of the streams a run starts. Spark calls
+    ``onQueryStarted`` inside ``start()`` and posts a query's progress
+    events before its terminated event, so once every started query has
+    terminated, ``take`` holds all of their triggers."""
+
+    def __init__(self) -> None:
+        self._cv = threading.Condition()
+        self._started: set[str] = set()
+        self._ended: set[str] = set()
+        self._triggers: list[dict] = []
+
+    def onQueryStarted(self, event) -> None:  # noqa: N802
+        with self._cv:
+            self._started.add(str(event.id))
+
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        p = json.loads(event.progress.json)
+        trigger = {
+            "batchId": p["batchId"],
+            "numInputRows": p.get("numInputRows", 0),
+            "durationMs": p.get("durationMs", {}),
+            "stateOperators": [
+                {k: op.get(k) for k in ("numRowsTotal", "commitTimeMs",
+                                        "numShufflePartitions",
+                                        "numStateStoreInstances")}
+                for op in p.get("stateOperators", [])
+            ],
+        }
+        with self._cv:
+            self._triggers.append(trigger)
+
+    def onQueryTerminated(self, event) -> None:  # noqa: N802
+        with self._cv:
+            self._ended.add(str(event.id))
+            self._cv.notify_all()
+
+    def take(self) -> list[dict]:
+        """The triggers since the last call, once every query started
+        since then has terminated, or after 30 s with a warning on stderr."""
+        with self._cv:
+            if not self._cv.wait_for(lambda: self._started <= self._ended, 30.0):
+                print(f"bench: {len(self._started - self._ended)} stream(s) "
+                      "still running after 30 s", file=sys.stderr)
+            out, self._triggers = self._triggers, []
+            self._started.clear()
+            self._ended.clear()
+        return out
+
+
+@contextlib.contextmanager
+def _conf_arm(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the body; restore each key's previous value (unset
+    when it had none) afterwards, also when the body raises."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def profile(spark: SparkSession, names: list[str], sf_dir: str,
+            confs: dict[str, str] | None = None,
+            plans: str | None = None) -> list[dict]:
+    """Profile mode (module docstring): print one JSON record per query as
+    it finishes, then with ``confs`` a geomean B/A line; return the
+    records. ``checkpoints`` counts the round checkpoints
+    ``caching.iterative_checkpoint`` took over the query's runs, by storage
+    level, from the ``ITER_DECISIONS`` ring (cleared before each run; the
+    ring keeps the last 256)."""
+    arms = {"A": {}, "B": confs} if confs else {"A": {}}
+    order = list(arms)
+    listener = _Triggers()
+    spark.streams.addListener(listener)
+    records = []
+    try:
+        for name in names:
+            runs = []
+            ckpts = {"serialized": 0, "deserialized": 0}
+
+            def run(arm: str, cold: bool) -> None:
+                ITER_DECISIONS.clear()
+                with _conf_arm(spark, arms[arm]):
+                    build, wall, jobs = _run(spark, name, sf_dir)
+                for _, ser in ITER_DECISIONS:
+                    ckpts["serialized" if ser else "deserialized"] += 1
+                release_caches()
+                runs.append({
+                    "arm": arm, "cold": cold, "build_s": round(build, 3),
+                    "wall_s": round(wall, 3), "jobs": len(jobs),
+                    "triggers": listener.take(),
+                })
+
+            for arm in order:
+                run(arm, cold=True)
+            for rep in range(_bench_runs()):
+                for arm in order if rep % 2 == 0 else order[::-1]:
+                    run(arm, cold=False)
+            warm = {arm: statistics.median(r["wall_s"] for r in runs
+                                           if r["arm"] == arm and not r["cold"])
+                    for arm in order}
+            record = {
+                "query": name,
+                "cold_s": {r["arm"]: r["wall_s"] for r in runs if r["cold"]},
+                "warm_median_s": {arm: round(s, 3) for arm, s in warm.items()},
+                "checkpoints": ckpts,
+                "runs": runs,
+            }
+            if confs:
+                record["b_over_a"] = round(warm["B"] / warm["A"], 4)
+            if plans:
+                os.makedirs(plans, exist_ok=True)
+                with open(os.path.join(plans, f"{name}.txt"), "w") as fh, \
+                        contextlib.redirect_stdout(fh):
+                    _QUERIES[name](spark, sf_dir).explain("formatted")
+                release_caches()
+                listener.take()
+            print(json.dumps(record), flush=True)
+            records.append(record)
+    finally:
+        spark.streams.removeListener(listener)
+    if confs and records:
+        ratios = [r["b_over_a"] for r in records]
+        print(json.dumps({
+            "summary": "b_over_a",
+            "n": len(ratios),
+            "geomean": round(math.exp(statistics.fmean(map(math.log, ratios))), 4),
+            "warm_total_s": {arm: round(sum(r["warm_median_s"][arm] for r in records), 3)
+                             for arm in order},
+            "b_faster": sum(1 for x in ratios if x < 0.95),
+            "b_slower": sum(1 for x in ratios if x > 1.05),
+        }), flush=True)
+    return records
+
+
+def main() -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--round", default=os.environ.get("SPARK_GRAFT_BENCH_ROUND"),
+                   help="also write BENCH_DETAIL_r{NN}_c{cpus}.json")
+    p.add_argument("--profile", metavar="NAME[,NAME...]")
+    p.add_argument("--conf", action="append", default=[], metavar="K=V")
+    p.add_argument("--plans", metavar="DIR")
+    args = p.parse_args()
+    if not args.profile and (args.conf or args.plans):
+        p.error("--conf and --plans need --profile")
+    if any("=" not in c for c in args.conf):
+        p.error("--conf takes K=V")
+    groups = {"headline": HEADLINE, "streaming": STREAMING}
+    names = [n for part in (args.profile or "").split(",") if part
+             for n in groups.get(part, [part])]
+    unknown = [n for n in names if n not in _QUERIES]
+    if unknown:
+        p.error(f"unknown queries: {', '.join(unknown)}")
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = _session(cpus)
+    try:
+        if args.profile:
+            _warmup(spark, sf_dir)
+            profile(spark, names, sf_dir,
+                    dict(c.split("=", 1) for c in args.conf), args.plans)
+        else:
+            _bench(spark, sf_dir, cpus, args.round)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

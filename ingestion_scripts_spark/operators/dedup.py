@@ -14,9 +14,10 @@ DuckDB oracle can reproduce values exactly; at cluster scale md5 is ~100 MB/s
 per core JVM-side — fine, these ops are shuffle-bound, not hash-bound.
 
 Scale notes:
-- ``anti_join_dedup`` broadcasts the key side when small (the reference held
-  it in every worker's memory — same idea); for a large existing-key set it
-  falls back to a shuffled left-anti join, which AQE may still convert.
+- ``anti_join_dedup`` puts no hint on the key side: Catalyst broadcasts it
+  when small (the reference held it in every worker's memory — same idea),
+  and a large existing-key set gets a shuffled left-anti join, which AQE may
+  still convert.
 - MinHash-LSH is the 100 TB near-dup path: candidate generation touches only
   (band, bucket) groups instead of all O(n^2) pairs; the only wide ops are
   the explode-groupBy for buckets and the pair self-join within buckets.
@@ -40,7 +41,6 @@ def anti_join_dedup(
     incoming: DataFrame,
     existing_keys: DataFrame,
     key: str,
-    broadcast_existing: bool | None = None,
 ) -> DataFrame:
     """J1 — stream/batch-static left-anti join on ``key``.
 
@@ -49,23 +49,15 @@ def anti_join_dedup(
     (``src/rss_consumer.py:63-65``) is NOT replicated — re-reading the static
     side per batch is Spark's default (SURVEY.md §1.5).
 
-    ``broadcast_existing`` is a tri-state size gate. The existing-key set
-    grows with the sink, so an unconditional broadcast is a 100x scale
-    killer (it must fit in driver AND every executor):
-    - ``None`` (default, auto): no hint — Catalyst broadcasts only under
-      ``spark.sql.autoBroadcastJoinThreshold`` using actual scan stats, and
-      AQE can still convert a shuffled anti-join to broadcast at runtime
-      from the true shuffle size. This IS the size gate, computed from real
-      sizes rather than a hand-rolled count.
-    - ``True``: force broadcast (caller statically knows the side is tiny).
-    - ``False``: force a shuffled hash anti-join — guaranteed no
-      BroadcastExchange regardless of estimated size.
+    No broadcast hint: the existing-key set grows with the sink, so an
+    unconditional broadcast is a 100x scale killer (it must fit in driver
+    AND every executor). Catalyst broadcasts only under
+    ``spark.sql.autoBroadcastJoinThreshold`` using actual scan stats, and
+    AQE can still convert a shuffled anti-join to broadcast at runtime from
+    the true shuffle size — a size gate computed from real sizes rather
+    than a hand-rolled count.
     """
     keys = existing_keys.select(key).dropDuplicates([key])
-    if broadcast_existing is True:
-        keys = F.broadcast(keys)
-    elif broadcast_existing is False:
-        keys = keys.hint("shuffle_hash")
     return incoming.join(keys, on=key, how="left_anti")
 
 

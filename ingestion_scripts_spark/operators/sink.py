@@ -33,7 +33,6 @@ def idempotent_append(
     path: str,
     keys: list[str],
     audit: bool = True,
-    broadcast_existing: bool | None = None,
 ) -> None:
     """K3 — keyed idempotent append to a parquet table at ``path``.
 
@@ -41,12 +40,10 @@ def idempotent_append(
     a second row; within the incoming batch the first (arbitrary but
     in-batch-deduped) row wins.
 
-    ``broadcast_existing``: tri-state size gate for the existing-key
-    anti-join. The key set grows with the sink, so the default is auto
-    (``None``): no broadcast hint — Catalyst broadcasts only when the pruned
-    key scan is under ``autoBroadcastJoinThreshold``, and AQE can upgrade
-    the shuffled plan at runtime. ``True`` forces broadcast (known-tiny
-    sink), ``False`` forces a shuffled hash anti-join (known-huge sink).
+    The existing-key anti-join carries no broadcast hint: the key set grows
+    with the sink, so Catalyst broadcasts only when the pruned key scan is
+    under ``autoBroadcastJoinThreshold``, and AQE can upgrade the shuffled
+    plan at runtime.
 
     ``path`` may be any Hadoop URI (``file:``, ``hdfs:``, ``s3a:``) or a
     bare path on the default filesystem. The existing keys are not
@@ -57,10 +54,6 @@ def idempotent_append(
     batch = df.dropDuplicates(keys)
     if path_exists(spark, path):
         existing = spark.read.parquet(path).select(*keys)
-        if broadcast_existing is True:
-            existing = F.broadcast(existing)
-        elif broadcast_existing is False:
-            existing = existing.hint("shuffle_hash")
         batch = batch.join(existing, keys, "left_anti")
     if audit:
         batch = with_audit(batch)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.dedup import anti_join_dedup
 from ..operators.sink import make_foreach_batch_writer
 
 
@@ -36,15 +37,12 @@ def stream_dedup_by_key(stream: DataFrame, key: str, use_state: bool = False,
     """J1 streaming: drop records whose key was already seen.
 
     ``use_state=True`` → streaming ``dropDuplicates`` (state store, exact
-    within watermark); else stream-static left-anti join against ``existing``
-    (re-read per micro-batch; no broadcast hint — the existing-key set grows
-    with the sink, Catalyst/AQE broadcast from actual size)."""
+    within watermark); else the stream-static ``anti_join_dedup`` against
+    ``existing`` (re-read per micro-batch)."""
     if use_state:
         return stream.dropDuplicates([key])
     assert existing is not None
-    return stream.join(
-        existing.select(key).dropDuplicates([key]), key, "left_anti"
-    )
+    return anti_join_dedup(stream, existing, key)
 
 
 def windowed_counts(

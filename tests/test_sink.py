@@ -19,20 +19,6 @@ def test_idempotent_append(spark, tmp_path):
     assert "insert_date" in got.columns
 
 
-def test_idempotent_append_broadcast_gate(spark, tmp_path):
-    """Both explicit gate settings produce identical sink contents; the
-    False path never forces the existing-key set into executor memory."""
-    for mode, sub in ((True, "fbc"), (False, "fsh")):
-        path = str(tmp_path / sub)
-        b1 = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int")
-        SK.idempotent_append(b1, path, ["k"], broadcast_existing=mode)
-        b2 = spark.createDataFrame([("b", 9), ("c", 3)], "k string, v int")
-        SK.idempotent_append(b2, path, ["k"], broadcast_existing=mode)
-        got = spark.read.parquet(path)
-        assert got.count() == 3
-        assert {r.k for r in got.select("k").collect()} == {"a", "b", "c"}
-
-
 def test_idempotent_append_uri_path(spark, tmp_path):
     """A sink named by a ``file:`` URI still sees its existing keys. The
     check was ``os.path.exists``, False for every URI, so the second

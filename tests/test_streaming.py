@@ -67,6 +67,17 @@ def test_stream_dedup_and_idempotent_sink(spark, tmp_path):
     assert "insert_date" in got.columns
 
 
+def test_stream_dedup_static_anti_join(spark, tmp_path):
+    """Without state the stream is anti-joined against the existing keys."""
+    src = _write_events(tmp_path, "src4", ROWS)
+    existing = spark.createDataFrame([(1,), (3,)], "event_id long")
+    stream = ST.stream_dedup_by_key(
+        read_json_stream(spark, src, EVENT), "event_id", existing=existing
+    )
+    out = ST.run_available_now(stream, "memory", str(tmp_path / "ckpt"))
+    assert [r.event_id for r in out.collect()] == [2]
+
+
 def test_session_window_stream(spark, tmp_path):
     src = _write_events(tmp_path, "src3", ROWS[:3])
     stream = read_json_stream(spark, src, EVENT)
