@@ -18,6 +18,9 @@ Conventions for cross-engine hash-stability:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -47,9 +50,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 _REGISTRY: list[tuple[str, Callable[[SparkSession, str], DataFrame], str | None]] = [
     # DECLARATION order (stable; roughly r5's layout). The driver-facing
-    # order is produced by the _R6_WINDOW block shift after this list —
-    # driver checks positions 1-50 of the SHIFTED order; ROADMAP.md has the
-    # rotation schedule; the window is pinned by tests/test_entry_contract.py.
+    # order is _driver_order's, after this list: the driver checks its
+    # positions 1-50.
     ("textrank_summary", q_textrank_summary, _sql_textrank_summary()),
     ("sql_pipe_front_door", q_sql_pipe_front_door, SQL_PIPE_FRONT_DOOR),
     ("stream_state_reader", q_stream_state_reader, SQL_STREAM_DEDUP),
@@ -388,49 +390,29 @@ _REGISTRY: list[tuple[str, Callable[[SparkSession, str], DataFrame], str | None]
     ("stream_ivf_roll", q_stream_ivf_roll, _sql_stream_ivf_roll()),
 ]
 
-# --- r14 driver-window rotation (recomputed from CORRECTNESS_r01-r13) -----
-# The driver certifies positions 1-50 each round. CORRECTNESS_r13 landed
-# 50/50, so cumulative driver-green entering r14 is 309/309 and the only
-# debt is the 9 r14-session additions (never-driver-green by definition):
-# the 4 docket queries plus the beyond-docket batch (hot-bucket sweep,
-# sweep recall, IVF postings roll + serve + streaming roll). Window =
-# those 9 + the 41 re-certification anchors with the OLDEST driver
-# evidence, RECOMPUTED
-# from the committed CORRECTNESS_r01-r13 artifacts (max green round,
-# declaration order as tiebreak) — never from ROADMAP prose (r10-VERDICT
-# wrong #2). That computation puts the nine last-green-r6 queries first
-# (VERDICT r13 item 1 names exactly these nine as the only >r8-stale
-# records), then the first 32 of the last-green-r8 block in declaration
-# order. tests/test_entry_contract.py pins the resulting window verbatim
-# and re-derives it from the artifacts.
-_R14_WINDOW = [
-    # never-driver-green debt (r14 additions, incl. the beyond-docket
-    # batch: hot-bucket sweep + IVF postings roll), window-start
-    "capped_band_roll", "capped_roll_audit", "chunk_store_roll",
-    "cdc_clamped_dedup",
-    "hot_bucket_sweep", "capped_sweep_recall", "ivf_postings_roll",
-    "ivf_roll_serve", "stream_ivf_roll",
-    # re-certification anchors: the nine last-green-r6 queries, then the
-    # last-green-r8 block in declaration order
-    "cohens_kappa", "calibration_bins", "hits_scores", "kneser_ney_ppl",
-    "dp_count_laplace", "rate_limit_replay", "stream_token_bucket",
-    "kcore_parts", "kcenter_coreset",
-    "top_orders", "region_revenue", "antijoin_new_users",
-    "dead_letter_routing", "semi_join_urgent", "cust_order_dist",
-    "rollup_revenue", "distinct_users", "asof_clicks",
-    "purchase_error_funnel", "small_quantity_revenue", "in_subquery_parts",
-    "hourly_windows", "stream_hourly_windows", "stream_sessionize",
-    "avg_precision_quality", "sq8_recall", "ndcg_quality", "zipf_slope",
-    "max_coverage", "source_unique_vocab", "ppr_coorder", "dedup_funnel",
-    "pq_recall", "conformal_gate", "isotonic_calibration",
-    "theil_sen_trend", "kmv_distinct", "wasserstein_drift",
-    "kendall_tau_daily", "mrr_quality", "link_prediction",
-]
-_BY_NAME = {t[0]: t for t in _REGISTRY}
-_REGISTRY = (
-    [_BY_NAME[n] for n in _R14_WINDOW]
-    + [t for t in _REGISTRY if t[0] not in set(_R14_WINDOW)]
-)
+# --- driver-window rotation ------------------------------------------------
+# The driver certifies positions 1-50 each round. The order is derived at
+# import from the committed CORRECTNESS_r*.json artifacts, never pinned by
+# hand (a pin stalled the rotation once): queries with no driver-green
+# record come first, in declaration order; then every green query by
+# (latest green round, declaration index), so the 50 with the oldest
+# driver evidence fill the rest of the window.
+
+
+def _driver_order(registry):
+    green: dict[str, int] = {}
+    root = os.path.dirname(os.path.abspath(__file__))
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(os.path.basename(path)[len("CORRECTNESS_r"):].split(".")[0])
+        with open(path) as fh:
+            for name, rec in json.load(fh).items():
+                if rec.get("rows_match") and rec.get("schema_match") and rec.get("hash_match"):
+                    green[name] = max(green.get(name, 0), rnd)
+    # stable sort: ties keep declaration order
+    return sorted(registry, key=lambda t: (t[0] in green, green.get(t[0], 0)))
+
+
+_REGISTRY = _driver_order(_REGISTRY)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -58,7 +58,6 @@ def poisson_bootstrap_ci(
     lo_den: int = 1000,
     hi_num: int = 975,
     hi_den: int = 1000,
-    spread_partitions: int | None = None,
 ) -> DataFrame:
     """Bootstrap CI for the mean of an integer column over the corpus.
 
@@ -72,13 +71,9 @@ def poisson_bootstrap_ci(
     gate-legal class). Returns one row:
     (n, b_replicates, mean_micro, ci_lo_micro, ci_hi_micro).
 
-    ``spread_partitions``: the hash/weight kernel costs B md5s per input
-    row, so its parallelism is the INPUT's split count. Pass a target to
-    round-robin an under-split input (single-row-group files) before the
-    explode — the load_table scan-spread rule applied at operator level:
-    the exchange moves n rows to parallelize B·n hashes, worth it exactly
-    when the input under-splits. Leave None on production-size inputs
-    whose splits already exceed cores (no exchange at 100 TB).
+    The hash/weight kernel costs B md5s per input row, so its parallelism
+    is the INPUT's: spread an under-split input first
+    (``sources.readers.spread``).
     """
     clash = {"b", "__x", "__w"}.intersection([id_col, value_col])
     if clash:
@@ -86,8 +81,6 @@ def poisson_bootstrap_ci(
             f"poisson_bootstrap_ci reserved column names in input: {sorted(clash)}"
         )
     b = int(b_replicates)
-    if spread_partitions:
-        df = df.repartition(int(spread_partitions))
     u = hash64(
         F.concat(
             F.col(id_col).cast("string"), F.lit(":"), F.col("b").cast("string")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..caching import fixpoint
 from ..functions.lits import bigint_array
+from ..sources.readers import spread
 
 
 def cluster_assignment(vec, centroids: list[list[float]]):
@@ -136,8 +137,6 @@ def kmeans_fit(
     # and at any scale it is pure waste). Executor-local storage is the
     # right durability trade for a re-runnable training loop; a multi-hour
     # 100 TB job that must survive executor loss uses checkpoint() instead.
-    from .similarity import spread
-
     pts = spread(pts).localCheckpoint()
     seed_rows = pts.orderBy("__id").limit(k).collect()
     centroids = [[r6(float(x)) for x in r["v"]] for r in seed_rows]
@@ -291,8 +290,6 @@ def kcenter_greedy(
     Returns (rank, center_id, picked_dist_sq): rank 1..k in selection
     order; picked_dist_sq = 0 for the seed.
     """
-    from .similarity import spread
-
     pts = df.select(
         F.col(id_col).alias("pid"),
         F.transform(

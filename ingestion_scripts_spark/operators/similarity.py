@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _assert_disjoint_delta
 from ..functions.lits import bigint_array, double_array, sql_double_array
+from ..sources.readers import spread
 
 #: shared SQL fragments for the single-parse ``lsh_bucket`` expression:
 #: building it through the Column API (one zip_with/aggregate lambda per
@@ -45,47 +46,6 @@ def _sql_dot(a: str, b: str) -> str:
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), {_D0}, "
         f"(acc, x) -> acc + x)"
     )
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """CPU-parallelism guard for the corpus side of vector kernels.
-
-    Similarity kernels are COMPUTE-bound (per-pair HOF dot products, or
-    the IVF kernel's per-cell Arrow folds), so the corpus task count must
-    track cores, not input bytes: a small parquet
-    corpus arrives as ONE split and would serialize the whole kernel behind
-    a single task (observed: 10 s+ single-task stages at sf0.1). Repartition
-    round-robin only when the scan yields fewer splits than cores — at real
-    corpus sizes the scan already exceeds core count and this is a no-op,
-    so no extra shuffle appears at 100 TB.
-
-    Apply to the RAW scan (before the normalize/assign projections) so
-    the heavy per-row math lands after the exchange. Per-row math is
-    unaffected (the fold law stays bit-identical); only task placement
-    changes, so oracle parity is untouched.
-    """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    # never probe .rdd.getNumPartitions(): under AQE that materializes
-    # upstream stages — a real Spark job per QUERY BUILD (r4 fix). The
-    # decision is metadata-only:
-    #  1. the plan already carries a Repartition (load_table spreads
-    #     documents/embeddings at the source) → trust it, no-op;
-    #  2. file-backed plan → estimate splits from file sizes (no job);
-    #  3. non-file plan (in-memory test input) → static partition count of
-    #     the parallelized RDD (no AQE stages underneath, probe is free).
-    if "Repartition" in df._jdf.queryExecution().analyzed().toString():
-        return df
-    files = df.inputFiles()
-    if files:
-        from ingestion_scripts_spark.sources.readers import estimated_file_splits
-
-        if estimated_file_splits(spark, list(files), target) < target:
-            return df.repartition(target)
-        return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -14,6 +14,7 @@ from ..caching import fixpoint
 from ..functions.lits import string_array
 
 from ..functions.text import PUNCT_CLASS, hash64, tokenize_ws
+from ..sources.readers import spread
 
 #: tiny per-language function-word lists for the n-gram/stopword-hit
 #: heuristic language identifier. Frozen literals shared with the oracle.
@@ -532,8 +533,6 @@ def max_coverage_select(df, id_col: str, tokens_col: str, k: int = 5):
     not a regression.
     """
     from pyspark.sql import functions as F
-
-    from .similarity import spread
 
     spark = df.sparkSession
     work = df.select(

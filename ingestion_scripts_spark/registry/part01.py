@@ -1318,10 +1318,7 @@ def q_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; the oracle re-trains the quantizer from scratch in SQL."""
     from ingestion_scripts_spark.operators.clustering import kmeans_fit
 
-    # spread the scan FIRST: normalization, assignment and scoring are all
-    # compute-bound, and a small parquet corpus arrives as one split — every
-    # downstream pass inherits this layout (no-op at real corpus sizes)
-    emb = SIM.spread(_t(spark, sf_dir, "embeddings"))
+    emb = _t(spark, sf_dir, "embeddings")
     nv = (
         emb.select("vec_id", SIM._as_double(F.col("embedding")).alias("__v"))
         .withColumn("__n", SIM.norm(F.col("__v")))
@@ -1337,7 +1334,7 @@ def q_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, assigned = kmeans_fit(nv, "nv", "vec_id", k=8, iters=2)
     assigned = assigned.select(F.col("__id").alias("vec_id"), "v", "cluster_id")
     # tiny query side broadcast — join parallelism tracks the corpus
-    # partitioning (spread above), not the 8 cell keys
+    # partitioning (load_table's spread), not the 8 cell keys
     corpus = assigned.select(
         F.col("vec_id").alias("match_id"), "cluster_id", F.col("v").alias("cv")
     )

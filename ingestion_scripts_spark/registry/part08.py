@@ -1158,6 +1158,7 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/batch consistency law, and the 18th executed Structured
     Streaming query."""
     from ingestion_scripts_spark.operators import sketches as SK
+    from ingestion_scripts_spark.sources.readers import path_exists
     from ingestion_scripts_spark.streaming.streams import (
         ordered_batches,
         run_available_now,
@@ -1175,14 +1176,12 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk = SK.kmv_sketch(
             batch_df, "event_type", F.col("user_id").cast("string"), k=64
         )
-        try:
-            prev = sp.read.parquet(state_dir)
-            merged = prev.unionByName(sk.select("g", "h")).distinct()
-        except Exception:
-            merged = sk.select("g", "h").distinct()
+        merged = sk.select("g", "h")
+        if path_exists(sp, state_dir):
+            merged = sp.read.parquet(state_dir).unionByName(merged)
         w = Window.partitionBy("g").orderBy("h")
         topk = (
-            merged.withColumn("rn", F.row_number().over(w))
+            merged.distinct().withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= 64)
             .select("g", "h")
         )

@@ -136,12 +136,12 @@ def q_bootstrap_order_value_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicate) Poisson(1) weights from the portable md5 hash, replicate
     means exact micro integers, CI = ceil-rank order statistics of the
     32 means. Every stage partial-aggregates; both engines draw the
-    identical weights, so the twin is bit-exact. The single-row-group
-    testdata scan under-splits, so the query passes spread_partitions
-    (the load_table scan-spread rule at operator level — measured 38 s →
-    ~1 s at sf0.1; a production-size input splits past core count and
-    would pass None)."""
+    identical weights, so the twin is bit-exact. The kernel costs B md5s
+    per input row, so the single-row-group testdata scan is spread to cores
+    first (measured 38 s → ~1 s at sf0.1); a production-size input splits
+    past core count and gets no exchange."""
     from ingestion_scripts_spark.operators.bootstrap import poisson_bootstrap_ci
+    from ingestion_scripts_spark.sources.readers import spread
 
     orders = _t(spark, sf_dir, "orders").select(  # noqa: F405
         F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
@@ -149,13 +149,7 @@ def q_bootstrap_order_value_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         "o_orderkey",
     )
-    return poisson_bootstrap_ci(
-        orders,
-        "cents",
-        "o_orderkey",
-        b_replicates=32,
-        spread_partitions=spark.sparkContext.defaultParallelism,
-    )
+    return poisson_bootstrap_ci(spread(orders), "cents", "o_orderkey", b_replicates=32)
 
 
 def _sql_bootstrap_order_value_ci(b: int = 32) -> str:

@@ -62,6 +62,8 @@ def build_session(
         # match DuckDB's naive-timestamp reading of the same file
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        # no [Stage N:>...] bars splitting result lines in logs
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -9,6 +9,14 @@ Kafka reader is the same function with a different format string.
 Scale: JSON decode happens once at the edge; everything downstream is
 columnar. For parquet scans, pass ``columns`` to prune at the reader so the
 scan's ReadSchema only carries what the query needs.
+
+Parallelism: this is the only module that lists input files. One lister
+(``_data_file_lengths``: Hadoop FS client, recursive, hidden names skipped)
+feeds both sizing policies: ``spread``, the batch gate that round-robins an
+under-split input to the core count (``load_table`` applies it to the
+compute-bound tables), and ``input_bytes``, which
+``streams.stream_state_partitions`` turns into a byte-sized stream
+partition count.
 """
 
 from __future__ import annotations
@@ -42,42 +50,102 @@ def read_parquet(
     return df.select(*columns) if columns else df
 
 
-def estimated_file_splits(spark: SparkSession, paths: list[str], stop_at: int) -> int:
-    """Scan-split estimate from file metadata ONLY — no Spark job.
+#: name prefixes of the files and directories Spark's file index skips
+#: (``_SUCCESS``, ``_temporary``, ``.crc`` sidecars, ...)
+_HIDDEN = ("_", ".")
 
-    ``df.rdd.getNumPartitions()`` under AQE materializes upstream query
-    stages (a real scan+shuffle job) just to learn the partition count, so
-    the spread gates must not touch ``.rdd``. Instead: splits ≈
-    Σ max(1, ceil(len/maxPartitionBytes)) over the input files, via the
-    Hadoop FileSystem client (driver-side metadata, any scheme). Early-out
-    at ``stop_at``: a production corpus with thousands of files answers
-    after one directory listing, not one RPC per file. Parquet row-group
-    granularity means the TRUE split count can be lower for huge
-    single-row-group files — acceptable: such files are a layout bug this
-    estimate shouldn't reward, and testdata files are all sub-split-size
-    (estimate exact)."""
+
+def _data_file_lengths(spark: SparkSession, paths: list[str]):
+    """Lengths of the data files under ``paths``, lazily, from metadata
+    only (no Spark job): each path is globbed and its directories listed
+    recursively through the Hadoop FileSystem client (any scheme; the files
+    under a ``partitionBy`` table's ``k=v/`` directories count), skipping
+    names that start with ``_`` or ``.`` as Spark's file index does. A path
+    is read as Hadoop's ``Path`` (and so ``spark.read``) reads it: a URI is
+    not percent-decoded. A missing path lists nothing; an unreachable
+    filesystem raises the FS client's error. Callers stop folding early, so
+    a source of 10^5 files never pays one py4j round trip per file."""
     sc = spark.sparkContext
     jvm = sc._jvm
-    max_bytes = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
     conf = sc._jsc.hadoopConfiguration()
-    splits = 0
     for p in paths:
         jp = jvm.org.apache.hadoop.fs.Path(p)
         fs = jp.getFileSystem(conf)
         for st in fs.globStatus(jp) or []:
-            if st.isDirectory():
-                for sub in fs.listStatus(st.getPath()):
-                    if not sub.isDirectory():
-                        splits += max(1, -(-sub.getLen() // max_bytes))
-                        if splits >= stop_at:
-                            return splits
-            else:
-                splits += max(1, -(-st.getLen() // max_bytes))
+            if not st.isDirectory():
+                if not st.getPath().getName().startswith(_HIDDEN):
+                    yield st.getLen()
+                continue
+            root = len(st.getPath().toString())
+            files = fs.listFiles(st.getPath(), True)
+            while files.hasNext():
+                f = files.next()
+                below = f.getPath().toString()[root:].split("/")
+                if not any(name.startswith(_HIDDEN) for name in below):
+                    yield f.getLen()
+
+
+def estimated_file_splits(spark: SparkSession, paths: list[str], stop_at: int) -> int:
+    """Scan-split estimate from file metadata ONLY — no Spark job:
+    Σ max(1, ceil(len/maxPartitionBytes)) over the data files, stopping
+    once the count reaches ``stop_at``. Parquet row-group granularity means
+    the TRUE split count can be lower for huge single-row-group files —
+    acceptable: such files are a layout bug this estimate shouldn't reward,
+    and testdata files are all sub-split-size (estimate exact)."""
+    max_bytes = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    )
+    splits = 0
+    for n in _data_file_lengths(spark, paths):
+        splits += max(1, -(-n // max_bytes))
         if splits >= stop_at:
-            return splits
+            break
     return splits
+
+
+def input_bytes(spark: SparkSession, paths: list[str], stop_at: int) -> int:
+    """Bytes of the data files under ``paths``, stopping once the sum
+    reaches ``stop_at``."""
+    total = 0
+    for n in _data_file_lengths(spark, paths):
+        total += n
+        if total >= stop_at:
+            break
+    return total
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """CPU-parallelism guard: round-robin ``df`` to ``defaultParallelism``
+    partitions when its input yields fewer splits than cores.
+
+    Compute-bound per-row kernels (regex/minhash/vector folds, the
+    bootstrap's B hashes per row) need tasks per core, and single-row-group
+    parquet arrives as ONE split (observed: whole text pipelines and 10 s+
+    vector stages running (0+1)/1 at sf0.1 on local[32]). At production
+    sizes the scan exceeds core count in splits and this is a no-op. Row
+    order is never load-bearing, so this is placement-only; apply it to the
+    raw scan so the per-row math lands after the exchange.
+
+    Never ``.rdd.getNumPartitions()`` on a file plan: under AQE that runs a
+    Spark job per QUERY BUILD (r4 fix). The decision is metadata-only:
+     1. the plan already carries a Repartition → no-op;
+     2. file-backed plan → ``estimated_file_splits`` (no job);
+     3. non-file plan (in-memory input) → the parallelized RDD's static
+        partition count (no AQE stages underneath, the probe is free)."""
+    if "Repartition" in df._jdf.queryExecution().analyzed().toString():
+        return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if files:
+        splits = estimated_file_splits(spark, list(files), target)
+    else:
+        splits = df.rdd.getNumPartitions()
+    return df.repartition(target) if splits < target else df
+
+
+#: ``load_table``'s ``spread`` keyword shadows the function in its body
+_spread = spread
 
 
 def path_exists(spark: SparkSession, path: str) -> bool:
@@ -134,32 +202,18 @@ def load_table(
         elif dtype == "timestamp_ntz":
             # session tz is UTC, so this cast preserves the wall-clock value
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    # CPU-parallelism guard: single-row-group testdata parquet arrives as
-    # ONE split (byte-range splits can't cut inside a row group), so every
-    # narrow stage — regex/tokenize/explode/minhash chains — would
-    # serialize behind one task (observed: whole text pipelines running
-    # (0+1)/1 stages at sf0.1 on local[32]). Round-robin to core count
-    # only when the scan under-splits; production-size tables exceed core
-    # count in splits, making this a no-op — no exchange appears at
-    # 100 TB. Row order is never load-bearing (every law is keyed or
-    # hash-ordered), so this is placement-only.
-    #
-    # Only the compute-bound tables qualify: documents/embeddings feed
-    # per-row regex/minhash/vector kernels that dominate their queries.
-    # Relational tables (lineitem/orders/events) go straight into keyed
-    # joins/aggregations that shuffle on their OWN keys — a round-robin
-    # exchange before them is pure overhead (measured: +0.6-1.5 s per
-    # TPC-H-shape query at sf0.1 with no compute to parallelize).
-    # ``spread=False`` opts out for consumers that impose their OWN
-    # partitioning immediately (e.g. a keyed repartition feeding a
-    # partitionBy sink) — a round-robin exchange before theirs is pure
+    # Only the compute-bound tables are spread (see ``spread``):
+    # documents/embeddings feed per-row regex/minhash/vector kernels that
+    # dominate their queries. Relational tables (lineitem/orders/events) go
+    # straight into keyed joins/aggregations that shuffle on their OWN keys
+    # — a round-robin exchange before them is pure overhead (measured:
+    # +0.6-1.5 s per TPC-H-shape query at sf0.1 with no compute to
+    # parallelize). ``spread=False`` opts out for consumers that impose
+    # their OWN partitioning immediately (e.g. a keyed repartition feeding
+    # a partitionBy sink) — a round-robin exchange before theirs is pure
     # double-shuffle (measured: partitioned_sink 0.93 s → 0.41 s at sf0.1)
     if spread and name in _SPREAD_TABLES:
-        target = spark.sparkContext.defaultParallelism
-        # metadata-only estimate — .rdd.getNumPartitions() under AQE runs
-        # a real job per call, charged to every query build (r4 fix)
-        if estimated_file_splits(spark, [f"{sf_dir}/{name}.parquet"], target) < target:
-            df = df.repartition(target)
+        df = _spread(df)
     return df.select(*columns) if columns else df
 
 
@@ -169,8 +223,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanos → exact integer ns→µs truncation; MICROS/NTZ → plain cast under
     the UTC session). Mirrors ``load_table``'s batch normalization so the
     streaming twins see byte-identical event times."""
-    load_table(spark, sf_dir, "events")  # asserts session confs
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    load_table(spark, sf_dir, "events")  # asserts session confs, caches the schema
+    raw_schema = _SCHEMA_CACHE[f"{sf_dir}/events.parquet"]
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")  # file source needs a dir

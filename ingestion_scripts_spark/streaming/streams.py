@@ -17,19 +17,24 @@ helpers. ``ordered_batches(frames, src)`` turns a list of DataFrames into a
 file-source stream that delivers them one trigger each, in list order.
 ``run_available_now(stream, sink, checkpoint, mode=, size_from=)`` drains a
 stream into a memory sink or a ``foreachBatch`` callable with the shuffle/
-state partition count scoped to the input bytes (``stream_state_partitions``).
+state partition count scoped to the input bytes (``stream_state_partitions``,
+which measures them with ``sources.readers.input_bytes``, the same lister
+behind the batch spread gate).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import anti_join_dedup
 from ..operators.sink import make_foreach_batch_writer
+from ..sources.readers import input_bytes
 
 
 def stream_dedup_by_key(stream: DataFrame, key: str, use_state: bool = False,
@@ -327,24 +332,22 @@ def token_bucket_admit(
 STREAM_PARTITION_TARGET_BYTES = 32 << 20
 
 
-def stream_state_partitions(
-    spark: SparkSession,
-    *paths: str,
-    target_bytes: int = STREAM_PARTITION_TARGET_BYTES,
-) -> int:
+def stream_state_partitions(spark: SparkSession, *paths: str) -> int:
     """Shuffle/state partition count for ONE streaming query, derived from
     the stream's actual input bytes: ``ceil(bytes / target)``, floored at 1
     and CAPPED at the session's configured ``spark.sql.shuffle.partitions``
     (the cluster-sized value on a real deployment — this helper only ever
     lowers over-sharding, never raises beyond the session's own sizing).
 
-    ``paths`` are the stream's source files/directories (the registry
-    harnesses write their replay sources to scratch dirs, so the bytes are
-    on local disk and the walk is metadata-only — no Spark job). Hidden/
-    metadata files (``_SUCCESS``, ``.crc``) are excluded. A path with a
-    non-``file`` scheme (``s3a://``, ``hdfs://``, ...) is not walkable
-    here, so it sizes to the cap: counting it as 0 bytes would pin ONE
-    partition, and the checkpoint makes a state partition count sticky.
+    ``paths`` are the stream's source files/directories, measured by
+    ``readers.input_bytes`` (the engine's one input lister: Hadoop FS
+    client, any scheme, metadata-only, hidden/metadata files such as
+    ``_SUCCESS`` and ``.crc`` excluded), which stops listing at the cap's
+    worth of bytes. A path that does not exist counts 0 bytes. A path whose
+    filesystem cannot be reached (no client for ``s3a://``, an unknown
+    ``hdfs://`` namenode) sizes to the cap: counting it as 0 bytes would
+    pin ONE partition, and the checkpoint makes a state partition count
+    sticky.
 
     Scale shape: at bench SFs inputs are KB-MB → 1 partition (per-trigger
     work is milliseconds; parallelism buys nothing and 32x state-store
@@ -354,27 +357,13 @@ def stream_state_partitions(
     streaming exchanges cannot get from AQE itself.
     """
     import math
-    import os
-    from urllib.parse import urlparse
-    from urllib.request import url2pathname
 
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_bytes = 0
-    for p in paths:
-        url = urlparse(p)
-        if url.scheme not in ("", "file"):
-            return cap
-        p = url2pathname(url.path) if url.scheme else p
-        if os.path.isfile(p):
-            n_bytes += os.path.getsize(p)
-            continue
-        for root, _dirs, files in os.walk(p):
-            n_bytes += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-    return max(1, min(cap, math.ceil(n_bytes / target_bytes)))
+    try:
+        n_bytes = input_bytes(spark, list(paths), stop_at=cap * STREAM_PARTITION_TARGET_BYTES)
+    except (Py4JJavaError, IllegalArgumentException):
+        return cap
+    return max(1, min(cap, math.ceil(n_bytes / STREAM_PARTITION_TARGET_BYTES)))
 
 
 class scoped_shuffle_partitions:

@@ -50,54 +50,12 @@ def test_catalog_register_testdata(spark):
     assert n > 0
 
 
-#: the driver certifies registry positions 1-50 each round; this is the
-#: deliberate r14 window: the 9 r14-session additions (never-driver-green
-#: debt, window-start — the 4 docket queries plus the beyond-docket
-#: hot-bucket sweep / sweep recall / IVF postings roll / serve /
-#: streaming roll batch) + 41 re-certification anchors with the oldest
-#: driver evidence,
-#: RECOMPUTED from CORRECTNESS_r01-r13 (max green round, declaration
-#: order as tiebreak) — the nine last-green-r6 queries (cohens_kappa,
-#: calibration_bins, hits_scores, kneser_ney_ppl, dp_count_laplace,
-#: rate_limit_replay, stream_token_bucket, kcore_parts, kcenter_coreset
-#: — VERDICT r13 item 1 names exactly these) lead the anchors, then the
-#: first 32 of the last-green-r8 block in declaration order (max
-#: staleness after this round: r8 → ≤ r9 next). CORRECTNESS_r13 landed
-#: 50/50, so debt entering r14 was zero. r2's lesson: silent registry
-#: drift displaced fixed queries past position 50, so their fixes were
-#: never driver-certified — any change to this window must be a conscious
-#: edit of BOTH the registry and this pin.
-R14_WINDOW = [
-    "capped_band_roll", "capped_roll_audit", "chunk_store_roll",
-    "cdc_clamped_dedup",
-    "hot_bucket_sweep", "capped_sweep_recall", "ivf_postings_roll",
-    "ivf_roll_serve", "stream_ivf_roll",
-    "cohens_kappa", "calibration_bins", "hits_scores", "kneser_ney_ppl",
-    "dp_count_laplace", "rate_limit_replay", "stream_token_bucket",
-    "kcore_parts", "kcenter_coreset",
-    "top_orders", "region_revenue", "antijoin_new_users",
-    "dead_letter_routing", "semi_join_urgent", "cust_order_dist",
-    "rollup_revenue", "distinct_users", "asof_clicks",
-    "purchase_error_funnel", "small_quantity_revenue", "in_subquery_parts",
-    "hourly_windows", "stream_hourly_windows", "stream_sessionize",
-    "avg_precision_quality", "sq8_recall", "ndcg_quality", "zipf_slope",
-    "max_coverage", "source_unique_vocab", "ppr_coorder", "dedup_funnel",
-    "pq_recall", "conformal_gate", "isotonic_calibration",
-    "theil_sen_trend", "kmv_distinct", "wasserstein_drift",
-    "kendall_tau_daily", "mrr_quality", "link_prediction",
-]
-
-
-def test_driver_window_is_pinned():
-    names = list(E.queries().keys())
-    assert names[:50] == R14_WINDOW
-
-
 def test_window_anchors_recomputed_from_artifacts():
     """The anchor block must equal the oldest-evidence ordering computed
     from the committed CORRECTNESS artifacts — the machine form of the
-    rotation rule, so a wrong ROADMAP preview can never starve a query
-    again (r10-VERDICT wrong #2: `unpivot_part_metrics`)."""
+    rotation rule, recomputed here independently of the registry's own
+    derivation, so a wrong ROADMAP preview can never starve a query again
+    (r10-VERDICT wrong #2: `unpivot_part_metrics`)."""
     import glob
     import json
     import os
@@ -106,9 +64,6 @@ def test_window_anchors_recomputed_from_artifacts():
     green_round: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-        if rnd > 13:
-            continue  # the window was computed entering r14; later
-            # artifacts certify it but must not retro-change the pin
         for name, rec in json.load(open(path)).items():
             if (
                 rec.get("rows_match")

@@ -9,9 +9,10 @@ star-CC == union-find truth on adversarial graphs) are pinned elsewhere
 (tools/oracle_check.py sweeps, tests/test_cc_star.py); these tests pin
 the internal laws:
 
-* stream_state_partitions derives the count from bytes and only ever
-  adapts DOWN from the session's configured shuffle partitions (a
-  non-local source, which it cannot size, gets the cap);
+* stream_state_partitions derives the count from bytes
+  (``readers.input_bytes``, the one input lister) and only ever adapts
+  DOWN from the session's configured shuffle partitions (a source whose
+  filesystem cannot be reached gets the cap);
 * scoped_shuffle_partitions restores the session conf even on error;
 * connected_components_star still converges exactly at the documented
   diameter-halving budget: ``max_iter`` rounds that change the edge set
@@ -23,6 +24,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ingestion_scripts_spark.sources.readers import input_bytes
 from ingestion_scripts_spark.streaming.streams import (
     STREAM_PARTITION_TARGET_BYTES,
     scoped_shuffle_partitions,
@@ -61,9 +63,13 @@ def test_stream_state_partitions_floor_and_cap(spark, tmp_path):
 
 
 def test_stream_state_partitions_non_local_sizes_to_cap(spark, tmp_path):
-    """A non-local source cannot be walked with os.path; it must size to
-    the session cap, not count as 0 bytes and pin one sticky partition.
-    ``file:`` URIs are local and still size to their bytes."""
+    """A source whose filesystem cannot be reached must size to the
+    session cap, not count as 0 bytes and pin one sticky partition.
+    ``file:`` URIs and plain paths size to their bytes. A path is read as
+    Hadoop's ``Path`` reads it, as ``spark.read`` does: a URI is not
+    percent-decoded."""
+    from pyspark.errors import AnalysisException
+
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert cap > 1
     assert stream_state_partitions(spark, "s3a://bucket/x") == cap
@@ -75,11 +81,54 @@ def test_stream_state_partitions_non_local_sizes_to_cap(spark, tmp_path):
     with open(p / "b.parquet", "wb") as fh:
         fh.truncate(int(1.5 * STREAM_PARTITION_TARGET_BYTES))
     assert stream_state_partitions(spark, p.as_uri()) == min(2, cap)
-    q = tmp_path / "my dir%"  # as_uri() percent-encodes both characters
+    q = tmp_path / "my dir%"
     q.mkdir()
     (p / "b.parquet").rename(q / "b.parquet")
+    assert stream_state_partitions(spark, str(q)) == min(2, cap)
+    # as_uri() percent-encodes the space and the %; the encoded name does
+    # not exist for spark.read, and the sizer measures the same nothing
     assert "%20" in q.as_uri()
-    assert stream_state_partitions(spark, q.as_uri()) == min(2, cap)
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        spark.read.parquet(q.as_uri())
+    assert stream_state_partitions(spark, q.as_uri()) == 1
+
+
+def test_input_bytes_stops_at_stop_at(spark, tmp_path):
+    """``input_bytes`` sums data-file lengths (``_SUCCESS`` excluded) and
+    stops listing once the sum reaches ``stop_at``."""
+    d = tmp_path / "four"
+    d.mkdir()
+    for i in range(4):
+        (d / f"p{i}.parquet").write_bytes(b"x" * 1000)
+    (d / "_SUCCESS").write_bytes(b"y" * 5000)
+    assert input_bytes(spark, [str(d)], stop_at=1 << 30) == 4000
+    assert input_bytes(spark, [str(d)], stop_at=1500) == 2000
+    assert input_bytes(spark, [str(tmp_path / "missing")], stop_at=1) == 0
+
+
+def test_only_readers_lists_input_or_sizes_parallelism():
+    """Ratchet: ``sources/readers.py`` is the one module that lists input
+    files (``os.walk``, ``getFileSystem``) or sizes parallelism from the
+    core count (``defaultParallelism``); everything else calls its
+    ``spread`` / ``input_bytes``. ``operators/ranking.py`` reads the core
+    count for its range-partition count, which is not a spread."""
+    import pathlib
+
+    import ingestion_scripts_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    exempt = {"defaultParallelism": {"operators/ranking.py"}}
+    n_files = 0
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "sources/readers.py":
+            continue
+        n_files += 1
+        text = path.read_text()
+        for banned in ("os.walk", "getFileSystem", "defaultParallelism"):
+            if rel not in exempt.get(banned, ()):
+                assert banned not in text, f"{rel}: {banned}"
+    assert n_files > 40
 
 
 def test_scoped_shuffle_partitions_restores_on_error(spark):

@@ -8,6 +8,7 @@ from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from ingestion_scripts_spark.operators import similarity as S
+from ingestion_scripts_spark.sources import readers
 
 
 def _vecs(spark):
@@ -27,6 +28,20 @@ def test_cosine_topk_exact(spark):
     assert [(r.match_id, r.rank) for r in out] == [(1, 1), (4, 2)]
     expect = 0.9 / math.sqrt(0.81 + 0.01)
     assert abs(out[0].sim - round(expect, 6)) < 1e-6
+
+
+def test_split_estimate_lists_what_spark_reads(spark, tmp_path):
+    """The spread gate's split estimate counts the data files Spark reads:
+    a ``partitionBy`` table's files under its ``k=v/`` directories (16 of
+    them estimate at least 16 splits, so the gate adds no exchange), and not
+    the ``_SUCCESS`` marker beside a one-part Spark-written directory."""
+    parted = str(tmp_path / "parted")
+    spark.range(64).withColumn("k", F.col("id") % 16).write.partitionBy("k").parquet(parted)
+    assert readers.estimated_file_splits(spark, [parted], stop_at=1000) >= 16
+    one = str(tmp_path / "one")
+    spark.range(10).coalesce(1).write.parquet(one)
+    assert (tmp_path / "one" / "_SUCCESS").exists()
+    assert readers.estimated_file_splits(spark, [one], stop_at=1000) == 1
 
 
 def test_lsh_ann_subset_of_exact_ranking(spark):
@@ -215,7 +230,7 @@ def test_ivf_kernel_law_data_covers_its_cases(spark, law_frames):
                                                _LAW_CENTS, 1).collect()}
 
     assert cells(queries) - cells(corpus), "no probed cell without corpus rows"
-    assert S.spread(corpus).rdd.getNumPartitions() > 1
+    assert readers.spread(corpus).rdd.getNumPartitions() > 1
     by_q = {}
     for q, m, sim, rank in sorted(_ranked(_hof_ivf_topk(queries, corpus, 50, 1)),
                                   key=lambda r: (r[0], r[3])):

@@ -423,3 +423,22 @@ def test_registry_streams_use_the_replay_harness():
                     f"{path.name}:{ln}: writeStream outside {allowed}"
                 )
     assert n_files > 10
+
+
+def test_read_events_stream_reuses_the_cached_schema(spark):
+    """The raw events schema comes from ``load_table``'s schema cache, so a
+    second ``read_events_stream`` of the same directory starts no Spark job
+    (a fresh ``spark.read.parquet`` would run a footer-read job)."""
+    from ingestion_scripts_spark.registry.part01 import SF_SMOKE
+    from ingestion_scripts_spark.sources.readers import read_events_stream
+
+    sc = spark.sparkContext
+    read_events_stream(spark, SF_SMOKE)
+    sc.setJobGroup("read_events_stream_again", "second stream build")
+    try:
+        stream = read_events_stream(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stream.isStreaming
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    assert list(sc.statusTracker().getJobIdsForGroup("read_events_stream_again")) == []
