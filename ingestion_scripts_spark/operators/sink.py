@@ -3,10 +3,19 @@
 
 The reference enforces idempotence with Mongo unique indexes that reject
 duplicate keys, errors swallowed (``src/rss_consumer.py:53,166-169``;
-``src/twitter_consumer.py:44,117-119``). Spark restatement: in-batch
-``dropDuplicates(keys)`` + left-anti join against the existing table, then
-append — usable both for batch writes and as a Structured Streaming
-``foreachBatch`` function (SURVEY.md §4.3).
+``src/twitter_consumer.py:44,117-119``). Spark restatement, batch form:
+in-batch ``dropDuplicates(keys)`` + left-anti join against the existing
+table, then append (``idempotent_append``). ``make_foreach_batch_writer``
+runs the same write per micro-batch, the generic K3 writer for an arbitrary
+stream (SURVEY.md §4.3).
+
+Stream form (``streaming.streams.run_to_table``): the stream's checkpointed
+``dropDuplicates`` state store is the unique index, so a trigger appends its
+batch without reading the sink. Contract: within one query the state store
+owns uniqueness; keys in the sink when the query starts are honored through
+a key snapshot taken once at start, which also keeps replay after a restart
+idempotent; a second writer appending into the same sink while the query
+runs is not guarded.
 
 Scale: the anti-join's existing-keys side reads ONLY the key columns (column
 pruning reaches the parquet scan); for very large sinks partition the table

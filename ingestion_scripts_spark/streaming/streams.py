@@ -2,8 +2,8 @@
 
 Reference semantics restated:
 - delivery: Kafka at-least-once + unique-index dedup →
-  checkpointed micro-batches + idempotent keyed ``foreachBatch`` sink
-  (effectively-once).
+  checkpointed micro-batches whose streaming ``dropDuplicates`` state store
+  is the unique index (``run_to_table``; effectively-once).
 - the ``links`` dedup state (``src/rss_consumer.py:56-65``, stale-refresh bug
   and all) → EITHER a stream-static anti join (static side re-read every
   micro-batch — the bug fixed for free) OR streaming ``dropDuplicates``
@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import anti_join_dedup
-from ..operators.sink import make_foreach_batch_writer
-from ..sources.readers import input_bytes
+from ..operators.sink import with_audit
+from ..sources.readers import input_bytes, path_exists
 
 
 def stream_dedup_by_key(stream: DataFrame, key: str, use_state: bool = False,
@@ -81,6 +81,31 @@ def session_counts(
     )
 
 
+#: Logical operators that neither duplicate rows nor rebind attributes:
+#: a ``Deduplicate`` under a chain of them still makes the root distinct
+#: on its keys (by ``exprId``).
+_KEY_PRESERVING = frozenset({"Project", "Filter", "SubqueryAlias", "EventTimeWatermark"})
+
+
+def _distinct_on(stream: DataFrame, keys: list[str]) -> bool:
+    """Whether ``stream``'s analyzed plan proves it distinct on ``keys``:
+    from the root, through ``_KEY_PRESERVING`` nodes only, a
+    ``Deduplicate`` whose key attributes are, by ``exprId``, a subset of
+    the root's ``keys`` attributes. A renamed or recomputed key gets a new
+    ``exprId`` and fails the proof, as does any join, ``Generate``,
+    ``Union`` or ``DeduplicateWithinWatermark`` on the way (Catalyst's
+    ``distinctKeys`` is empty for a streaming ``Deduplicate``, so it cannot
+    answer this). Raises ``AnalysisException`` for a key ``stream`` lacks."""
+    key_ids = {stream._jdf.resolve(k).exprId().id() for k in keys}
+    node = stream._jdf.queryExecution().analyzed()
+    while node.getClass().getSimpleName() in _KEY_PRESERVING:
+        node = node.children().apply(0)
+    if node.getClass().getSimpleName() != "Deduplicate":
+        return False
+    dedup = node.keys()
+    return all(dedup.apply(i).exprId().id() in key_ids for i in range(dedup.size()))
+
+
 def run_to_table(
     stream: DataFrame,
     path: str,
@@ -88,11 +113,42 @@ def run_to_table(
     keys: list[str],
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Sink a stream through the idempotent keyed writer (K2+K3) with
-    checkpointing; ``availableNow`` drains existing input then stops (used in
-    tests and backfills)."""
-    writer = make_foreach_batch_writer(path, keys)
-    q = stream.writeStream.foreachBatch(writer).option("checkpointLocation", checkpoint)
+    """Append ``stream`` to the parquet table at ``path`` with the
+    ``insert_date`` audit column (K2), each key at most once (K3), with
+    checkpointing; ``availableNow`` drains existing input then stops (used
+    in tests and backfills).
+
+    The stream's own checkpointed ``dropDuplicates`` state store is the
+    unique index. It is added here only when ``_distinct_on`` cannot prove
+    the stream distinct on ``keys`` (Spark would keep a second
+    ``StreamingDeduplicate`` on the same key, a per-trigger cost); an
+    unknown key raises here, not at the first trigger. Keys already in the
+    sink when the query starts are honored through a key snapshot taken
+    once at this call: its file index is fixed, so triggers never re-read
+    the sink. Contract:
+
+    - within one query, the state store owns uniqueness;
+    - keys in the sink at start are never written again. That keeps replay
+      idempotent: Spark replays a batch only after a restart, a restart is
+      a new ``run_to_table`` call, and its snapshot holds whatever the lost
+      attempt appended;
+    - a second writer appending into the same sink while the query runs is
+      not guarded.
+
+    Checkpoints are tied to the plan: a stream that gained the added
+    ``dropDuplicates`` cannot restart from a checkpoint written without it.
+    """
+    spark = stream.sparkSession
+    if not _distinct_on(stream, keys):
+        stream = stream.dropDuplicates(keys)
+    existing = spark.read.parquet(path).select(*keys) if path_exists(spark, path) else None
+
+    def write(batch: DataFrame, batch_id: int) -> None:
+        if existing is not None:
+            batch = batch.join(existing, keys, "left_anti")
+        with_audit(batch).write.mode("append").parquet(path)
+
+    q = stream.writeStream.foreachBatch(write).option("checkpointLocation", checkpoint)
     if available_now:
         q = q.trigger(availableNow=True)
     return q.start()

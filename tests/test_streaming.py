@@ -2,8 +2,11 @@
 checkpointed idempotent sink; streaming dedup."""
 
 import json
+import os
+import time
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,6 +68,156 @@ def test_stream_dedup_and_idempotent_sink(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 3  # duplicate event_id=1 written once
     assert "insert_date" in got.columns
+
+
+def _write_ids(d, name, ids, mtime):
+    """One JSON event file per micro-batch; ``mtime`` pins the file
+    source's (modification-time) read order."""
+    p = d / name
+    with open(p, "w") as f:
+        for i in ids:
+            f.write(json.dumps({**ROWS[0], "event_id": i}) + "\n")
+    os.utime(p, (mtime, mtime))
+
+
+def _sink_ids(spark, out):
+    return sorted(r.event_id for r in spark.read.parquet(out).select("event_id").collect())
+
+
+def test_run_to_table_replay_is_idempotent(spark, tmp_path):
+    """A batch replayed after a restart re-runs against the state store of
+    the batch before it, so its keys look new again; the restarted query's
+    start snapshot of the sink keys keeps them from landing twice."""
+    src = tmp_path / "src"
+    src.mkdir()
+    out, ckpt = str(tmp_path / "out"), tmp_path / "ckpt"
+    now = time.time()
+    _write_ids(src, "b0.json", [1, 2, 2], now - 300)
+    _write_ids(src, "b1.json", [3, 4, 1], now - 200)
+
+    def run():
+        stream = ST.stream_dedup_by_key(
+            read_json_stream(spark, str(src), EVENT, max_files=1), "event_id", use_state=True
+        )
+        ST.run_to_table(stream, out, str(ckpt), keys=["event_id"]).awaitTermination(120)
+
+    run()
+    assert _sink_ids(spark, out) == [1, 2, 3, 4]
+    # lose batch 1's commit: the restart replays it, then reads b2
+    (ckpt / "commits" / "1").unlink()
+    (ckpt / "commits" / ".1.crc").unlink()
+    _write_ids(src, "b2.json", [5, 3], now - 100)
+    run()
+    assert _sink_ids(spark, out) == [1, 2, 3, 4, 5]
+
+
+def test_run_to_table_honors_keys_in_the_sink_at_start(spark, tmp_path):
+    """A key that ``idempotent_append`` wrote before the stream started is
+    not written again."""
+    from ingestion_scripts_spark.operators.sink import idempotent_append
+
+    out = str(tmp_path / "out")
+    pre = spark.read.schema(EVENT).json(_write_events(tmp_path, "pre", ROWS[:1]))
+    idempotent_append(pre, out, ["event_id"])
+    stream = ST.stream_dedup_by_key(
+        read_json_stream(spark, _write_events(tmp_path, "src", ROWS), EVENT),
+        "event_id", use_state=True,
+    )
+    ST.run_to_table(stream, out, str(tmp_path / "ckpt"), keys=["event_id"]).awaitTermination(120)
+    assert _sink_ids(spark, out) == [1, 2, 3]
+
+
+def test_run_to_table_dedups_a_raw_stream(spark, tmp_path):
+    """A stream with no ``dropDuplicates`` of its own lands each key once,
+    within a batch and across batches."""
+    src = tmp_path / "src"
+    src.mkdir()
+    now = time.time()
+    _write_ids(src, "b0.json", [1, 2, 1], now - 200)
+    _write_ids(src, "b1.json", [2, 3, 3], now - 100)
+    out = str(tmp_path / "out")
+    stream = read_json_stream(spark, str(src), EVENT, max_files=1)
+    ST.run_to_table(stream, out, str(tmp_path / "ckpt"), keys=["event_id"]).awaitTermination(120)
+    assert _sink_ids(spark, out) == [1, 2, 3]
+
+
+def test_run_to_table_unknown_key_raises_at_call_time(spark, tmp_path):
+    stream = read_json_stream(spark, _write_events(tmp_path, "src", ROWS), EVENT)
+    active = len(spark.streams.active)
+    with pytest.raises(AnalysisException):
+        ST.run_to_table(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), keys=["nope"])
+    assert len(spark.streams.active) == active
+    assert not (tmp_path / "ckpt").exists()
+
+
+def _rate(spark):
+    return spark.readStream.format("rate").load().select(
+        F.col("value").alias("a"), (F.col("value") % 3).alias("b"), "timestamp"
+    )
+
+
+def _dedup_a(spark):
+    return _rate(spark).dropDuplicates(["a"])
+
+
+@pytest.mark.parametrize("proves,keys,build", [
+    pytest.param(True, ["a"], lambda s: (
+        _dedup_a(s).alias("t").withWatermark("timestamp", "1 minute")
+        .withColumn("c", F.col("b") + 1).filter(F.col("b") > 0)), id="dedup_then_project_filter"),
+    pytest.param(True, ["a", "b"], _dedup_a, id="dedup_a_sink_keys_a_b"),
+    pytest.param(False, ["a"], _rate, id="raw"),
+    pytest.param(False, ["k"], lambda s: _dedup_a(s).withColumnRenamed("a", "k"),
+                 id="renamed_key"),
+    pytest.param(False, ["a"], lambda s: _dedup_a(s).withColumn("a", F.col("a") + 0),
+                 id="rebuilt_key"),
+    pytest.param(False, ["a"], lambda s: _dedup_a(s).join(
+        s.range(3).withColumnRenamed("id", "a"), "a"), id="join_after"),
+    pytest.param(False, ["a"], lambda s: _dedup_a(s).withColumn(
+        "x", F.explode(F.array(F.lit(1), F.lit(2)))), id="explode_after"),
+    pytest.param(False, ["a"], lambda s: _rate(s).withWatermark(
+        "timestamp", "1 minute").dropDuplicatesWithinWatermark(["a"]), id="within_watermark"),
+    pytest.param(False, ["a"], lambda s: _dedup_a(s).union(_dedup_a(s)), id="union_of_dedups"),
+    pytest.param(False, ["a"], lambda s: _rate(s).dropDuplicates(["a", "b"]),
+                 id="dedup_a_b_sink_key_a"),
+])
+def test_distinct_on_plan_walk(spark, proves, keys, build):
+    """``_distinct_on`` passes Project, Filter, SubqueryAlias and
+    EventTimeWatermark only, and matches keys by ``exprId``."""
+    assert ST._distinct_on(build(spark), keys) is proves
+
+
+def test_run_to_table_steady_trigger_runs_one_job(spark, tmp_path):
+    """Ratchet: a data trigger of a deduplicated stream into a sink the
+    query created runs one Spark job, the append; no trigger reads the
+    sink. Jobs are counted in the app status store, which holds the jobs
+    of streaming execution threads too."""
+    stage, inbox = tmp_path / "stage", tmp_path / "inbox"
+    stage.mkdir()
+    inbox.mkdir()
+    stream = ST.stream_dedup_by_key(
+        read_json_stream(spark, str(inbox), EVENT), "event_id", use_state=True
+    )
+    q = ST.run_to_table(
+        stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), ["event_id"], available_now=False
+    )
+    sc = spark.sparkContext._jsc.sc()
+
+    def trigger(name, ids):
+        _write_ids(stage, name, ids, time.time())
+        os.rename(stage / name, inbox / name)
+        q.processAllAvailable()
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    try:
+        trigger("b0.json", [1, 2])  # creates the sink
+        before = trigger("b1.json", [3, 1])
+        after = trigger("b2.json", [4, 2])
+    finally:
+        q.stop()
+    assert len(after - before) == 1
+    assert _sink_ids(spark, str(tmp_path / "out")) == [1, 2, 3, 4]
 
 
 def test_stream_dedup_static_anti_join(spark, tmp_path):
