@@ -5,9 +5,8 @@ The reference enforces idempotence with Mongo unique indexes that reject
 duplicate keys, errors swallowed (``src/rss_consumer.py:53,166-169``;
 ``src/twitter_consumer.py:44,117-119``). Spark restatement, batch form:
 in-batch ``dropDuplicates(keys)`` + left-anti join against the existing
-table, then append (``idempotent_append``). ``make_foreach_batch_writer``
-runs the same write per micro-batch, the generic K3 writer for an arbitrary
-stream (SURVEY.md §4.3).
+table, then append (``idempotent_append``); a ``foreachBatch`` body may call
+it per micro-batch (SURVEY.md §4.3).
 
 Stream form (``streaming.streams.run_to_table``): the stream's checkpointed
 ``dropDuplicates`` state store is the unique index, so a trigger appends its
@@ -67,20 +66,6 @@ def idempotent_append(
     if audit:
         batch = with_audit(batch)
     batch.write.mode("append").parquet(path)
-
-
-def make_foreach_batch_writer(path: str, keys: list[str], audit: bool = True):
-    """``foreachBatch``-compatible idempotent keyed writer for streams.
-
-    Checkpointing gives exactly-once *state*; the keyed anti-join makes the
-    write idempotent under micro-batch replay — together the at-least-once →
-    effectively-once upgrade the reference got from its unique index.
-    """
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append(batch_df, path, keys, audit=audit)
-
-    return write
 
 
 def dead_letter_split(

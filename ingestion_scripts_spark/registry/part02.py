@@ -1,12 +1,5 @@
-"""Registry implementation, part 02 of 6 — a mechanical,
-order-preserving split of the former monolithic ``__spark_entry__.py``
-(r5 VERDICT item 7). Statements appear in their original order; parts
-chain via ``import *`` with an explicit cumulative ``__all__`` (which
-star-imports underscore-prefixed helpers that would otherwise be
-skipped), so every call-time name resolves exactly as it did in the
-single module. The stable front door (entry/queries/oracle_sql and the
-driver-window registry order) remains in ``__spark_entry__.py``.
-"""
+"""Registry implementation, part 02 — an order-preserving slice of the
+former monolithic ``__spark_entry__.py`` (r5 VERDICT item 7)."""
 
 from __future__ import annotations
 
@@ -1980,258 +1973,4 @@ FROM lineitem GROUP BY 1 ORDER BY l_returnflag
 """
 
 
-__all__ = [
-    '_SCRATCH_DIRS',
-    '_scratch',
-    'SF_SMOKE',
-    '_t',
-    '_fmt_ts',
-    'SQL_TS',
-    'SQL_TS_US',
-    '_arr_str',
-    'SQL_ARR_STR',
-    '_doc_tokens',
-    'q_flagship_doc_keywords',
-    '_TOKS_SQL',
-    'SQL_FLAGSHIP',
-    'q_pricing_summary',
-    'SQL_PRICING',
-    'q_top_orders',
-    'SQL_TOP_ORDERS',
-    'q_region_revenue',
-    'SQL_REGION_REVENUE',
-    'CUTOFF',
-    'q_antijoin_new_users',
-    'SQL_ANTIJOIN',
-    'q_dead_letter_routing',
-    'SQL_DEAD_LETTER',
-    'q_clean_text',
-    'SQL_CLEAN',
-    'q_hashtags',
-    'SQL_HASHTAGS',
-    'q_stopword_filter',
-    'SQL_STOPWORD',
-    'q_bigram_pairs',
-    'SQL_BIGRAM_PAIRS',
-    'q_parse_rfc822',
-    'SQL_PARSE_RFC822',
-    'q_parse_struct_time',
-    'SQL_PARSE_STRUCT_TIME',
-    'q_parse_simple',
-    'SQL_PARSE_SIMPLE',
-    'q_parse_zoned',
-    'SQL_PARSE_ZONED',
-    'q_semi_join_urgent',
-    'SQL_SEMI_JOIN',
-    'q_cust_order_dist',
-    'SQL_CUST_ORDER_DIST',
-    'q_rollup_revenue',
-    'SQL_ROLLUP',
-    'q_distinct_users',
-    'SQL_DISTINCT_USERS',
-    'q_asof_clicks',
-    'SQL_ASOF',
-    'q_purchase_error_funnel',
-    'SQL_FUNNEL',
-    'q_small_quantity_revenue',
-    'SQL_SMALL_QTY',
-    'q_in_subquery_parts',
-    'SQL_IN_SUBQUERY',
-    'q_value_percentiles',
-    'SQL_PERCENTILES',
-    'q_pivot_weekday',
-    'SQL_PIVOT',
-    'q_running_user_value',
-    'SQL_RUNNING',
-    'q_clicked_never_purchased',
-    'SQL_EXCEPT',
-    'q_late_ship_priority',
-    'SQL_LATE_SHIP',
-    'q_parts_never_discounted',
-    'SQL_PARTS_NEVER_DISC',
-    'q_user_value_quartiles',
-    'SQL_USER_QUARTILES',
-    'q_props_extract',
-    'SQL_PROPS_EXTRACT',
-    'q_exact_dedup',
-    'SQL_EXACT_DEDUP',
-    'q_segment_dedup',
-    'SQL_SEGMENT_DEDUP',
-    'q_minhash_near_dups',
-    '_SH',
-    '_SIG',
-    'SQL_MINHASH',
-    'q_cross_split_contamination',
-    '_sql_cross_split_contamination',
-    'q_ngram_jaccard',
-    'SQL_NGRAM_JACCARD',
-    'q_simhash',
-    'SQL_SIMHASH',
-    'q_fingerprint',
-    'SQL_FINGERPRINT',
-    'q_winnow_fingerprints',
-    'SQL_WINNOW',
-    'q_salted_distinct_users',
-    'SQL_SALTED_DISTINCT',
-    'q_skew_join_revenue',
-    'SQL_SKEW_JOIN',
-    'q_embedding_topk',
-    '_SQL_NORM',
-    'SQL_EMBEDDING_TOPK',
-    'q_lsh_ann_topk',
-    '_PLANES',
-    '_sql_lsh_ann',
-    'q_ivf_ann_topk',
-    '_IVF_CENTS',
-    '_sql_ivf_ann',
-    'q_ann_recall',
-    '_sql_ann_recall',
-    'q_ivf_trained_topk',
-    '_sql_ivf_trained',
-    'q_ivf_ann_topk_mp',
-    '_sql_ivf_ann_mp',
-    'q_embedding_near_dup',
-    'q_embedding_near_dup_fold',
-    'SQL_EMBEDDING_NEAR_DUP',
-    'q_lang_id',
-    'SQL_LANG_ID',
-    'q_quality',
-    '_Q',
-    'SQL_QUALITY',
-    'q_vocab_topn',
-    'SQL_VOCAB',
-    'q_quality_gate',
-    '_QG',
-    'SQL_QUALITY_GATE',
-    'q_token_counts',
-    'SQL_TOKEN_COUNTS',
-    'q_sentiment',
-    '_SENT',
-    'SQL_SENTIMENT',
-    'q_hourly_windows',
-    'SQL_HOURLY',
-    'q_stream_sessionize',
-    'SQL_STREAM_SESSIONIZE',
-    'q_stream_hourly_windows',
-    'SQL_STREAM_HOURLY',
-    'q_stream_dedup_counts',
-    'SQL_STREAM_DEDUP',
-    'q_sessionize',
-    'SQL_SESSIONIZE',
-    '_EPOCH0',
-    '_doc_ts',
-    '_SQL_DOC_TS',
-    'q_twitter_pipeline',
-    '_TW_TEXT',
-    '_TW_SENT',
-    'SQL_TWITTER_PIPELINE',
-    'q_reddit_pipeline',
-    '_RD_TITLE_SENT',
-    '_RD_COMMENT_SENT',
-    'SQL_REDDIT_PIPELINE',
-    'q_rss_pipeline',
-    'SQL_RSS_PIPELINE',
-    'q_multimodal_meta',
-    'SQL_MULTIMODAL',
-    'q_multimodal_features',
-    'SQL_MULTIMODAL_FEATURES',
-    'q_langid_confusion',
-    '_sql_langid_confusion',
-    'q_dataset_card',
-    '_sql_dataset_card',
-    'q_incremental_ingest',
-    'SQL_INCREMENTAL_INGEST',
-    'q_skew_report',
-    'SQL_SKEW_REPORT',
-    'q_observed_ingest',
-    'SQL_OBSERVED_INGEST',
-    '_Z_BITS',
-    '_zval',
-    '_sql_zval',
-    'q_zorder_layout',
-    '_sql_zorder_layout',
-    'q_multimodal_frames',
-    'SQL_MULTIMODAL_FRAMES',
-    'q_curation_pipeline',
-    '_CUR_Q',
-    '_CUR_SH',
-    '_CUR_SIG',
-    'SQL_CURATION',
-    'q_repetition_signals',
-    'SQL_REPETITION',
-    '_pii_text',
-    '_SQL_PII_TEXT',
-    'q_pii_scrub',
-    '_PII',
-    'SQL_PII_SCRUB',
-    'q_contamination',
-    'SQL_CONTAMINATION',
-    '_SAMPLE_RATES',
-    '_SAMPLE_DEFAULT',
-    'q_stratified_sample',
-    '_SAMPLE_CASE',
-    'SQL_STRATIFIED_SAMPLE',
-    'q_tfidf_top_terms',
-    'SQL_TFIDF',
-    'q_dup_clusters',
-    'SQL_DUP_CLUSTERS',
-    'q_hll_distinct_users',
-    '_sql_hll',
-    'q_kmeans_clusters',
-    '_sql_kmeans_base',
-    '_sql_kmeans_clusters',
-    'q_kmeans_sample',
-    '_sql_kmeans_sample',
-    '_DSIR_B',
-    'q_importance_weights',
-    'SQL_IMPORTANCE',
-    'q_pmi_bigrams',
-    '_SQL_TOKS_LOWER',
-    'SQL_PMI',
-    'q_nation_profit',
-    'SQL_NATION_PROFIT',
-    'q_stream_enriched_counts',
-    'SQL_STREAM_ENRICHED',
-    'q_stream_late_drop',
-    'SQL_STREAM_LATE_DROP',
-    'q_simhash_near_dups',
-    '_sql_simhash_pairs',
-    '_PACK_SEQ_LEN',
-    'q_sequence_packing',
-    'SQL_SEQUENCE_PACKING',
-    'q_stream_stream_join',
-    'SQL_STREAM_STREAM_JOIN',
-    'q_stream_outer_join',
-    'SQL_STREAM_OUTER_JOIN',
-    'q_scd_upsert',
-    'SQL_SCD_UPSERT',
-    '_DUPSPAN_N',
-    'q_dup_span_fraction',
-    'SQL_DUP_SPAN',
-    'q_jsonl_source',
-    'SQL_JSONL_SOURCE',
-    'q_anomaly_zscore',
-    'SQL_ANOMALY',
-    'q_retention_cohorts',
-    'SQL_RETENTION',
-    '_MIX_ALPHA',
-    '_MIX_TARGET_FRAC',
-    'q_temperature_mix',
-    'SQL_TEMPERATURE_MIX',
-    'q_curation_to_sequences',
-    'SQL_CURATION_SEQ',
-    'q_csv_source',
-    'SQL_CSV_SOURCE',
-    'q_corrupt_record_routing',
-    'SQL_CORRUPT_ROUTING',
-    'q_hll_merge_rollup',
-    '_sql_hll_merge_rollup',
-    'q_grouping_sets_revenue',
-    'SQL_GROUPING_SETS',
-    'q_window_dist_funcs',
-    'SQL_WINDOW_DIST',
-    'q_lang_histograms',
-    'SQL_LANG_HIST',
-    'q_stats_corr',
-    'SQL_STATS_CORR',
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

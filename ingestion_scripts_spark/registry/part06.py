@@ -1,12 +1,5 @@
-"""Registry implementation, part 06 of 6 — a mechanical,
-order-preserving split of the former monolithic ``__spark_entry__.py``
-(r5 VERDICT item 7). Statements appear in their original order; parts
-chain via ``import *`` with an explicit cumulative ``__all__`` (which
-star-imports underscore-prefixed helpers that would otherwise be
-skipped), so every call-time name resolves exactly as it did in the
-single module. The stable front door (entry/queries/oracle_sql and the
-driver-window registry order) remains in ``__spark_entry__.py``.
-"""
+"""Registry implementation, part 06 — an order-preserving slice of the
+former monolithic ``__spark_entry__.py`` (r5 VERDICT item 7)."""
 
 from __future__ import annotations
 
@@ -26,7 +19,6 @@ from ingestion_scripts_spark.operators import similarity as SIM
 from ingestion_scripts_spark.operators import text_analysis as TA
 
 from ingestion_scripts_spark.registry.part05 import *  # noqa: F401,F403
-from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 
@@ -1864,560 +1856,4 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-__all__ = [
-    '_SCRATCH_DIRS',
-    '_scratch',
-    'SF_SMOKE',
-    '_t',
-    '_fmt_ts',
-    'SQL_TS',
-    'SQL_TS_US',
-    '_arr_str',
-    'SQL_ARR_STR',
-    '_doc_tokens',
-    'q_flagship_doc_keywords',
-    '_TOKS_SQL',
-    'SQL_FLAGSHIP',
-    'q_pricing_summary',
-    'SQL_PRICING',
-    'q_top_orders',
-    'SQL_TOP_ORDERS',
-    'q_region_revenue',
-    'SQL_REGION_REVENUE',
-    'CUTOFF',
-    'q_antijoin_new_users',
-    'SQL_ANTIJOIN',
-    'q_dead_letter_routing',
-    'SQL_DEAD_LETTER',
-    'q_clean_text',
-    'SQL_CLEAN',
-    'q_hashtags',
-    'SQL_HASHTAGS',
-    'q_stopword_filter',
-    'SQL_STOPWORD',
-    'q_bigram_pairs',
-    'SQL_BIGRAM_PAIRS',
-    'q_parse_rfc822',
-    'SQL_PARSE_RFC822',
-    'q_parse_struct_time',
-    'SQL_PARSE_STRUCT_TIME',
-    'q_parse_simple',
-    'SQL_PARSE_SIMPLE',
-    'q_parse_zoned',
-    'SQL_PARSE_ZONED',
-    'q_semi_join_urgent',
-    'SQL_SEMI_JOIN',
-    'q_cust_order_dist',
-    'SQL_CUST_ORDER_DIST',
-    'q_rollup_revenue',
-    'SQL_ROLLUP',
-    'q_distinct_users',
-    'SQL_DISTINCT_USERS',
-    'q_asof_clicks',
-    'SQL_ASOF',
-    'q_purchase_error_funnel',
-    'SQL_FUNNEL',
-    'q_small_quantity_revenue',
-    'SQL_SMALL_QTY',
-    'q_in_subquery_parts',
-    'SQL_IN_SUBQUERY',
-    'q_value_percentiles',
-    'SQL_PERCENTILES',
-    'q_pivot_weekday',
-    'SQL_PIVOT',
-    'q_running_user_value',
-    'SQL_RUNNING',
-    'q_clicked_never_purchased',
-    'SQL_EXCEPT',
-    'q_late_ship_priority',
-    'SQL_LATE_SHIP',
-    'q_parts_never_discounted',
-    'SQL_PARTS_NEVER_DISC',
-    'q_user_value_quartiles',
-    'SQL_USER_QUARTILES',
-    'q_props_extract',
-    'SQL_PROPS_EXTRACT',
-    'q_exact_dedup',
-    'SQL_EXACT_DEDUP',
-    'q_segment_dedup',
-    'SQL_SEGMENT_DEDUP',
-    'q_minhash_near_dups',
-    '_SH',
-    '_SIG',
-    'SQL_MINHASH',
-    'q_cross_split_contamination',
-    '_sql_cross_split_contamination',
-    'q_ngram_jaccard',
-    'SQL_NGRAM_JACCARD',
-    'q_simhash',
-    'SQL_SIMHASH',
-    'q_fingerprint',
-    'SQL_FINGERPRINT',
-    'q_winnow_fingerprints',
-    'SQL_WINNOW',
-    'q_salted_distinct_users',
-    'SQL_SALTED_DISTINCT',
-    'q_skew_join_revenue',
-    'SQL_SKEW_JOIN',
-    'q_embedding_topk',
-    '_SQL_NORM',
-    'SQL_EMBEDDING_TOPK',
-    'q_lsh_ann_topk',
-    '_PLANES',
-    '_sql_lsh_ann',
-    'q_ivf_ann_topk',
-    '_IVF_CENTS',
-    '_sql_ivf_ann',
-    'q_ann_recall',
-    '_sql_ann_recall',
-    'q_ivf_trained_topk',
-    '_sql_ivf_trained',
-    'q_ivf_ann_topk_mp',
-    '_sql_ivf_ann_mp',
-    'q_embedding_near_dup',
-    'q_embedding_near_dup_fold',
-    'SQL_EMBEDDING_NEAR_DUP',
-    'q_lang_id',
-    'SQL_LANG_ID',
-    'q_quality',
-    '_Q',
-    'SQL_QUALITY',
-    'q_vocab_topn',
-    'SQL_VOCAB',
-    'q_quality_gate',
-    '_QG',
-    'SQL_QUALITY_GATE',
-    'q_token_counts',
-    'SQL_TOKEN_COUNTS',
-    'q_sentiment',
-    '_SENT',
-    'SQL_SENTIMENT',
-    'q_hourly_windows',
-    'SQL_HOURLY',
-    'q_stream_sessionize',
-    'SQL_STREAM_SESSIONIZE',
-    'q_stream_hourly_windows',
-    'SQL_STREAM_HOURLY',
-    'q_stream_dedup_counts',
-    'SQL_STREAM_DEDUP',
-    'q_sessionize',
-    'SQL_SESSIONIZE',
-    '_EPOCH0',
-    '_doc_ts',
-    '_SQL_DOC_TS',
-    'q_twitter_pipeline',
-    '_TW_TEXT',
-    '_TW_SENT',
-    'SQL_TWITTER_PIPELINE',
-    'q_reddit_pipeline',
-    '_RD_TITLE_SENT',
-    '_RD_COMMENT_SENT',
-    'SQL_REDDIT_PIPELINE',
-    'q_rss_pipeline',
-    'SQL_RSS_PIPELINE',
-    'q_multimodal_meta',
-    'SQL_MULTIMODAL',
-    'q_multimodal_features',
-    'SQL_MULTIMODAL_FEATURES',
-    'q_langid_confusion',
-    '_sql_langid_confusion',
-    'q_dataset_card',
-    '_sql_dataset_card',
-    'q_incremental_ingest',
-    'SQL_INCREMENTAL_INGEST',
-    'q_skew_report',
-    'SQL_SKEW_REPORT',
-    'q_observed_ingest',
-    'SQL_OBSERVED_INGEST',
-    '_Z_BITS',
-    '_zval',
-    '_sql_zval',
-    'q_zorder_layout',
-    '_sql_zorder_layout',
-    'q_multimodal_frames',
-    'SQL_MULTIMODAL_FRAMES',
-    'q_curation_pipeline',
-    '_CUR_Q',
-    '_CUR_SH',
-    '_CUR_SIG',
-    'SQL_CURATION',
-    'q_repetition_signals',
-    'SQL_REPETITION',
-    '_pii_text',
-    '_SQL_PII_TEXT',
-    'q_pii_scrub',
-    '_PII',
-    'SQL_PII_SCRUB',
-    'q_contamination',
-    'SQL_CONTAMINATION',
-    '_SAMPLE_RATES',
-    '_SAMPLE_DEFAULT',
-    'q_stratified_sample',
-    '_SAMPLE_CASE',
-    'SQL_STRATIFIED_SAMPLE',
-    'q_tfidf_top_terms',
-    'SQL_TFIDF',
-    'q_dup_clusters',
-    'SQL_DUP_CLUSTERS',
-    'q_hll_distinct_users',
-    '_sql_hll',
-    'q_kmeans_clusters',
-    '_sql_kmeans_base',
-    '_sql_kmeans_clusters',
-    'q_kmeans_sample',
-    '_sql_kmeans_sample',
-    '_DSIR_B',
-    'q_importance_weights',
-    'SQL_IMPORTANCE',
-    'q_pmi_bigrams',
-    '_SQL_TOKS_LOWER',
-    'SQL_PMI',
-    'q_nation_profit',
-    'SQL_NATION_PROFIT',
-    'q_stream_enriched_counts',
-    'SQL_STREAM_ENRICHED',
-    'q_stream_late_drop',
-    'SQL_STREAM_LATE_DROP',
-    'q_simhash_near_dups',
-    '_sql_simhash_pairs',
-    '_PACK_SEQ_LEN',
-    'q_sequence_packing',
-    'SQL_SEQUENCE_PACKING',
-    'q_stream_stream_join',
-    'SQL_STREAM_STREAM_JOIN',
-    'q_stream_outer_join',
-    'SQL_STREAM_OUTER_JOIN',
-    'q_scd_upsert',
-    'SQL_SCD_UPSERT',
-    '_DUPSPAN_N',
-    'q_dup_span_fraction',
-    'SQL_DUP_SPAN',
-    'q_jsonl_source',
-    'SQL_JSONL_SOURCE',
-    'q_anomaly_zscore',
-    'SQL_ANOMALY',
-    'q_retention_cohorts',
-    'SQL_RETENTION',
-    '_MIX_ALPHA',
-    '_MIX_TARGET_FRAC',
-    'q_temperature_mix',
-    'SQL_TEMPERATURE_MIX',
-    'q_curation_to_sequences',
-    'SQL_CURATION_SEQ',
-    'q_csv_source',
-    'SQL_CSV_SOURCE',
-    'q_corrupt_record_routing',
-    'SQL_CORRUPT_ROUTING',
-    'q_hll_merge_rollup',
-    '_sql_hll_merge_rollup',
-    'q_grouping_sets_revenue',
-    'SQL_GROUPING_SETS',
-    'q_window_dist_funcs',
-    'SQL_WINDOW_DIST',
-    'q_lang_histograms',
-    'SQL_LANG_HIST',
-    'q_stats_corr',
-    'SQL_STATS_CORR',
-    'q_session_window_native',
-    'SQL_SESSION_WINDOW',
-    'q_session_window_dynamic',
-    'SQL_SESSION_DYNAMIC',
-    'q_semdedup',
-    '_sql_semdedup',
-    'q_cms_heavy_hitters',
-    '_sql_cms_heavy_hitters',
-    'q_doc_chunks',
-    '_SQL_DOC_CHUNKS',
-    'q_gopher_rules',
-    '_sql_gopher_rules',
-    'q_priority_sample',
-    '_sql_priority_sample',
-    'q_domain_caps',
-    '_sql_domain_caps',
-    'q_stream_stateful_counts',
-    'SQL_STREAM_STATEFUL',
-    'q_stream_wm_dedup',
-    'q_cumulative_users',
-    'SQL_CUMULATIVE_USERS',
-    'q_first_touch_attribution',
-    'SQL_FIRST_TOUCH',
-    'q_session_funnel',
-    'SQL_SESSION_FUNNEL',
-    'q_stream_idempotent_sink',
-    'SQL_STREAM_IDEMPOTENT',
-    'q_stream_fanout_sinks',
-    'SQL_STREAM_FANOUT',
-    'q_bloom_gate',
-    '_sql_bloom_gate',
-    'q_idle_rich_customers',
-    'SQL_IDLE_RICH',
-    '_PROFILE_COLS',
-    'q_column_profile',
-    '_sql_column_profile',
-    'q_min_price_supplier',
-    'SQL_MIN_PRICE_SUPPLIER',
-    'q_char_entropy',
-    'SQL_CHAR_ENTROPY',
-    '_PPL_V',
-    'q_unigram_ppl',
-    '_sql_unigram_ppl',
-    '_HQ_BINS',
-    '_HQ_PS',
-    'q_hist_quantiles',
-    '_sql_hist_quantiles',
-    'q_dataset_split',
-    '_sql_dataset_split',
-    'q_rolling_7d_value',
-    'SQL_ROLLING_7D',
-    'q_partitioned_sink',
-    'SQL_PARTITIONED_SINK',
-    'q_bigram_backoff_ppl',
-    '_sql_bigram_backoff',
-    'q_bpe_merges',
-    '_sql_bpe_merges',
-    'q_bpe_tokenize',
-    '_sql_bpe_tokenize',
-    'q_orc_source',
-    'SQL_ORC_SOURCE',
-    'q_dedup_best_survivor',
-    'SQL_BEST_SURVIVOR',
-    'q_boilerplate_segments',
-    'SQL_BOILERPLATE',
-    'q_daily_gapfill',
-    'SQL_DAILY_GAPFILL',
-    'q_interval_join_hot_hours',
-    'SQL_INTERVAL_JOIN',
-    'q_bucketed_join_revenue',
-    'SQL_BUCKETED_JOIN',
-    'q_winsorized_lengths',
-    'SQL_WINSORIZED',
-    'q_snapshot_diff',
-    'SQL_SNAPSHOT_DIFF',
-    'q_weekly_growth',
-    'SQL_WEEKLY_GROWTH',
-    'q_top_customer_by_nation',
-    'SQL_TOP_CUSTOMER',
-    'q_custom_feed_source',
-    '_sql_custom_feed',
-    'q_stream_custom_source',
-    '_sql_stream_custom_feed',
-    'q_dq_checks',
-    'SQL_DQ_CHECKS',
-    'q_sessionize_udtf',
-    'q_variant_props',
-    'SQL_VARIANT_PROPS',
-    'q_unpivot_part_metrics',
-    'SQL_UNPIVOT_PART',
-    'q_event_transitions',
-    'SQL_EVENT_TRANSITIONS',
-    'q_safe_cast_ingest',
-    'SQL_SAFE_CAST',
-    'q_url_canonicalize',
-    'SQL_URL_CANON',
-    'q_ewma_user_value',
-    'SQL_EWMA',
-    'q_strip_accents_norm',
-    'SQL_STRIP_ACCENTS',
-    'q_spearman_corr',
-    'SQL_SPEARMAN',
-    'q_robust_zscore',
-    'SQL_ROBUST_ZSCORE',
-    'q_hash_sample_per_key',
-    'SQL_HASH_SAMPLE',
-    'q_cube_revenue',
-    'SQL_CUBE_REVENUE',
-    'q_setsim_join_pairs',
-    'SQL_SETSIM_JOIN',
-    'q_interval_join_bucketed',
-    'q_sparse_cosine_pairs',
-    'SQL_SPARSE_COSINE',
-    'q_sliding_windows',
-    'SQL_SLIDING_WINDOWS',
-    'q_xml_source',
-    'SQL_XML_SOURCE',
-    'q_supplier_wait_fault',
-    'SQL_SUPPLIER_WAIT',
-    'q_user_trend_slope',
-    'SQL_TREND_SLOPE',
-    'q_custom_feed_sink',
-    'SQL_CUSTOM_FEED_SINK',
-    'q_set_ops_users',
-    'SQL_SET_OPS',
-    'q_lateral_top_orders',
-    'SQL_LATERAL_TOP',
-    'q_scd_point_in_time',
-    'SQL_SCD_PIT',
-    'q_wap_publish',
-    'SQL_WAP_PUBLISH',
-    'q_score_quantile_norm',
-    'SQL_QUANTILE_NORM',
-    'q_trigram_udtf_top',
-    'SQL_TRIGRAM_UDTF',
-    'q_schema_evolution',
-    'SQL_SCHEMA_EVOLUTION',
-    'q_benford_profile',
-    'SQL_BENFORD',
-    'q_bm25_topk',
-    'SQL_BM25_TOPK',
-    'q_phrase_search',
-    'SQL_PHRASE_SEARCH',
-    '_TOKEN_BUDGETS',
-    '_TOKEN_BUDGET_DEFAULT',
-    'q_token_budget_mix',
-    '_TOKEN_BUDGET_CASE',
-    'SQL_TOKEN_BUDGET_MIX',
-    'q_pagerank_transitions',
-    '_pagerank_sql',
-    'SQL_PAGERANK',
-    'q_dedup_threshold_curve',
-    'SQL_DEDUP_THRESHOLD_CURVE',
-    'q_incremental_near_dup',
-    'SQL_INCREMENTAL_NEAR_DUP',
-    'q_embedding_profile',
-    'SQL_EMBEDDING_PROFILE',
-    'q_dup_cluster_stats',
-    'SQL_DUP_CLUSTER_STATS',
-    'q_source_similarity',
-    '_CW_H1',
-    '_CW_H2',
-    'SQL_SOURCE_SIMILARITY',
-    'q_dedup_recall',
-    'SQL_DEDUP_RECALL',
-    'q_stream_incremental_dedup',
-    'SQL_STREAM_INCREMENTAL_DEDUP',
-    'q_tokenizer_fertility',
-    'SQL_TOKENIZER_FERTILITY',
-    'q_stratified_split',
-    'SQL_STRATIFIED_SPLIT',
-    'q_heavy_hitter_recall',
-    '_sql_heavy_hitter_recall',
-    'q_path_motifs',
-    'SQL_PATH_MOTIFS',
-    'SQL_PORTABLE',
-    'q_sql_front_door',
-    'q_linear_interpolation',
-    'SQL_LINEAR_INTERPOLATION',
-    'q_bloom_join_revenue',
-    'SQL_BLOOM_JOIN',
-    'q_multimodal_resize',
-    'SQL_MULTIMODAL_RESIZE',
-    'q_last_touch_attribution',
-    'SQL_LAST_TOUCH',
-    'q_embedding_outliers',
-    'SQL_EMBEDDING_OUTLIERS',
-    'q_ngram_novelty',
-    'SQL_NGRAM_NOVELTY',
-    'q_rfm_segments',
-    'SQL_RFM_SEGMENTS',
-    'q_textrank_summary',
-    '_sql_textrank_summary',
-    'SQL_PIPE_LITERAL',
-    'SQL_PIPE_FRONT_DOOR',
-    'q_sql_pipe_front_door',
-    'q_stream_state_reader',
-    'q_edit_distance_names',
-    'SQL_EDIT_DISTANCE_NAMES',
-    'q_basket_pair_lift',
-    'SQL_BASKET_PAIR_LIFT',
-    'q_triangle_cooccurrence',
-    'SQL_TRIANGLE_COOCCURRENCE',
-    'q_token_kl_drift',
-    'SQL_TOKEN_KL_DRIFT',
-    'q_leakage_safe_split',
-    '_sql_leakage_safe_split',
-    'q_hybrid_rank_fusion',
-    '_sql_hybrid_rank_fusion',
-    'q_output_file_plan',
-    'SQL_OUTPUT_FILE_PLAN',
-    'q_mmr_diverse_topk',
-    '_sql_mmr_diverse_topk',
-    'q_k_anonymity_audit',
-    'SQL_K_ANONYMITY',
-    '_JL_PLANES',
-    'q_jl_projection_recall',
-    '_sql_jl_projection_recall',
-    'q_holt_trend_forecast',
-    '_sql_holt_trend_forecast',
-    '_COV_METRICS',
-    'q_covariance_matrix',
-    '_sql_covariance_matrix',
-    'q_dup_clusters_star',
-    'q_containment_pairs',
-    'SQL_CONTAINMENT_PAIRS',
-    'q_stream_scd_merge',
-    'SQL_STREAM_SCD_MERGE',
-    'SQL_RECURSIVE_PORTABLE',
-    'q_recursive_front_door',
-    '_SPAN_TOKS_SQL',
-    '_SPAN_OCC_SQL',
-    'q_duplicate_spans',
-    'SQL_DUPLICATE_SPANS',
-    'q_span_removal_plan',
-    'SQL_SPAN_REMOVAL_PLAN',
-    'q_pareto_frontier',
-    'SQL_PARETO_FRONTIER',
-    'q_ks_drift',
-    'SQL_KS_DRIFT',
-    'q_column_mutual_info',
-    'SQL_COLUMN_MUTUAL_INFO',
-    'q_incremental_agg_view',
-    'SQL_INCREMENTAL_AGG_VIEW',
-    'q_snm_blocking',
-    'SQL_SNM_BLOCKING',
-    'q_cusum_changepoint',
-    'SQL_CUSUM_CHANGEPOINT',
-    'q_ht_sampling_error',
-    'SQL_HT_SAMPLING_ERROR',
-    'q_stream_quota_admission',
-    'SQL_STREAM_QUOTA',
-    'q_er_canonical_entities',
-    'SQL_ER_CANONICAL',
-    'q_bfs_hops_coorder',
-    'SQL_BFS_HOPS',
-    'q_psi_drift',
-    'SQL_PSI_DRIFT',
-    'q_chi2_independence',
-    'SQL_CHI2_INDEPENDENCE',
-    'q_multimodal_audio_energy',
-    'SQL_MULTIMODAL_AUDIO',
-    'q_bloom_dedup_audit',
-    'SQL_BLOOM_DEDUP_AUDIT',
-    'q_label_spread_communities',
-    'SQL_LABEL_SPREAD',
-    'q_join_size_estimate',
-    'SQL_JOIN_SIZE_ESTIMATE',
-    'q_grouped_agg_udaf',
-    'SQL_GROUPED_AGG_UDAF',
-    'q_arrow_group_stats',
-    'SQL_ARROW_GROUP_STATS',
-    'q_roc_auc_quality',
-    'SQL_ROC_AUC_QUALITY',
-    'q_bot_burst_users',
-    'SQL_BOT_BURST_USERS',
-    'q_index_compaction',
-    'SQL_INDEX_COMPACTION',
-    'q_fellegi_sunter_scores',
-    'SQL_FELLEGI_SUNTER',
-    'q_cohens_kappa',
-    '_sql_cohens_kappa',
-    'q_calibration_bins',
-    '_sql_calibration_bins',
-    'q_hits_scores',
-    '_sql_hits_scores',
-    'q_kneser_ney_ppl',
-    '_sql_kneser_ney_ppl',
-    'q_dp_count_laplace',
-    '_sql_dp_count_laplace',
-    'q_rate_limit_replay',
-    'q_stream_token_bucket',
-    '_sql_tb',
-    'RL_SQL_TOKEN_BUCKET',
-    'q_kcore_parts',
-    '_sql_kcore_parts',
-    'q_kcenter_coreset',
-    '_sql_kcenter_coreset',
-    'q_avg_precision_quality',
-    'SQL_AVG_PRECISION_QUALITY',
-    'q_sq8_recall',
-    'SQL_SQ8_RECALL',
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

@@ -1,8 +1,5 @@
 """Registry implementation, part 07 — r6 batch-4 additions (nDCG@k and
-Zipf-slope corpus health), chained after the mechanical part01-06 split.
-New parts extend the chain: explicit head imports, ``import *`` from the
-previous part, and a cumulative ``__all__`` so the front door's single
-``import *`` sees everything."""
+Zipf-slope corpus health)."""
 
 from __future__ import annotations
 
@@ -13,9 +10,7 @@ from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.caching import persist_tracked
 from ingestion_scripts_spark.functions import text as X
 from ingestion_scripts_spark.operators import text_analysis as TA
-from ingestion_scripts_spark.registry import part06 as _prev
 from ingestion_scripts_spark.registry.part06 import *  # noqa: F401,F403
-from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 def q_ndcg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,14 +115,6 @@ FROM agg ORDER BY source
 """
 
 
-__all__ = list(_prev.__all__) + [
-    "q_ndcg_quality",
-    "_sql_ndcg_quality",
-    "q_zipf_slope",
-    "_sql_zipf_slope",
-]
-
-
 def q_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy max-coverage selection of 5 documents by vocabulary gain
     (text_analysis.py::max_coverage_select) — the set-cover diversifier:
@@ -208,14 +195,6 @@ FROM per ORDER BY source
 """
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605 — extend the chained list
-    "q_max_coverage",
-    "_sql_max_coverage",
-    "q_source_unique_vocab",
-    "_sql_source_unique_vocab",
-]
-
-
 def q_ppr_coorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from the part seed whitelist (node % 97 == 0
     — the same seed set bfs_hops_coorder measures hop distance from) over
@@ -269,9 +248,6 @@ r0 AS (SELECT node, s, CAST(s * 1000000 AS BIGINT) AS r FROM flagged),
 SELECT node, r AS ppr_u, r / 1000000.0 AS ppr
 FROM {prev} ORDER BY ppr_u DESC, node
 """
-
-
-__all__ = __all__ + ["q_ppr_coorder", "_sql_ppr_coorder"]  # noqa: F405,PLE0605
 
 
 def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -420,9 +396,6 @@ FROM counts ORDER BY stage
 """
 
 
-__all__ = __all__ + ["q_dedup_funnel", "_sql_dedup_funnel"]  # noqa: F405,PLE0605
-
-
 def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of product-quantized ADC search vs the exact kernel
     (similarity.py::pq_recall, m=4 subspaces x 16 centroids = 4-byte
@@ -525,9 +498,6 @@ GROUP BY 1 ORDER BY 1
     )
 
 
-__all__ = __all__ + ["q_pq_recall", "_sql_pq_recall"]  # noqa: F405,PLE0605
-
-
 def q_conformal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source split-conformal quality gate at alpha = 9/10
     (profiling.py::conformal_threshold) over document length as the
@@ -571,9 +541,6 @@ SELECT kd.g AS source, kd.n, kd.k, thr.threshold,
 FROM kd LEFT JOIN thr USING (g) LEFT JOIN cov USING (g)
 ORDER BY source
 """
-
-
-__all__ = __all__ + ["q_conformal_gate", "SQL_CONFORMAL_GATE"]  # noqa: F405,PLE0605
 
 
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,12 +598,6 @@ ORDER BY bin
 """
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_isotonic_calibration",
-    "_sql_isotonic_calibration",
-]
-
-
 def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user Theil-Sen engagement trend over daily value
     (profiling.py::theil_sen_slope) — the robust (29% breakdown)
@@ -688,4 +649,4 @@ ORDER BY user_id
 """
 
 
-__all__ = __all__ + ["q_theil_sen_trend", "SQL_THEIL_SEN"]  # noqa: F405,PLE0605
+__all__ = [n for n in globals() if not n.startswith("__")]

@@ -1,8 +1,6 @@
 """Registry implementation, part 08 — r7 additions: KMV distinct sketch,
 Wasserstein drift, Kendall tau-b, MRR, link prediction, exact ACF,
-l-diversity, and multimodal aHash near-dup. Chained after part07: explicit
-head imports, ``import *`` from the previous part, and a cumulative
-``__all__`` so the front door's single ``import *`` sees everything."""
+l-diversity, and multimodal aHash near-dup."""
 
 from __future__ import annotations
 
@@ -13,13 +11,7 @@ from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.caching import persist_tracked
 from ingestion_scripts_spark.functions import text as X
 from ingestion_scripts_spark.operators import similarity as SIM
-from ingestion_scripts_spark.registry import part07 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part07 import *  # noqa: F401,F403
-from ingestion_scripts_spark.registry.part05 import _coorder_edges
-from ingestion_scripts_spark.registry.part06 import (
-    _SQL_LABEL_SPREAD_CTES,
-    _coorder_label_spread,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -69,11 +61,6 @@ merged AS (
 u AS (SELECT * FROM sk UNION ALL SELECT * FROM merged)
 {est}
 ORDER BY g"""
-
-
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_kmv_distinct", "_sql_kmv_distinct",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -139,9 +126,6 @@ SELECT t.event_type, t.n_a, t.n_b,
 FROM tot t LEFT JOIN gsum USING (event_type)
 ORDER BY event_type
 """
-
-
-__all__ = __all__ + ["q_wasserstein_drift", "SQL_WASSERSTEIN_DRIFT"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -216,9 +200,6 @@ ORDER BY user_id
 """
 
 
-__all__ = __all__ + ["q_kendall_tau_daily", "SQL_KENDALL_TAU"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # Mean reciprocal rank
 # ---------------------------------------------------------------------------
@@ -263,9 +244,6 @@ SELECT grp.g AS source, grp.n, first.first_rank,
 FROM grp LEFT JOIN first USING (g)
 ORDER BY source
 """
-
-
-__all__ = __all__ + ["q_mrr_quality", "SQL_MRR_QUALITY"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -320,9 +298,6 @@ FROM cand c JOIN deg du ON du.u = c.u JOIN deg dw ON dw.u = c.w
 ORDER BY c.aa_micro DESC, c.u, c.w
 LIMIT 100
 """
-
-
-__all__ = __all__ + ["q_link_prediction", "SQL_LINK_PREDICTION"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -391,9 +366,6 @@ ORDER BY lag
 """
 
 
-__all__ = __all__ + ["q_acf_daily", "SQL_ACF_DAILY"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # l-diversity privacy audit
 # ---------------------------------------------------------------------------
@@ -427,9 +399,6 @@ FROM events
 GROUP BY 1, 2
 ORDER BY day, cohort
 """
-
-
-__all__ = __all__ + ["q_l_diversity", "SQL_L_DIVERSITY"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -502,9 +471,6 @@ ORDER BY id_a, id_b
 """
 
 
-__all__ = __all__ + ["q_ahash_image_neardup", "SQL_AHASH_NEARDUP"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # seasonal decomposition of daily revenue
 # ---------------------------------------------------------------------------
@@ -575,9 +541,6 @@ ORDER BY x
 """
 
 
-__all__ = __all__ + ["q_seasonal_revenue", "SQL_SEASONAL_REVENUE"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # community modularity
 # ---------------------------------------------------------------------------
@@ -629,9 +592,6 @@ SELECT m, n_communities, q_num,
          AS modularity
 FROM agg
 """
-
-
-__all__ = __all__ + ["q_community_modularity", "SQL_COMMUNITY_MODULARITY"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -694,9 +654,6 @@ ORDER BY source
 """
 
 
-__all__ = __all__ + ["q_loo_quality_delta", "SQL_LOO_QUALITY"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # Fano-factor burstiness
 # ---------------------------------------------------------------------------
@@ -741,9 +698,6 @@ ORDER BY user_id
 """
 
 
-__all__ = __all__ + ["q_fano_burstiness", "SQL_FANO_BURSTINESS"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # KMV sketch intersection (theta-sketch set algebra)
 # ---------------------------------------------------------------------------
@@ -781,11 +735,6 @@ def _sql_kmv_click_purchase() -> str:
         "event_type", "CAST(user_id AS VARCHAR)", 64,
     )
     return sql_kmv_intersect(f"({a})", f"({b})", 64)
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_kmv_click_purchase_overlap", "_sql_kmv_click_purchase",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -849,9 +798,6 @@ SELECT n, so, brier_num, rel_num,
 FROM agg"""
 
 
-__all__ = __all__ + ["q_brier_score", "_sql_brier_score"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # pinball (quantile) loss
 # ---------------------------------------------------------------------------
@@ -895,9 +841,6 @@ FROM scored s JOIN yhat h USING (g)
 GROUP BY h.g, h.n, h.yhat
 ORDER BY source
 """
-
-
-__all__ = __all__ + ["q_pinball_loss_sources", "SQL_PINBALL_SOURCES"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -944,9 +887,6 @@ ORDER BY query_id, rank
 """
 
 
-__all__ = __all__ + ["q_hard_negatives", "SQL_HARD_NEGATIVES"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # novelty decay across arrival order
 # ---------------------------------------------------------------------------
@@ -989,9 +929,6 @@ SELECT bucket, CAST(count(*) AS BIGINT) AS n,
        CAST((sum(novel) * 1000000) // count(*) AS BIGINT) AS novelty_micro
 FROM tagged GROUP BY bucket ORDER BY bucket
 """
-
-
-__all__ = __all__ + ["q_novelty_decay", "SQL_NOVELTY_DECAY"]  # noqa: F405,PLE0605
 
 
 # ---------------------------------------------------------------------------
@@ -1072,9 +1009,6 @@ FROM agg ORDER BY nation
 """
 
 
-__all__ = __all__ + ["q_gini_concentration", "SQL_GINI"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # negative-sampling table
 # ---------------------------------------------------------------------------
@@ -1135,11 +1069,6 @@ ranked AS (
 SELECT rank, t, f, w_micro, cum_w FROM ranked WHERE rank <= 200
 ORDER BY rank
 """
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_negative_sampling_table", "_sql_negative_sampling",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -1206,11 +1135,6 @@ def _sql_stream_kmv() -> str:
     sk = sql_kmv_sketch("events", "event_type", "CAST(user_id AS VARCHAR)", 64)
     est = sql_kmv_estimate(f"({sk})", 64)
     return f"{est}\nORDER BY g"
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_stream_kmv_distinct", "_sql_stream_kmv",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -1287,9 +1211,6 @@ SELECT CAST(50 AS BIGINT) AS depth,
 FROM terms"""
 
 
-__all__ = __all__ + ["q_rbo_vocab_stability", "_sql_rbo_vocab"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # decile lift / cumulative gains
 # ---------------------------------------------------------------------------
@@ -1353,9 +1274,6 @@ SELECT decile, n_d, pos_d, cum_n, cum_pos,
 FROM cum ORDER BY decile"""
 
 
-__all__ = __all__ + ["q_decile_lift", "_sql_decile_lift"]  # noqa: F405,PLE0605
-
-
 # ---------------------------------------------------------------------------
 # conditional entropy of event transitions
 # ---------------------------------------------------------------------------
@@ -1407,6 +1325,4 @@ ORDER BY prev
 """
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_entropy_rate_transitions", "SQL_ENTROPY_RATE",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

@@ -3,9 +3,7 @@ order statistics + Pareto top-share curve (global_rank consumers #2/#3),
 Mann-Kendall trend test, degree assortativity, functional-dependency
 strength, exact weighted medians, market concentration (HHI/CR4),
 seasonal-naive MASE, largest-remainder budget apportionment, and Chao1
-vocabulary richness. Chained after part08: explicit head imports,
-``import *`` from the previous part, and a cumulative ``__all__`` so the
-front door's single ``import *`` sees everything."""
+vocabulary richness."""
 
 from __future__ import annotations
 
@@ -14,9 +12,7 @@ from pyspark.sql import functions as F
 
 from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.functions import text as X
-from ingestion_scripts_spark.registry import part08 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part08 import *  # noqa: F401,F403
-from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 # ---------------------------------------------------------------------------
@@ -73,11 +69,6 @@ FROM ranked JOIN ranks ON ranked.rn = ranks.r
 ORDER BY q_num, q_den"""
 
 
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_exact_global_quantiles", "SQL_EXACT_GLOBAL_QUANTILES",
-]
-
-
 # ---------------------------------------------------------------------------
 # Mann-Kendall trend test on the daily order-count series
 # ---------------------------------------------------------------------------
@@ -131,11 +122,6 @@ SELECT n_points, s_stat, var18,
 FROM base"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_mann_kendall_daily", "SQL_MANN_KENDALL_DAILY",
-]
-
-
 # ---------------------------------------------------------------------------
 # degree assortativity of the part co-order graph
 # ---------------------------------------------------------------------------
@@ -179,11 +165,6 @@ SELECT m2, sx, sxx, sxy,
 FROM mo"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_degree_assortativity", "SQL_DEGREE_ASSORTATIVITY",
-]
-
-
 # ---------------------------------------------------------------------------
 # functional-dependency strength profile
 # ---------------------------------------------------------------------------
@@ -223,11 +204,6 @@ FROM (
 SQL_FD_STRENGTH = " UNION ALL ".join(
     _sql_fd_pair(det, dep) for det, dep in _FD_PAIRS
 )
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_fd_strength", "SQL_FD_STRENGTH", "_sql_fd_pair",
-]
 
 # ---------------------------------------------------------------------------
 # top-fraction concentration curve (global_rank consumer #3)
@@ -283,11 +259,6 @@ GROUP BY f_num, f_den, k, total_value
 ORDER BY f_num, f_den"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_top_share_curve", "SQL_TOP_SHARE_CURVE",
-]
-
-
 # ---------------------------------------------------------------------------
 # exact weighted median per part
 # ---------------------------------------------------------------------------
@@ -335,11 +306,6 @@ SELECT l_partkey, CAST(max(w_total) AS BIGINT) AS w_total,
        CAST(min(v) AS BIGINT) AS median_v
 FROM scored WHERE 2 * cum >= w_total
 GROUP BY l_partkey ORDER BY l_partkey"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_weighted_median_parts", "SQL_WEIGHTED_MEDIAN_PARTS",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -394,11 +360,6 @@ SELECT mkt AS market,
             AS BIGINT) AS cr_ppm
 FROM ranked GROUP BY mkt ORDER BY market"""
 
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_market_concentration", "SQL_MARKET_CONCENTRATION",
-]
-
 # ---------------------------------------------------------------------------
 # seasonal-naive MASE backtest on daily revenue
 # ---------------------------------------------------------------------------
@@ -451,11 +412,6 @@ SELECT n_points, sum_abs_e1, sum_abs_es,
 FROM agg"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_forecast_mase", "SQL_FORECAST_MASE",
-]
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -500,11 +456,6 @@ SELECT k AS source, cnt, base_alloc,
             AS BIGINT) AS alloc
 FROM ranked, leftover ORDER BY source"""
 
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_sample_apportionment", "SQL_SAMPLE_APPORTIONMENT",
-]
-
 # ---------------------------------------------------------------------------
 # Chao1 / Good-Turing vocabulary richness
 # ---------------------------------------------------------------------------
@@ -547,6 +498,4 @@ SELECT v_obs, n_tokens, f1, f2,
 FROM agg"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_vocab_richness", "_sql_vocab_richness",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

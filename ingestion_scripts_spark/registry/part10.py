@@ -2,10 +2,7 @@
 Gini concentration + trimmed/winsorized robust means (global_rank
 consumers #4/#5), the Poisson bootstrap CI (the distributed-uncertainty
 primitive), a shuffle-interleave quality audit (distributed lag, no
-unpartitioned window), and global graph transitivity. Chained after
-part09: explicit head imports, ``import *`` from the previous part, and
-a cumulative ``__all__`` so the front door's single ``import *`` sees
-everything."""
+unpartitioned window), and global graph transitivity."""
 
 from __future__ import annotations
 
@@ -14,9 +11,7 @@ from pyspark.sql import functions as F
 
 from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.functions import text as X
-from ingestion_scripts_spark.registry import part09 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part09 import *  # noqa: F401,F403
-from ingestion_scripts_spark.registry.part05 import _coorder_edges
 
 
 # ---------------------------------------------------------------------------
@@ -62,11 +57,6 @@ SELECT CAST(count(*) AS BIGINT) AS n,
        CAST(((2 * sum(rn * cents) - (count(*) + 1) * sum(cents)) * 1000000)
             // (count(*) * sum(cents)) AS BIGINT) AS gini_ppm
 FROM ranked"""
-
-
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_gini_order_values", "SQL_GINI_ORDER_VALUES",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -119,11 +109,6 @@ SELECT n, k AS k_trim, lo_cut, hi_cut,
        CAST(((s + k * (lo_cut + hi_cut)) * 1000000) // n AS BIGINT)
          AS winsor_mean_micro
 FROM nk, cuts, body"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_trimmed_price_mean", "SQL_TRIMMED_PRICE_MEAN",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -187,11 +172,6 @@ SELECT n, CAST({b} AS BIGINT) AS b_replicates, mean_micro,
 FROM point, ci"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_bootstrap_order_value_ci", "_sql_bootstrap_order_value_ci",
-]
-
-
 # ---------------------------------------------------------------------------
 # shuffle-interleave quality audit (distributed lag)
 # ---------------------------------------------------------------------------
@@ -231,11 +211,6 @@ SELECT source,
        CAST(sum(CASE WHEN prev = source THEN 1 ELSE 0 END) AS BIGINT)
          AS adj_same
 FROM lagged GROUP BY source ORDER BY source"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_shuffle_mix_audit", "_sql_shuffle_mix_audit",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -280,11 +255,6 @@ SELECT CAST(count(*) AS BIGINT) AS n_nodes,
                  // (sum(d.degree * (d.degree - 1)) // 2) END AS BIGINT)
          AS transitivity_ppm
 FROM deg d LEFT JOIN per_node t USING (node)"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_coorder_transitivity", "SQL_COORDER_TRANSITIVITY",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -339,6 +309,4 @@ SELECT CAST(count(*) AS BIGINT) AS n,
 FROM dev, mad"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_mad_order_values", "SQL_MAD_ORDER_VALUES",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

@@ -3,14 +3,13 @@ longest-shared-span profiling between near-dup candidates (the "how much
 is copied?" number beyond fixed n-grams), registrable-domain URL dedup
 (the crawl-curation first pass), and the incremental two-snapshot
 median/MAD/Gini off a maintained value-count histogram (ivm.py's merge +
-ranking.global_cumsum). Chained after part10 in the established pattern."""
+ranking.global_cumsum)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ingestion_scripts_spark.registry import part10 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part10 import *  # noqa: F401,F403
 
 
@@ -77,11 +76,6 @@ lss AS (SELECT id1, id2, CAST(max(run) + {_LSS_K - 1} AS BIGINT) AS lss_tokens
 SELECT p.id1, p.id2, CAST(coalesce(l.lss_tokens, 0) AS BIGINT) AS lss_tokens
 FROM pairs p LEFT JOIN lss l USING (id1, id2)
 ORDER BY lss_tokens DESC, id1, id2"""
-
-
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_longest_dup_span", "SQL_LONGEST_DUP_SPAN",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -199,11 +193,6 @@ SELECT domain,
 FROM ranked GROUP BY domain ORDER BY domain"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_domain_dedup_stats", "SQL_DOMAIN_DEDUP_STATS",
-]
-
-
 # ---------------------------------------------------------------------------
 # incremental (two-snapshot) exact median / MAD / Gini off the maintained
 # value-count histogram
@@ -279,6 +268,4 @@ SELECT CAST(a.n AS BIGINT) AS n,
 FROM agg a, dagg d"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_incremental_value_stats", "SQL_INCREMENTAL_VALUE_STATS",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

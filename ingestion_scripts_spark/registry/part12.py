@@ -5,14 +5,13 @@ formed/dissolved pair deltas when a crawl snapshot rolls), the WRITE
 side of suffix-span removal (documents emitted with duplicate spans
 excised, conservation-law tested), and quality-classifier calibration
 drift over time buckets (per-bucket ECE + reliability shift vs the
-first bucket). Chained after part11 in the established pattern."""
+first bucket)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ingestion_scripts_spark.registry import part11 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part11 import *  # noqa: F401,F403
 
 
@@ -201,8 +200,4 @@ FROM per_bin p LEFT JOIN baseline b ON p.bin = b.bin
 GROUP BY p.bucket ORDER BY p.bucket"""
 
 
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_snapshot_dedup_delta", "SQL_SNAPSHOT_DEDUP_DELTA",
-    "q_span_removal_apply", "SQL_SPAN_REMOVAL_APPLY",
-    "q_calibration_drift", "SQL_CALIBRATION_DRIFT",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

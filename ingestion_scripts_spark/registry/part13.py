@@ -4,15 +4,13 @@ contract ``snapshot_band_delta`` documented — the band table round-trips
 through parquet and only delta signatures are computed), the continuous-
 crawl STREAMING snapshot roll (``foreachBatch`` batches carrying inserts
 AND retirements, maintaining the band-table + doc-store state across
-triggers), and the band-table skew audit run before a roll. Chained
-after part12 in the established pattern."""
+triggers), and the band-table skew audit run before a roll."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ingestion_scripts_spark.registry import part12 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part12 import *  # noqa: F401,F403
 
 
@@ -370,9 +368,4 @@ SELECT source,
 FROM ranked GROUP BY source ORDER BY source"""
 
 
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_snapshot_band_roll", "SQL_SNAPSHOT_BAND_ROLL",
-    "q_band_skew_audit", "SQL_BAND_SKEW_AUDIT",
-    "q_stream_snapshot_roll", "SQL_STREAM_SNAPSHOT_ROLL",
-    "q_cdc_chunk_dedup", "SQL_CDC_CHUNK_DEDUP",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

@@ -5,8 +5,7 @@ measured the quadratic risk without acting on it) with its exact
 skipped-pair-mass audit, the MAINTAINED chunk-store roll (the CDC
 analog of ``snapshot_band_roll`` — per-roll savings without re-ranking
 the corpus), and the CLAMPED content-defined chunker (min/max cuts as
-code, certified against a DuckDB recursive-CTE walk). Chained after
-part13 in the established pattern."""
+code, certified against a DuckDB recursive-CTE walk)."""
 
 from __future__ import annotations
 
@@ -16,13 +15,7 @@ from pyspark.sql import functions as F
 from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.caching import persist_tracked
 from ingestion_scripts_spark.operators import similarity as SIM
-from ingestion_scripts_spark.registry import part13 as _prev  # noqa: F401
 from ingestion_scripts_spark.registry.part13 import *  # noqa: F401,F403
-from ingestion_scripts_spark.registry.part13 import (  # not in the __all__ chain
-    _CDC_CHUNK,
-    _CDC_H,
-    _CDC_WIN,
-)
 
 
 # ---------------------------------------------------------------------------
@@ -858,14 +851,4 @@ UNION ALL SELECT * FROM aud2
 ORDER BY batch, cell"""
 
 
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_capped_band_roll", "SQL_CAPPED_BAND_ROLL",
-    "q_capped_roll_audit", "SQL_CAPPED_ROLL_AUDIT",
-    "q_chunk_store_roll", "SQL_CHUNK_STORE_ROLL",
-    "q_cdc_clamped_dedup", "SQL_CDC_CLAMPED_DEDUP",
-    "q_hot_bucket_sweep", "SQL_HOT_BUCKET_SWEEP",
-    "q_capped_sweep_recall", "SQL_CAPPED_SWEEP_RECALL",
-    "q_ivf_postings_roll", "_sql_ivf_postings_roll",
-    "q_ivf_roll_serve", "_sql_ivf_roll_serve",
-    "q_stream_ivf_roll", "_sql_stream_ivf_roll", "_ivf_trigger",
-]
+__all__ = [n for n in globals() if not n.startswith("__")]

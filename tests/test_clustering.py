@@ -131,9 +131,10 @@ def test_recenter_plan_has_partial_aggregation(spark):
 def test_semdedup_consistency(spark):
     """Every dup points at a lower-id vector in the SAME cluster with
     cosine >= threshold; kept vectors have no lower-id near-dup."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
 
     out = E.queries()["semdedup"](spark, "/root/testdata/sf0.001").collect()

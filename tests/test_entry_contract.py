@@ -134,3 +134,97 @@ def test_rotation_retires_certification_debt():
         f"window holds already-green queries while {len(never)} queries "
         f"have no driver-green record: {wasted[:10]}"
     )
+
+
+
+# ---------------------------------------------------------------------------
+# registry chain: part01 -> ... -> part14 -> __spark_entry__ (the rule is in
+# ingestion_scripts_spark/registry/__init__.py)
+# ---------------------------------------------------------------------------
+
+# the one export line every part ends with, in ``ast.unparse`` form
+_DERIVED_ALL = "__all__ = [n for n in globals() if not n.startswith('__')]"
+
+
+def _registry_parts():
+    """(module name, parsed source) of every ``registry/partNN.py``, in
+    chain order."""
+    import ast
+    import pathlib
+
+    import ingestion_scripts_spark.registry as reg
+
+    root = pathlib.Path(reg.__file__).parent
+    paths = sorted(root.glob("part[0-9][0-9].py"))
+    assert len(paths) >= 14
+    return [(f"{reg.__name__}.{p.stem}", ast.parse(p.read_text())) for p in paths]
+
+
+def _bound(node):
+    """Names a top-level statement binds, imports aside."""
+    import ast
+
+    if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+
+
+def _defined(tree):
+    """Top-level names a part defines itself (imports and dunders aside)."""
+    return [n for node in tree.body for n in _bound(node) if not n.startswith("__")]
+
+
+def test_every_part_name_reaches_the_front_door():
+    """Each name a part defines is on ``__spark_entry__``, bound to the
+    very object the defining part holds: the chain drops and shadows
+    nothing, underscore helpers included."""
+    import importlib
+
+    missing, rebound = [], []
+    for mod, tree in _registry_parts():
+        part = importlib.import_module(mod)
+        for name in _defined(tree):
+            if not hasattr(E, name):
+                missing.append(f"{mod}.{name}")
+            elif getattr(E, name) is not getattr(part, name):
+                rebound.append(f"{mod}.{name}")
+    assert not missing, missing
+    assert not rebound, rebound
+
+
+def test_no_name_is_defined_in_two_parts():
+    from collections import Counter
+
+    seen = Counter(n for _, tree in _registry_parts() for n in set(_defined(tree)))
+    assert len(seen) > 700
+    assert not [n for n, k in seen.items() if k > 1]
+
+
+def test_registry_parts_follow_one_export_rule():
+    """Ratchet: each part star-imports its predecessor, imports nothing
+    else from ``registry`` (no side import, no ``as _prev`` alias), and
+    ends with the one derived ``__all__`` -- no hand-kept export list."""
+    import ast
+
+    parts = _registry_parts()
+    for i, (mod, tree) in enumerate(parts):
+        pkg = mod.rpartition(".")[0]
+        got = []
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and (n.module or "").startswith(pkg):
+                got.append((n.module, [a.name for a in n.names]))
+            elif isinstance(n, ast.Import):
+                got += [(a.name, None) for a in n.names if a.name.startswith(pkg)]
+        assert got == ([] if i == 0 else [(parts[i - 1][0], ["*"])]), f"{mod}: {got}"
+        stores = [
+            n for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and n.id == "__all__" and isinstance(n.ctx, ast.Store)
+        ]
+        assert len(stores) == 1, f"{mod}: {len(stores)} assignments to __all__"
+        assert ast.unparse(tree.body[-1]) == _DERIVED_ALL, mod

@@ -7,12 +7,15 @@ and hid it.  ``dtype_kind_mismatches`` is the guard — pin that it fires on
 an injected uncast sum(int) and stays silent once the oracle CASTs.
 """
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 from oracle_check import dtype_kind_mismatches  # noqa: E402
 

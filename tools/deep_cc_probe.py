@@ -19,11 +19,13 @@ Usage: python tools/deep_cc_probe.py [--edges N] [--chain L] [--heap 8g]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a copy of the repo runs its own package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -7,10 +7,13 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a copy of the repo runs its own package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as E
 from ingestion_scripts_spark.session import build_session
@@ -212,7 +215,7 @@ def main() -> None:
         out += [f"## {name}", "", note, "", "```", tree, "```", ""]
         if detail:
             out += ["Scan details:", "```", detail, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"PLANS.md: {len(COMMENT)} plans")
 
