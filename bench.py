@@ -24,9 +24,9 @@ cold per arm (A = session defaults, B = the --conf set), then
 $SPARK_GRAFT_BENCH_RUNS warm runs per arm in A,B / B,A order so both arms
 sample the same host drift, releasing caches after every run. It prints
 one JSON line per query (cold and warm-median wall per arm, B/A, build
-seconds and Spark jobs per run, stream triggers, round checkpoints by
-storage level), a geomean B/A line with --conf, and ``DIR/<name>.txt``
-plans with --plans. It writes no BENCH_DETAIL file.
+seconds and Spark jobs per run, stream triggers, round checkpoints), a
+geomean B/A line with --conf, and ``DIR/<name>.txt`` plans with --plans.
+It writes no BENCH_DETAIL file.
 """
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 import __spark_entry__ as E
-from ingestion_scripts_spark.caching import ITER_DECISIONS, release_caches
+from ingestion_scripts_spark import caching
 from ingestion_scripts_spark.session import build_session
 
 _QUERIES = E.queries()
@@ -549,7 +549,7 @@ def _bench(spark: SparkSession, sf_dir: str, cpus: int,
         # run's identical canonicalized sub-plans (the steady-state a user
         # re-running a session query gets), but leaving them live across
         # the ~200-query session is the ADVICE r3 unbounded-cache leak
-        release_caches()
+        caching.release_caches()
         return round(statistics.median(samples), 3)
 
     # probe between query batches (quarters of the headline list): sustained
@@ -566,7 +566,7 @@ def _bench(spark: SparkSession, sf_dir: str, cpus: int,
 
     def timed_once(name: str) -> float:
         dt = round(_run(spark, name, sf_dir)[1], 3)
-        release_caches()
+        caching.release_caches()
         return dt
 
     per_shadow = {n: timed_once(n) for n in SHADOW if n in _QUERIES}
@@ -717,9 +717,7 @@ def profile(spark: SparkSession, names: list[str], sf_dir: str,
     """Profile mode (module docstring): print one JSON record per query as
     it finishes, then with ``confs`` a geomean B/A line; return the
     records. ``checkpoints`` counts the round checkpoints
-    ``caching.iterative_checkpoint`` took over the query's runs, by storage
-    level, from the ``ITER_DECISIONS`` ring (cleared before each run; the
-    ring keeps the last 256)."""
+    ``caching.iterative_checkpoint`` took over the query's runs."""
     arms = {"A": {}, "B": confs} if confs else {"A": {}}
     order = list(arms)
     listener = _Triggers()
@@ -728,15 +726,15 @@ def profile(spark: SparkSession, names: list[str], sf_dir: str,
     try:
         for name in names:
             runs = []
-            ckpts = {"serialized": 0, "deserialized": 0}
+            ckpts = 0
 
             def run(arm: str, cold: bool) -> None:
-                ITER_DECISIONS.clear()
+                nonlocal ckpts
+                before = caching.checkpoints_taken
                 with _conf_arm(spark, arms[arm]):
                     build, wall, jobs = _run(spark, name, sf_dir)
-                for _, ser in ITER_DECISIONS:
-                    ckpts["serialized" if ser else "deserialized"] += 1
-                release_caches()
+                ckpts += caching.checkpoints_taken - before
+                caching.release_caches()
                 runs.append({
                     "arm": arm, "cold": cold, "build_s": round(build, 3),
                     "wall_s": round(wall, 3), "jobs": len(jobs),
@@ -765,7 +763,7 @@ def profile(spark: SparkSession, names: list[str], sf_dir: str,
                 with open(os.path.join(plans, f"{name}.txt"), "w") as fh, \
                         contextlib.redirect_stdout(fh):
                     _QUERIES[name](spark, sf_dir).explain("formatted")
-                release_caches()
+                caching.release_caches()
                 listener.take()
             print(json.dumps(record), flush=True)
             records.append(record)

@@ -6,7 +6,7 @@ consumes more than once — e.g. the token arrays in
 explode, verify-a, verify-b). The operator cannot unpersist before
 returning: the caller has not run the consuming action yet. But leaving
 the cache live forever is an unbounded leak across a long session that
-builds hundreds of query plans (bench.py runs ~200).
+builds hundreds of query plans (bench.py's default run times 293).
 
 The discipline:
 
@@ -33,23 +33,23 @@ round changed nothing.
 
 from __future__ import annotations
 
-import logging
-import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-_log = logging.getLogger(__name__)
+#: The one storage level for everything this module persists or
+#: checkpoints. In PySpark's naming ``MEMORY_AND_DISK`` is the serialized
+#: level.
+LEVEL = StorageLevel.MEMORY_AND_DISK
 
 _LIVE: list[DataFrame] = []
 
 
-def persist_tracked(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Persist ``df`` and register it for later :func:`release_caches`."""
-    df.persist(level)
+def persist_tracked(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at :data:`LEVEL` and register it for later
+    :func:`release_caches`."""
+    df.persist(LEVEL)
     _LIVE.append(df)
     return df
 
@@ -75,85 +75,27 @@ def live_count() -> int:
     return len(_LIVE)
 
 
-#: Plan-stat threshold (bytes) above which round-transient checkpoints
-#: switch to the serialized level. Catalyst's ``sizeInBytes`` estimate
-#: for the frame being checkpointed is compared against this; the
-#: deep-iteration regime that motivated serialization (SCALING.md r11:
-#: 32M-edge star CC, two generations of transiently expanded edges)
-#: estimates in the GiBs (the 32M-edge seed alone is ~1-2 GiB), while
-#: every registry query's round state sits in the KB-MB range. 256 MiB
-#: leaves two orders of magnitude of margin on both sides.
-ITER_SER_THRESHOLD_BYTES = 256 << 20
-
-
-#: bounded ring of storage-level decisions (plan-stat estimate bytes,
-#: serialized?) — ADVICE r12: Catalyst's ``sizeInBytes`` after the joins
-#: that build round state can be off by orders of magnitude, and a
-#: wrong-but-successful estimate is otherwise invisible (an overestimate
-#: silently re-taxes small round state; an underestimate on a genuinely
-#: large frame re-exposes the OOM). Every decision is recorded here
-#: AND debug-logged, so probes/tests can assert the regime a loop actually
-#: ran in instead of inferring it from wall time. ``None`` estimate =
-#: plan-stat unavailable (exception fallback, safe/serialized direction).
-ITER_DECISIONS: list[tuple[int | None, bool]] = []
-_ITER_DECISIONS_MAX = 256
-#: ADVICE r13: the ring is process-global; concurrent queries interleave
-#: entries, so per-loop regime assertions are only meaningful in
-#: single-threaded probes/tests (the current consumers). The lock keeps
-#: append+trim ATOMIC under concurrency (no lost updates / races on the
-#: trim window) — it does not, and cannot, un-interleave entries;
-#: a multi-threaded harness that wants per-query attribution should
-#: scope its own ring around the loop it drives.
-_ITER_DECISIONS_LOCK = threading.Lock()
-
-
-def _record_iter_decision(est: int | None, ser: bool) -> None:
-    with _ITER_DECISIONS_LOCK:
-        ITER_DECISIONS.append((est, ser))
-        if len(ITER_DECISIONS) > _ITER_DECISIONS_MAX:
-            del ITER_DECISIONS[: -_ITER_DECISIONS_MAX]
-    _log.debug(
-        "iterative_checkpoint: plan-stat est=%s bytes (threshold %d) "
-        "-> %s",
-        est,
-        ITER_SER_THRESHOLD_BYTES,
-        "MEMORY_AND_DISK (serialized)" if ser else "MEMORY_AND_DISK_DESER",
-    )
+#: Round checkpoints taken by :func:`iterative_checkpoint` in this process;
+#: read it before and after a run to count that run's rounds (exact while
+#: one thread checkpoints at a time, as in bench.py's profile mode).
+checkpoints_taken = 0
 
 
 def iterative_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` for ROUND-TRANSIENT state in iterative loops
     (star-CC rounds, k-core survivor sets, BFS frontiers, HITS scores),
-    at a SIZE-CONDITIONAL storage level: deserialized (the default
-    level) for small round state, serialized MEMORY_AND_DISK above
-    :data:`ITER_SER_THRESHOLD_BYTES` (Catalyst plan-stat estimate — no
-    job is run to decide).
+    stored serialized at :data:`LEVEL`.
 
-    Why conditional (r11→r12 adjudication, SCALING.md): the serialized
-    level stores on-wire bytes (~3-6x smaller than row objects), which
-    turned the 32M-edge deep-chain star-CC OOM at 16 GiB into a finish —
-    but the r11 at-HEAD bench rerun priced unconditional serialization
-    at +35-60% wall on the small iterative heavies (pq_recall,
-    dedup_funnel, ppr_coorder), far above the commit's ~9% small-run
-    claim, because each round pays a serialize+deserialize pass the
-    sub-GiB regime gets nothing for. The quiet-host median-of-5 table
-    in SCALING.md r12 carries the measured A/B; the threshold keeps the
-    deep-regime OOM fix while returning registry-scale loops to the
-    deserialized fast path. Hot multi-consumer checkpoints
-    (global_rank's sorted layout) stay deserialized unconditionally."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        est = None  # unknown → safe direction (serialized)
-    ser = est is None or est > ITER_SER_THRESHOLD_BYTES
-    _record_iter_decision(est, ser)
-    # PySpark naming: MEMORY_AND_DISK is the SERIALIZED level (the
-    # Scala deserialized default is MEMORY_AND_DISK_DESER)
-    level = (
-        StorageLevel.MEMORY_AND_DISK if ser
-        else StorageLevel.MEMORY_AND_DISK_DESER
-    )
-    return df.localCheckpoint(eager=True, storageLevel=level)
+    Serialized storage keeps on-wire bytes (~3-6x smaller than row
+    objects): it turned the 32M-edge deep-chain star-CC OOM at 16 GiB
+    into a finish (SCALING.md r11/r12). Catalyst's plan-size estimate
+    cannot tell that regime from registry-scale round state of a few KB
+    (it multiplies child estimates through the joins that build round
+    state and reads 10^12 to 10^187 bytes for both), so every round is
+    stored the same way (SCALING.md r16)."""
+    global checkpoints_taken
+    checkpoints_taken += 1
+    return df.localCheckpoint(eager=True, storageLevel=LEVEL)
 
 
 def release_local_checkpoint(df: DataFrame) -> bool:

@@ -18,6 +18,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory that holds this package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "ingestion-scripts-spark",
@@ -51,6 +54,11 @@ def build_session(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers import from their own path, not the driver's
+        # sys.path; UDFs that reference this package by name need it there
+        # whatever directory the process started in. PySpark merges this
+        # into each worker's PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.session.timeZone", "UTC")
         # testdata events.ts is parquet TIMESTAMP(NANOS), which the
         # vectorized reader rejects; read as raw nanos longs session-wide

@@ -29,7 +29,7 @@ def test_profile_records_jobs_triggers_and_restores_conf(spark, monkeypatch):
         assert [r["arm"] for r in rec["runs"] if not r["cold"]] == ["A", "B", "B", "A"]
         assert set(rec["cold_s"]) == set(rec["warm_median_s"]) == {"A", "B"}
         assert rec["b_over_a"] > 0
-    assert batch["checkpoints"] == {"serialized": 0, "deserialized": 0}
+    assert batch["checkpoints"] == 0
     for run in batch["runs"]:
         assert run["jobs"] >= 1
         assert run["build_s"] <= run["wall_s"]

@@ -18,6 +18,11 @@ def _x(df) -> int:
     return df.first()["x"]
 
 
+def _level(df):
+    """Storage level of a checkpointed frame's blocks."""
+    return df._jdf.queryExecution().analyzed().rdd().getStorageLevel()
+
+
 def test_fixpoint_budget_law(spark):
     init = spark.createDataFrame([(0,)], "x bigint")
 
@@ -56,9 +61,6 @@ def test_fixpoint_budget_law(spark):
 def test_fixpoint_releases_generations_and_stops_on_identity(spark):
     from ingestion_scripts_spark.caching import iterative_checkpoint
 
-    def level(df):
-        return df._jdf.queryExecution().analyzed().rdd().getStorageLevel()
-
     seen = []
 
     def inc_until_2(state, _r):
@@ -73,7 +75,34 @@ def test_fixpoint_releases_generations_and_stops_on_identity(spark):
     assert n == 2 and _x(out) == 2 and seen[-1] is out
     # generation 0 (init) and 1 were released once their successor
     # materialized; the returned state keeps its blocks
-    assert [level(g).useMemory() for g in seen] == [False, False, True]
+    assert [_level(g).useMemory() for g in seen] == [False, False, True]
+
+
+def test_every_checkpoint_is_stored_serialized_and_counted(spark):
+    """One storage level, whatever the frame's size: a 100-row checkpoint
+    and every round of a loop are kept serialized in memory and on disk,
+    and each checkpoint moves the module's counter by one."""
+    from ingestion_scripts_spark import caching
+
+    def stored(df):
+        lvl = _level(df)
+        return lvl.useMemory(), lvl.useDisk(), lvl.deserialized()
+
+    tiny = caching.iterative_checkpoint(spark.range(100))
+    assert stored(tiny) == (True, True, False)
+
+    levels = []
+
+    def inc(state, r):
+        if r > 1:
+            levels.append(stored(state))  # round r-1, not yet released
+        return state.select((F.col("id") + 1).alias("id"))
+
+    before = caching.checkpoints_taken
+    out, n = fixpoint(inc, tiny, rounds=3, name="levels")
+    levels.append(stored(out))
+    assert n == 3 and caching.checkpoints_taken == before + 3
+    assert levels == [(True, True, False)] * 3
 
 
 #: the iterative kernels and the module each lives in

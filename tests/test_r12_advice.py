@@ -11,9 +11,6 @@
 3. low — ``shared_span_pairs`` computes the rare-span posting list once
    (persist_tracked), not per join branch; results unchanged.
 4. (tools/deep_cc_probe.py docstring fix — no runtime surface.)
-
-Plus the r12 `iterative_checkpoint` size-conditional level (VERDICT r11
-item 1): deserialized below ITER_SER_THRESHOLD_BYTES, serialized above.
 """
 
 from __future__ import annotations
@@ -22,11 +19,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from ingestion_scripts_spark import caching
-from ingestion_scripts_spark.caching import (
-    ITER_SER_THRESHOLD_BYTES,
-    iterative_checkpoint,
-    release_caches,
-)
+from ingestion_scripts_spark.caching import release_caches
 from ingestion_scripts_spark.operators.domains import (
     canonicalize_url,
     domain_dedup,
@@ -116,33 +109,3 @@ def test_shared_span_pairs_single_posting_frame(spark):
     assert caching.live_count() == live_before + 1  # ONE tracked posting
     assert {(r.id1, r.id2) for r in out.collect()} == {(1, 2)}
     release_caches()
-
-
-# --------------------------------------------------------------------------
-# r12: size-conditional iterative_checkpoint level
-# --------------------------------------------------------------------------
-
-def _ckpt_level(df):
-    """Storage level of a localCheckpoint-ed frame's backing RDD."""
-    plan = df._jdf.queryExecution().analyzed()
-    assert plan.getClass().getSimpleName() == "LogicalRDD"
-    return plan.rdd().getStorageLevel()
-
-
-def test_iterative_checkpoint_small_stays_deserialized(spark):
-    df = spark.range(100).select(F.col("id").alias("a"))
-    lvl = _ckpt_level(iterative_checkpoint(df))
-    assert lvl.deserialized()  # sub-threshold → fast deserialized path
-
-
-def test_iterative_checkpoint_big_estimate_serializes(spark, monkeypatch):
-    monkeypatch.setattr(caching, "ITER_SER_THRESHOLD_BYTES", 0)
-    df = spark.range(100).select(F.col("id").alias("a"))
-    lvl = _ckpt_level(iterative_checkpoint(df))
-    assert not lvl.deserialized()  # above threshold → serialized bytes
-
-
-def test_threshold_is_sane():
-    # contract: registry-scale round state (~MBs) far below, the mapped
-    # 32M-edge deep regime (~tens of GiB estimated) far above
-    assert 16 << 20 < ITER_SER_THRESHOLD_BYTES < 16 << 30

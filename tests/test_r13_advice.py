@@ -1,17 +1,13 @@
-"""Regression pins for the four r12 ADVICE items (all shipped r13):
+"""Regression pins for three r12 ADVICE items (shipped r13):
 
-1. caching.py — ``iterative_checkpoint`` level decisions (plan-stat
-   estimate, chosen level) are recorded in ``caching.ITER_DECISIONS`` and
-   debug-logged, so regime misclassification is observable instead of
-   silent.
-2. profiling.calibration_drift — the thrice-consumed (bucket, bin)
+1. profiling.calibration_drift — the thrice-consumed (bucket, bin)
    aggregate is persist_tracked, guaranteeing one compute of the corpus
    scan instead of relying on ReuseExchange.
-3. spans.span_removal_apply — the text rebuild is a gap-walking
+2. spans.span_removal_apply — the text rebuild is a gap-walking
    ``aggregate`` over the sorted coverage array (O(n_tokens+n_removed)),
    pinned here against hand-computed excisions including the full-doc and
    boundary cases the old per-token membership filter also handled.
-4. dedup.snapshot_band_delta — the insert/base and insert/delete
+3. dedup.snapshot_band_delta — the insert/base and insert/delete
    disjointness contract is eagerly enforced (ValueError), not silently
    mis-reported as 'formed' pairs.
 """
@@ -22,35 +18,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from ingestion_scripts_spark import caching
-from ingestion_scripts_spark.caching import iterative_checkpoint
 from ingestion_scripts_spark.operators.dedup import snapshot_band_delta
 from ingestion_scripts_spark.operators.profiling import calibration_drift
 from ingestion_scripts_spark.operators.spans import span_removal_apply
 
 
 # --------------------------------------------------------------------------
-# 1. checkpoint level decisions are observable
-# --------------------------------------------------------------------------
-
-def test_iter_decisions_recorded(spark):
-    caching.ITER_DECISIONS.clear()
-    df = spark.range(50).select(F.col("id").alias("a"))
-    iterative_checkpoint(df)
-    assert len(caching.ITER_DECISIONS) == 1
-    est, ser = caching.ITER_DECISIONS[0]
-    assert isinstance(est, int) and est > 0
-    assert ser is (est > caching.ITER_SER_THRESHOLD_BYTES)
-
-
-def test_iter_decisions_ring_is_bounded(spark):
-    caching.ITER_DECISIONS.clear()
-    caching.ITER_DECISIONS.extend([(1, False)] * caching._ITER_DECISIONS_MAX)
-    iterative_checkpoint(spark.range(10))
-    assert len(caching.ITER_DECISIONS) == caching._ITER_DECISIONS_MAX
-
-
-# --------------------------------------------------------------------------
-# 2. calibration_drift persists its thrice-consumed aggregate
+# 1. calibration_drift persists its thrice-consumed aggregate
 # --------------------------------------------------------------------------
 
 def test_calibration_drift_persists_per_bin(spark):
@@ -71,7 +45,7 @@ def test_calibration_drift_persists_per_bin(spark):
 
 
 # --------------------------------------------------------------------------
-# 3. gap-walk rebuild equals hand-computed excision
+# 2. gap-walk rebuild equals hand-computed excision
 # --------------------------------------------------------------------------
 
 def test_span_removal_apply_gap_walk_hand_cases(spark):
@@ -107,7 +81,7 @@ def test_span_removal_apply_adjacent_and_tail_coverage(spark):
 
 
 # --------------------------------------------------------------------------
-# 4. snapshot delta contract guard
+# 3. snapshot delta contract guard
 # --------------------------------------------------------------------------
 
 def _delta_frames(spark, insert_id):

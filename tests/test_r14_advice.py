@@ -13,8 +13,6 @@
    the same paths, leaving state AND sink byte-equal (previously a
    non-idempotent append that double-counted delta rows and desynced the
    arrival counter).
-3. ``caching._record_iter_decision`` append+trim is atomic under
-   concurrent callers (lock), and the ring keeps its bound.
 """
 
 from __future__ import annotations
@@ -105,32 +103,3 @@ def test_band_table_probe_gap_is_as_documented(spark):
             bb, texts, colliding, deletes, threshold=0.5,
             base_ids=base.select("doc_id"),
         )
-
-
-def test_iter_decision_ring_is_atomic_and_bounded():
-    import threading
-
-    from ingestion_scripts_spark import caching as C
-
-    before = list(C.ITER_DECISIONS)
-    try:
-        C.ITER_DECISIONS.clear()
-        n_threads, per_thread = 8, 200
-
-        def worker(tid):
-            for i in range(per_thread):
-                C._record_iter_decision(tid * 1000 + i, bool(i % 2))
-
-        threads = [
-            threading.Thread(target=worker, args=(t,)) for t in range(n_threads)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        # bound holds exactly under concurrency (no lost trims / raw races)
-        assert len(C.ITER_DECISIONS) == C._ITER_DECISIONS_MAX
-        assert all(isinstance(e, tuple) and len(e) == 2 for e in C.ITER_DECISIONS)
-    finally:
-        C.ITER_DECISIONS.clear()
-        C.ITER_DECISIONS.extend(before)
